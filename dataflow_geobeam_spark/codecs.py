@@ -98,6 +98,8 @@ def decode_wav(buf: bytes) -> tuple[np.ndarray, int]:
             fmt_tag, n_ch, sr_hz, _, _, bits = struct.unpack_from("<HHIIHH", body, 0)
             if fmt_tag != 1 or n_ch != 1 or bits != 16:
                 raise ValueError(f"unsupported wav format tag={fmt_tag} ch={n_ch} bits={bits}")
+            if sr_hz == 0:
+                raise ValueError("wav: zero sample rate")
         elif cid == b"data":
             if len(body) < size:
                 raise ValueError("truncated data chunk")
@@ -129,8 +131,13 @@ def _decode_fake(buf: bytes, codec: str) -> tuple[np.ndarray, int]:
     magic = _FAKE_MAGIC[codec]
     if len(buf) < len(magic) + 12 or buf[: len(magic)] != magic:
         raise ValueError(f"not a {codec} stand-in stream")
-    sr_hz, n = struct.unpack_from("<IQ", buf, len(magic))
-    raw = zlib.decompress(buf[len(magic) + 12 :])
+    try:
+        sr_hz, n = struct.unpack_from("<IQ", buf, len(magic))
+        raw = zlib.decompress(buf[len(magic) + 12 :])
+    except (struct.error, zlib.error) as exc:
+        raise ValueError(f"corrupt {codec} stand-in stream") from exc
+    if sr_hz == 0:
+        raise ValueError(f"{codec} stand-in: zero sample rate")
     samples = np.frombuffer(raw, dtype="<i2")
     if samples.shape[0] != n:
         raise ValueError("sample count mismatch in stand-in container")
@@ -294,6 +301,27 @@ def decode_au(buf: bytes) -> tuple[np.ndarray, int]:
     return _int16_to_pcm(samples.astype(np.int16)), sr
 
 
+def sniff(buf: bytes) -> str:
+    """Container name from the payload's magic bytes: ``wav``, ``flac``,
+    ``aiff``, ``au`` or a stand-in codec. Unknown magic or a null payload
+    raises ValueError."""
+    if buf is None:
+        raise ValueError("null payload")
+    b = bytes(buf[:12])
+    if b[:4] == b"RIFF":
+        return "wav"
+    if b[:4] == b"fLaC":
+        return "flac"
+    if b[:4] == b"FORM" and b[8:12] == b"AIFF":
+        return "aiff"
+    if b[:4] == b".snd":
+        return "au"
+    for codec, magic in _FAKE_MAGIC.items():
+        if b[: len(magic)] == magic:
+            return codec
+    raise ValueError(f"unknown audio container (magic {b[:4]!r})")
+
+
 def decode_sniffed(buf: bytes) -> tuple[np.ndarray, int, str]:
     """Label-free decode: sniff the container from magic bytes and decode
     -> (float32 mono PCM, sr, container). Crawled audio carries no codec
@@ -301,26 +329,12 @@ def decode_sniffed(buf: bytes) -> tuple[np.ndarray, int, str]:
     container the engine decodes (RIFF/WAVE, FLAC, AIFF, AU) plus the
     deterministic stand-ins; unknown magic raises ValueError (F1
     semantics upstream)."""
+    container = sniff(buf)
     b = bytes(buf)
-    if b[:4] == b"RIFF":
-        pcm, sr = decode_wav(b)
-        return pcm, sr, "wav"
-    if b[:4] == b"fLaC":
-        pcm, sr = decode(b, "flac")
-        return pcm, sr, "flac"
-    if b[:4] == b"FORM" and b[8:12] == b"AIFF":
+    if container == "aiff":
         pcm, sr = decode_aiff(b)
-        return pcm, sr, "aiff"
-    if b[:4] == b".snd":
+    elif container == "au":
         pcm, sr = decode_au(b)
-        return pcm, sr, "au"
-    for codec, magic in _FAKE_MAGIC.items():
-        if b[: len(magic)] == magic:
-            try:
-                pcm, sr = _decode_fake(b, codec)
-            except ValueError:
-                raise
-            except Exception as exc:  # noqa: BLE001 - zlib/struct on truncation
-                raise ValueError(f"corrupt {codec} stand-in stream") from exc
-            return pcm, sr, codec
-    raise ValueError(f"unknown audio container (magic {b[:4]!r})")
+    else:
+        pcm, sr = decode(b, container)
+    return pcm, sr, container

@@ -1,7 +1,7 @@
 """Vectorized column functions: decode, validity, audio features, text."""
 
 from dataflow_geobeam_spark.functions.decode import (  # noqa: F401
-    decode_metrics_struct,
+    clip_map,
     with_decoded_metrics,
     with_decoded_pcm,
 )

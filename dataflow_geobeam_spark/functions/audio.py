@@ -1,4 +1,4 @@
-"""Audio feature operators over decoded PCM columns — pure Catalyst.
+"""Audio feature operators: Catalyst column expressions and clip kernels.
 
 The clip -> per-frame explode is the graft analog of the reference's
 ``DoBlockToPixelExterior`` flat-map (one raster block -> width*height pixel
@@ -6,15 +6,32 @@ rows, ``/root/reference/geobeam/fn.py:224-247``) and follows the same
 two-level granularity design: coarse I/O unit (clip) -> exploded logical
 rows (frames), SURVEY.md §3.2.
 
-Everything here is higher-order array expressions (transform/slice/
-aggregate) — JVM-side, no Python, no extra shuffle: the explode multiplies
-rows but stays within the same stage until the next aggregate.
+The frame/RMS/ZCR/silence operators are higher-order array expressions
+(transform/slice/aggregate) — JVM-side, no Python, no extra shuffle: the
+explode multiplies rows but stays within the same stage until the next
+aggregate. Everything Catalyst cannot express (FFT, resampling, log-mel,
+pitch, augmentation, re-encode) is a numpy ``*_np`` kernel run by
+``functions.decode.clip_map``, which decodes each clip once and applies the
+one failure rule: a clip that fails to decode becomes a null row or no row
+(as each ``with_*`` documents); a kernel error fails the task.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+)
+
+from dataflow_geobeam_spark import codecs
+from dataflow_geobeam_spark.functions.decode import clip_map
 
 
 def frame_starts(pcm: Column, frame: Column, hop: Column) -> Column:
@@ -146,51 +163,19 @@ def with_spectral_metrics(
     kernel is numpy rfft, Arrow in/out, zero per-row Python objects beyond
     the decode registry call.
     """
-    from collections.abc import Iterator
-
-    import pyarrow as pa
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    from dataflow_geobeam_spark.functions.decode import _binary_views
-
-    keep = [f for f in df.schema.fields if f.name != bytes_col]
-    spectral_fields = [
-        StructField("spectral_centroid_hz", DoubleType()),
-        StructField("spectral_bandwidth_hz", DoubleType()),
-        StructField("spectral_rolloff_hz", DoubleType()),
-    ]
-    out_schema = StructType(keep + spectral_fields)
-    keep_names = [f.name for f in keep]
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from dataflow_geobeam_spark import codecs
-
-        for batch in batches:
-            names = batch.schema.names
-            bufs = _binary_views(batch.column(names.index(bytes_col)))
-            codec_vals = batch.column(names.index(codec_col)).to_pylist()
-            sr_vals = batch.column(names.index(sr_col)).to_pylist()
-            cent, bw, roll = [], [], []
-            for buf, c, sr in zip(bufs, codec_vals, sr_vals):
-                try:
-                    pcm, _sr = codecs.decode(buf, c)
-                    f0, f1, f2 = spectral_features_np(pcm, sr or _sr)
-                    cent.append(f0), bw.append(f1), roll.append(f2)
-                except Exception:  # noqa: BLE001 - decode failure => nulls
-                    cent.append(None), bw.append(None), roll.append(None)
-            arrays = [batch.column(names.index(n)) for n in keep_names]
-            arrays += [
-                pa.array(cent, type=pa.float64()),
-                pa.array(bw, type=pa.float64()),
-                pa.array(roll, type=pa.float64()),
-            ]
-            yield pa.RecordBatch.from_arrays(
-                arrays,
-                names=keep_names
-                + ["spectral_centroid_hz", "spectral_bandwidth_hz", "spectral_rolloff_hz"],
-            )
-
-    return df.mapInArrow(fn, out_schema)
+    return clip_map(
+        df,
+        lambda pcm, sr, row: [spectral_features_np(pcm, sr)],
+        [
+            StructField("spectral_centroid_hz", DoubleType()),
+            StructField("spectral_bandwidth_hz", DoubleType()),
+            StructField("spectral_rolloff_hz", DoubleType()),
+        ],
+        on_error=(None, None, None),
+        bytes_col=bytes_col,
+        codec_col=codec_col,
+        sr_col=sr_col,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -256,50 +241,20 @@ def with_fingerprints(
     payload column in the same pass (shuffle-weight hygiene, same
     contract as with_spectral_metrics). Decode failure or a clip too
     short to frame => NULL fp (F1/make_valid semantics)."""
-    from collections.abc import Iterator
 
-    import pyarrow as pa
-    from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
+    def kernel(pcm, sr, row):
+        toks = fingerprint_np(pcm, sr)
+        return [(toks.tolist(), toks.size) if toks.size else (None, None)]
 
-    from dataflow_geobeam_spark.functions.decode import _binary_views
-
-    keep = [f for f in df.schema.fields if f.name != bytes_col]
-    out_schema = StructType(
-        keep
-        + [
-            StructField("fp", ArrayType(IntegerType())),
-            StructField("n_tokens", IntegerType()),
-        ]
+    return clip_map(
+        df,
+        kernel,
+        [StructField("fp", ArrayType(IntegerType())), StructField("n_tokens", IntegerType())],
+        on_error=(None, None),
+        bytes_col=bytes_col,
+        codec_col=codec_col,
+        sr_col=sr_col,
     )
-    keep_names = [f.name for f in keep]
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from dataflow_geobeam_spark import codecs
-
-        for batch in batches:
-            names = batch.schema.names
-            bufs = _binary_views(batch.column(names.index(bytes_col)))
-            codec_vals = batch.column(names.index(codec_col)).to_pylist()
-            sr_vals = batch.column(names.index(sr_col)).to_pylist()
-            fps, n_toks = [], []
-            for buf, c, sr in zip(bufs, codec_vals, sr_vals):
-                try:
-                    pcm, _sr = codecs.decode(buf, c)
-                    toks = fingerprint_np(pcm, sr or _sr)
-                    if toks.size == 0:
-                        fps.append(None), n_toks.append(None)
-                    else:
-                        fps.append(toks.tolist()), n_toks.append(toks.size)
-                except Exception:  # noqa: BLE001 - decode failure => nulls
-                    fps.append(None), n_toks.append(None)
-            arrays = [batch.column(names.index(n)) for n in keep_names]
-            arrays += [
-                pa.array(fps, type=pa.list_(pa.int32())),
-                pa.array(n_toks, type=pa.int32()),
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, names=keep_names + ["fp", "n_tokens"])
-
-    return df.mapInArrow(fn, out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -363,65 +318,29 @@ def with_resampled_pcm16(
     This is the sr-normalization stage an ASR training pipeline runs
     before feature extraction — heterogeneous crawl audio in, uniform
     sample rate out."""
-    import hashlib
-    from collections.abc import Iterator
 
-    import pyarrow as pa
-    from pyspark.sql.types import (
-        BinaryType,
-        IntegerType,
-        StringType,
-        StructField,
-        StructType,
+    def kernel(pcm, sr, row):
+        raw = _pcm16_bytes(resample_linear_np(pcm, sr, target_sr))
+        return [(raw, len(raw) // 2)]
+
+    return clip_map(
+        df,
+        kernel,
+        [StructField("pcm16", BinaryType()), StructField("n_samples", IntegerType())],
+        on_error=(None, None),
+        digest="pcm16_md5" if digest else None,
+        bytes_col=bytes_col,
+        codec_col=codec_col,
+        sr_col=sr_col,
     )
 
-    from dataflow_geobeam_spark.functions.decode import _binary_views
 
-    keep = [f for f in df.schema.fields if f.name != bytes_col]
-    out_field = (
-        StructField("pcm16_md5", StringType())
-        if digest
-        else StructField("pcm16", BinaryType())
-    )
-    out_schema = StructType(
-        keep
-        + [
-            out_field,
-            StructField("n_samples", IntegerType()),
-        ]
-    )
-    keep_names = [f.name for f in keep]
-    out_names = [f.name for f in out_schema.fields]
+def _pcm16_bytes(pcm) -> bytes:
+    """Little-endian int16 bytes of float PCM: clip to [-1, 1], *32767,
+    round half to even."""
+    import numpy as np
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import numpy as np
-
-        from dataflow_geobeam_spark import codecs
-
-        for batch in batches:
-            names = batch.schema.names
-            bufs = _binary_views(batch.column(names.index(bytes_col)))
-            codec_vals = batch.column(names.index(codec_col)).to_pylist()
-            sr_vals = batch.column(names.index(sr_col)).to_pylist()
-            outs, ns = [], []
-            for buf, c, sr in zip(bufs, codec_vals, sr_vals):
-                try:
-                    pcm, _sr = codecs.decode(buf, c)
-                    y = resample_linear_np(pcm, sr or _sr, target_sr)
-                    q = np.round(np.clip(y, -1.0, 1.0) * 32767.0).astype("<i2")
-                    raw = q.tobytes()
-                    outs.append(hashlib.md5(raw).hexdigest() if digest else raw)
-                    ns.append(q.size)
-                except Exception:  # noqa: BLE001 - decode failure => nulls
-                    outs.append(None), ns.append(None)
-            arrays = [batch.column(names.index(n)) for n in keep_names]
-            arrays += [
-                pa.array(outs, type=pa.string() if digest else pa.binary()),
-                pa.array(ns, type=pa.int32()),
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, names=out_names)
-
-    return df.mapInArrow(fn, out_schema)
+    return np.round(np.clip(pcm, -1.0, 1.0) * 32767.0).astype("<i2").tobytes()
 
 
 # ---------------------------------------------------------------------------
@@ -690,134 +609,62 @@ def with_speech_segments(
     SURVEY.md F2). ``digest=True`` emits ``n_bytes`` + ``seg_md5``
     (Catalyst-identical length/md5 of the wav chunk) instead of the
     chunk itself — see with_augmented_noise."""
-    import hashlib
-    from collections.abc import Iterator
 
-    import pyarrow as pa
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
+    def kernel(pcm, sr, row):
+        import numpy as np
 
-    from dataflow_geobeam_spark.functions.decode import _binary_views
+        rms = frame_rms_np(pcm, sr, frame_ms, hop_ms)
+        if rms is None:
+            return []
+        rms = np.floor(rms * 1e6 + 0.5) / 1e6  # gate-identical doubles
+        frame = max(1, int(sr * frame_ms / 1000))
+        hop = max(1, int(sr * hop_ms / 1000))
+        out = []
+        for k, (a, b) in enumerate(segment_spans_np(rms, frame_ms, hop_ms)):
+            wav = codecs.encode_wav(pcm[a * hop : b * hop + frame], sr)
+            head = (k + 1, a * hop_ms, b * hop_ms + frame_ms)
+            out.append(head + ((len(wav), wav) if digest else (wav,)))
+        return out
 
-    tail_fields = (
+    return clip_map(
+        df,
+        kernel,
         [
-            StructField("n_bytes", LongType(), False),
-            StructField("seg_md5", StringType(), False),
-        ]
-        if digest
-        else [StructField("seg_bytes", BinaryType(), False)]
-    )
-    out_schema = StructType(
-        [
-            StructField(id_col, StringType(), False),
             StructField("seg_idx", LongType(), False),
             StructField("start_ms", LongType(), False),
             StructField("end_ms", LongType(), False),
         ]
-        + tail_fields
+        + ([StructField("n_bytes", LongType(), False)] if digest else [])
+        + [StructField("seg_bytes", BinaryType(), False)],
+        passthrough=[StructField(id_col, StringType(), False)],
+        digest="seg_md5" if digest else None,
+        bytes_col=bytes_col,
+        codec_col=codec_col,
+        sr_col=sr_col,
     )
-    out_names = [f.name for f in out_schema.fields]
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+
+def _with_clip_vector(df, vec, out_col: str, bytes_col: str, codec_col: str, sr_col: str):
+    """Shared decode -> per-clip float-vector pass: appends ``out_col``
+    (array<double>, each element rounded to 6 like Spark's round) and
+    drops the payload column. Decode failure or a sub-frame clip => NULL.
+    ``vec(pcm, sr) -> 1-D float64 array | None``."""
+
+    def kernel(pcm, sr, row):
         import numpy as np
 
-        from dataflow_geobeam_spark import codecs
+        v = vec(pcm, sr)
+        return [(None if v is None else (np.floor(v * 1e6 + 0.5) / 1e6).tolist(),)]
 
-        for batch in batches:
-            names = batch.schema.names
-            bufs = _binary_views(batch.column(names.index(bytes_col)))
-            ids = batch.column(names.index(id_col)).to_pylist()
-            codec_vals = batch.column(names.index(codec_col)).to_pylist()
-            sr_vals = batch.column(names.index(sr_col)).to_pylist()
-            out_id, out_seg, out_a, out_b, out_bytes = [], [], [], [], []
-            for cid, buf, c, sr in zip(ids, bufs, codec_vals, sr_vals):
-                try:
-                    pcm, _sr = codecs.decode(buf, c)
-                except Exception:  # noqa: BLE001 - decode failure => no rows
-                    continue
-                sr = sr or _sr
-                rms = frame_rms_np(pcm, sr, frame_ms, hop_ms)
-                if rms is None:
-                    continue
-                rms = np.floor(rms * 1e6 + 0.5) / 1e6  # gate-identical doubles
-                frame = max(1, int(sr * frame_ms / 1000))
-                hop = max(1, int(sr * hop_ms / 1000))
-                for k, (a, b) in enumerate(segment_spans_np(rms, frame_ms, hop_ms)):
-                    span = pcm[a * hop : b * hop + frame]
-                    out_id.append(cid)
-                    out_seg.append(k + 1)
-                    out_a.append(a * hop_ms)
-                    out_b.append(b * hop_ms + frame_ms)
-                    out_bytes.append(codecs.encode_wav(span, sr))
-            arrays = [
-                pa.array(out_id, type=pa.string()),
-                pa.array(out_seg, type=pa.int64()),
-                pa.array(out_a, type=pa.int64()),
-                pa.array(out_b, type=pa.int64()),
-            ]
-            if digest:
-                arrays.append(pa.array([len(w) for w in out_bytes], type=pa.int64()))
-                arrays.append(
-                    pa.array(
-                        [hashlib.md5(w).hexdigest() for w in out_bytes],
-                        type=pa.string(),
-                    )
-                )
-            else:
-                arrays.append(pa.array(out_bytes, type=pa.binary()))
-            yield pa.RecordBatch.from_arrays(arrays, names=out_names)
-
-    return df.mapInArrow(fn, out_schema)
-
-
-def _with_clip_vector(df, kernel, out_col: str, bytes_col: str, codec_col: str, sr_col: str):
-    """Shared decode -> per-clip float-vector mapInArrow pass: appends
-    ``out_col`` (array<double>, each element rounded to 6 like Spark's
-    round) and drops the payload column. Decode failure or a sub-frame
-    clip => NULL. ``kernel(pcm, sr) -> 1-D float64 array | None``."""
-    from collections.abc import Iterator
-
-    import pyarrow as pa
-    from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
-
-    from dataflow_geobeam_spark.functions.decode import _binary_views
-
-    keep = [f for f in df.schema.fields if f.name != bytes_col]
-    out_schema = StructType(keep + [StructField(out_col, ArrayType(DoubleType()))])
-    keep_names = [f.name for f in keep]
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import numpy as np
-
-        from dataflow_geobeam_spark import codecs
-
-        for batch in batches:
-            names = batch.schema.names
-            bufs = _binary_views(batch.column(names.index(bytes_col)))
-            codec_vals = batch.column(names.index(codec_col)).to_pylist()
-            sr_vals = batch.column(names.index(sr_col)).to_pylist()
-            outs = []
-            for buf, c, sr in zip(bufs, codec_vals, sr_vals):
-                try:
-                    pcm, _sr = codecs.decode(buf, c)
-                    v = kernel(pcm, sr or _sr)
-                    outs.append(
-                        None
-                        if v is None
-                        else (np.floor(v * 1e6 + 0.5) / 1e6).tolist()
-                    )
-                except Exception:  # noqa: BLE001 - decode failure => null
-                    outs.append(None)
-            arrays = [batch.column(names.index(n)) for n in keep_names]
-            arrays.append(pa.array(outs, type=pa.list_(pa.float64())))
-            yield pa.RecordBatch.from_arrays(arrays, names=keep_names + [out_col])
-
-    return df.mapInArrow(fn, out_schema)
+    return clip_map(
+        df,
+        kernel,
+        [StructField(out_col, ArrayType(DoubleType()))],
+        on_error=(None,),
+        bytes_col=bytes_col,
+        codec_col=codec_col,
+        sr_col=sr_col,
+    )
 
 
 def with_mel_means(
@@ -1023,65 +870,28 @@ def with_augmented_noise(
       the payload: callers that only hash the output stop shipping
       ~100 KB/row back across Arrow and through the plan.
     """
-    import hashlib
+
+    def kernel(pcm, sr, row):
+        mixed = augment_noise_np(pcm, _clip_key(row[id_col]), snr_db)
+        return [(mixed.shape[0], codecs.encode_wav(mixed, sr))]
+
+    return clip_map(
+        df,
+        kernel,
+        [StructField("n_samples", LongType(), False), StructField("aug", BinaryType(), False)],
+        passthrough=[StructField(id_col, StringType(), False), *passthrough],
+        digest="aug_md5" if digest else None,
+        bytes_col=bytes_col,
+        codec_col=codec_col,
+        sr_col=sr_col,
+    )
+
+
+def _clip_key(clip_id: str) -> int:
+    """Per-clip RNG key of the keyed augmentations: crc32 of the UTF-8 id."""
     import zlib
-    from collections.abc import Iterator
 
-    import pyarrow as pa
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from dataflow_geobeam_spark.functions.decode import _binary_views
-
-    pass_fields = [df.schema[c] for c in passthrough]
-    out_field = (
-        StructField("aug_md5", StringType(), False)
-        if digest
-        else StructField("aug", BinaryType(), False)
-    )
-    out_schema = StructType(
-        [StructField(id_col, StringType(), False)]
-        + pass_fields
-        + [StructField("n_samples", LongType(), False), out_field]
-    )
-    out_names = [f.name for f in out_schema.fields]
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from dataflow_geobeam_spark import codecs
-
-        for batch in batches:
-            names = batch.schema.names
-            bufs = _binary_views(batch.column(names.index(bytes_col)))
-            ids = batch.column(names.index(id_col)).to_pylist()
-            codec_vals = batch.column(names.index(codec_col)).to_pylist()
-            sr_vals = batch.column(names.index(sr_col)).to_pylist()
-            out_id, out_n, out_payload, keep_idx = [], [], [], []
-            for j, (cid, buf, c, sr) in enumerate(zip(ids, bufs, codec_vals, sr_vals)):
-                try:
-                    pcm, _sr = codecs.decode(buf, c)
-                except Exception:  # noqa: BLE001 - decode failure => no row
-                    continue
-                mixed = augment_noise_np(pcm, zlib.crc32(cid.encode("utf-8")), snr_db)
-                wav = codecs.encode_wav(mixed, sr or _sr)
-                out_id.append(cid)
-                out_n.append(mixed.shape[0])
-                out_payload.append(hashlib.md5(wav).hexdigest() if digest else wav)
-                keep_idx.append(j)
-            take = pa.array(keep_idx, type=pa.int32())
-            arrays = [pa.array(out_id, type=pa.string())]
-            arrays += [batch.column(names.index(c)).take(take) for c in passthrough]
-            arrays.append(pa.array(out_n, type=pa.int64()))
-            arrays.append(
-                pa.array(out_payload, type=pa.string() if digest else pa.binary())
-            )
-            yield pa.RecordBatch.from_arrays(arrays, names=out_names)
-
-    return df.mapInArrow(fn, out_schema)
+    return zlib.crc32(clip_id.encode("utf-8"))
 
 
 # ---------------------------------------------------------------------------
@@ -1118,71 +928,29 @@ def with_speed_perturb(
     yields no rows (filter_invalid semantics). ``digest=True`` emits
     ``sp_md5`` (Catalyst-identical lowercase-hex md5) instead of the
     bytes — see with_augmented_noise."""
-    import hashlib
-    from collections.abc import Iterator
-
-    import pyarrow as pa
-    from pyspark.sql.types import (
-        BinaryType,
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from dataflow_geobeam_spark.functions.decode import _binary_views
-
-    out_field = (
-        StructField("sp_md5", StringType(), False)
-        if digest
-        else StructField("sp", BinaryType(), False)
-    )
-    out_schema = StructType(
-        [
-            StructField(id_col, StringType(), False),
-            StructField("speed", DoubleType(), False),
-            StructField("n_samples", LongType(), False),
-            out_field,
-        ]
-    )
-    out_names = [f.name for f in out_schema.fields]
     speeds = tuple(float(s) for s in speeds)
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from dataflow_geobeam_spark import codecs
+    def kernel(pcm, sr, row):
+        out = []
+        for s in speeds:
+            y = speed_perturb_np(pcm, sr, s)
+            out.append((s, y.shape[0], codecs.encode_wav(y, sr)))
+        return out
 
-        for batch in batches:
-            names = batch.schema.names
-            bufs = _binary_views(batch.column(names.index(bytes_col)))
-            ids = batch.column(names.index(id_col)).to_pylist()
-            codec_vals = batch.column(names.index(codec_col)).to_pylist()
-            sr_vals = batch.column(names.index(sr_col)).to_pylist()
-            out_id, out_sp, out_n, out_bytes = [], [], [], []
-            for cid, buf, c, sr in zip(ids, bufs, codec_vals, sr_vals):
-                try:
-                    pcm, _sr = codecs.decode(buf, c)
-                except Exception:  # noqa: BLE001 - decode failure => no rows
-                    continue
-                rate = sr or _sr
-                for s in speeds:
-                    y = speed_perturb_np(pcm, rate, s)
-                    wav = codecs.encode_wav(y, rate)
-                    out_id.append(cid)
-                    out_sp.append(s)
-                    out_n.append(y.shape[0])
-                    out_bytes.append(hashlib.md5(wav).hexdigest() if digest else wav)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_id, type=pa.string()),
-                    pa.array(out_sp, type=pa.float64()),
-                    pa.array(out_n, type=pa.int64()),
-                    pa.array(out_bytes, type=pa.string() if digest else pa.binary()),
-                ],
-                names=out_names,
-            )
-
-    return df.mapInArrow(fn, out_schema)
+    return clip_map(
+        df,
+        kernel,
+        [
+            StructField("speed", DoubleType(), False),
+            StructField("n_samples", LongType(), False),
+            StructField("sp", BinaryType(), False),
+        ],
+        passthrough=[StructField(id_col, StringType(), False)],
+        digest="sp_md5" if digest else None,
+        bytes_col=bytes_col,
+        codec_col=codec_col,
+        sr_col=sr_col,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1243,75 +1011,32 @@ def with_specaugment(
     post-mask means in ONE mapInArrow pass. Output: (clip_id, f0, f_w,
     t0, t_w, n_frames, sa_mel array<double> round-6); undecodable or
     sub-frame clips yield no row (filter_invalid semantics)."""
-    import zlib
-    from collections.abc import Iterator
 
-    import pyarrow as pa
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        IntegerType,
-        StringType,
-        StructField,
-        StructType,
-    )
+    def kernel(pcm, sr, row):
+        import numpy as np
 
-    from dataflow_geobeam_spark.functions.decode import _binary_views
+        res = specaugment_means_np(pcm, sr, _clip_key(row[id_col]))
+        if res is None:
+            return []
+        *masks, mean = res
+        return [(*masks, [float(v) for v in np.round(mean, 6)])]
 
-    out_schema = StructType(
+    return clip_map(
+        df,
+        kernel,
         [
-            StructField(id_col, StringType(), False),
             StructField("f0", IntegerType(), False),
             StructField("f_w", IntegerType(), False),
             StructField("t0", IntegerType(), False),
             StructField("t_w", IntegerType(), False),
             StructField("n_frames", IntegerType(), False),
             StructField("sa_mel", ArrayType(DoubleType()), False),
-        ]
+        ],
+        passthrough=[StructField(id_col, StringType(), False)],
+        bytes_col=bytes_col,
+        codec_col=codec_col,
+        sr_col=sr_col,
     )
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import numpy as np
-
-        from dataflow_geobeam_spark import codecs
-
-        for batch in batches:
-            names = batch.schema.names
-            bufs = _binary_views(batch.column(names.index(bytes_col)))
-            ids = batch.column(names.index(id_col)).to_pylist()
-            codec_vals = batch.column(names.index(codec_col)).to_pylist()
-            sr_vals = batch.column(names.index(sr_col)).to_pylist()
-            o_id, o_f0, o_fw, o_t0, o_tw, o_n, o_mel = [], [], [], [], [], [], []
-            for cid, buf, c, sr in zip(ids, bufs, codec_vals, sr_vals):
-                try:
-                    pcm, _sr = codecs.decode(buf, c)
-                except Exception:  # noqa: BLE001 - decode failure => no row
-                    continue
-                res = specaugment_means_np(
-                    pcm, sr or _sr, zlib.crc32(cid.encode("utf-8"))
-                )
-                if res is None:
-                    continue
-                f0, f_w, t0, t_w, n_frames, mean = res
-                o_id.append(cid)
-                o_f0.append(f0), o_fw.append(f_w)
-                o_t0.append(t0), o_tw.append(t_w)
-                o_n.append(n_frames)
-                o_mel.append([float(v) for v in np.round(mean, 6)])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(o_id, type=pa.string()),
-                    pa.array(o_f0, type=pa.int32()),
-                    pa.array(o_fw, type=pa.int32()),
-                    pa.array(o_t0, type=pa.int32()),
-                    pa.array(o_tw, type=pa.int32()),
-                    pa.array(o_n, type=pa.int32()),
-                    pa.array(o_mel, type=pa.list_(pa.float64())),
-                ],
-                names=[id_col, "f0", "f_w", "t0", "t_w", "n_frames", "sa_mel"],
-            )
-
-    return df.mapInArrow(fn, out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1362,64 +1087,21 @@ def with_normalized_loudness(
     the normalized wav bytes; decode failure yields no row.
     ``digest=True`` emits ``norm_md5`` instead of the bytes — see
     with_augmented_noise."""
-    import hashlib
-    from collections.abc import Iterator
 
-    import pyarrow as pa
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
+    def kernel(pcm, sr, row):
+        y = normalize_loudness_np(pcm, target_rms)
+        return [(y.shape[0], codecs.encode_wav(y, sr))]
+
+    return clip_map(
+        df,
+        kernel,
+        [StructField("n_samples", LongType(), False), StructField("norm", BinaryType(), False)],
+        passthrough=[StructField(id_col, StringType(), False)],
+        digest="norm_md5" if digest else None,
+        bytes_col=bytes_col,
+        codec_col=codec_col,
+        sr_col=sr_col,
     )
-
-    from dataflow_geobeam_spark.functions.decode import _binary_views
-
-    out_field = (
-        StructField("norm_md5", StringType(), False)
-        if digest
-        else StructField("norm", BinaryType(), False)
-    )
-    out_schema = StructType(
-        [
-            StructField(id_col, StringType(), False),
-            StructField("n_samples", LongType(), False),
-            out_field,
-        ]
-    )
-    out_names = [f.name for f in out_schema.fields]
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from dataflow_geobeam_spark import codecs
-
-        for batch in batches:
-            names = batch.schema.names
-            bufs = _binary_views(batch.column(names.index(bytes_col)))
-            ids = batch.column(names.index(id_col)).to_pylist()
-            codec_vals = batch.column(names.index(codec_col)).to_pylist()
-            sr_vals = batch.column(names.index(sr_col)).to_pylist()
-            out_id, out_n, out_bytes = [], [], []
-            for cid, buf, c, sr in zip(ids, bufs, codec_vals, sr_vals):
-                try:
-                    pcm, _sr = codecs.decode(buf, c)
-                except Exception:  # noqa: BLE001 - decode failure => no row
-                    continue
-                y = normalize_loudness_np(pcm, target_rms)
-                wav = codecs.encode_wav(y, sr or _sr)
-                out_id.append(cid)
-                out_n.append(y.shape[0])
-                out_bytes.append(hashlib.md5(wav).hexdigest() if digest else wav)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_id, type=pa.string()),
-                    pa.array(out_n, type=pa.int64()),
-                    pa.array(out_bytes, type=pa.string() if digest else pa.binary()),
-                ],
-                names=out_names,
-            )
-
-    return df.mapInArrow(fn, out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1495,66 +1177,21 @@ def with_reverb(
     decode failure yields no row. Deterministic under task retries.
     ``digest=True`` emits ``rev_md5`` instead of the bytes — see
     with_augmented_noise."""
-    import hashlib
-    import zlib
-    from collections.abc import Iterator
 
-    import pyarrow as pa
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
+    def kernel(pcm, sr, row):
+        y = augment_reverb_np(pcm, sr, _clip_key(row[id_col]))
+        return [(y.shape[0], codecs.encode_wav(y, sr))]
+
+    return clip_map(
+        df,
+        kernel,
+        [StructField("n_samples", LongType(), False), StructField("rev", BinaryType(), False)],
+        passthrough=[StructField(id_col, StringType(), False)],
+        digest="rev_md5" if digest else None,
+        bytes_col=bytes_col,
+        codec_col=codec_col,
+        sr_col=sr_col,
     )
-
-    from dataflow_geobeam_spark.functions.decode import _binary_views
-
-    out_field = (
-        StructField("rev_md5", StringType(), False)
-        if digest
-        else StructField("rev", BinaryType(), False)
-    )
-    out_schema = StructType(
-        [
-            StructField(id_col, StringType(), False),
-            StructField("n_samples", LongType(), False),
-            out_field,
-        ]
-    )
-    out_names = [f.name for f in out_schema.fields]
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from dataflow_geobeam_spark import codecs
-
-        for batch in batches:
-            names = batch.schema.names
-            bufs = _binary_views(batch.column(names.index(bytes_col)))
-            ids = batch.column(names.index(id_col)).to_pylist()
-            codec_vals = batch.column(names.index(codec_col)).to_pylist()
-            sr_vals = batch.column(names.index(sr_col)).to_pylist()
-            out_id, out_n, out_bytes = [], [], []
-            for cid, buf, c, sr in zip(ids, bufs, codec_vals, sr_vals):
-                try:
-                    pcm, _sr = codecs.decode(buf, c)
-                except Exception:  # noqa: BLE001 - decode failure => no row
-                    continue
-                rate = sr or _sr
-                y = augment_reverb_np(pcm, rate, zlib.crc32(cid.encode("utf-8")))
-                wav = codecs.encode_wav(y, rate)
-                out_id.append(cid)
-                out_n.append(y.shape[0])
-                out_bytes.append(hashlib.md5(wav).hexdigest() if digest else wav)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_id, type=pa.string()),
-                    pa.array(out_n, type=pa.int64()),
-                    pa.array(out_bytes, type=pa.string() if digest else pa.binary()),
-                ],
-                names=out_names,
-            )
-
-    return df.mapInArrow(fn, out_schema)
 
 
 def with_flac_pcm16(df, bytes_col: str = "bytes", digest: bool = False):
@@ -1567,66 +1204,19 @@ def with_flac_pcm16(df, bytes_col: str = "bytes", digest: bool = False):
     The bitstream walk lives in dataflow_geobeam_spark/flac — from-spec
     Rice/LPC/CRC decode, no libsndfile. ``digest=True`` appends
     ``pcm16_md5`` instead of the bytes — see with_augmented_noise."""
-    import hashlib
-    from collections.abc import Iterator
-
-    import pyarrow as pa
-    from pyspark.sql.types import (
-        BinaryType,
-        IntegerType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from dataflow_geobeam_spark.functions.decode import _binary_views
-
-    keep = [f for f in df.schema.fields if f.name != bytes_col]
-    out_field = (
-        StructField("pcm16_md5", StringType())
-        if digest
-        else StructField("pcm16", BinaryType())
-    )
-    out_schema = StructType(
-        keep
-        + [
+    return clip_map(
+        df,
+        lambda pcm, sr, row: [(sr, len(pcm), _pcm16_bytes(pcm))],
+        [
             StructField("flac_sr", IntegerType()),
             StructField("n_samples", IntegerType()),
-            out_field,
-        ]
+            StructField("pcm16", BinaryType()),
+        ],
+        on_error=(None, None, None),
+        digest="pcm16_md5" if digest else None,
+        bytes_col=bytes_col,
+        decode=lambda buf, row: codecs.decode(buf, "flac"),
     )
-    keep_names = [f.name for f in keep]
-    out_names = [f.name for f in out_schema.fields]
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import numpy as np
-
-        from dataflow_geobeam_spark import codecs
-
-        for batch in batches:
-            names = batch.schema.names
-            bufs = _binary_views(batch.column(names.index(bytes_col)))
-            srs, ns, outs = [], [], []
-            for buf in bufs:
-                try:
-                    pcm, sr = codecs.decode(bytes(buf), "flac")
-                except Exception:  # noqa: BLE001 - decode failure => invalid row
-                    srs.append(None)
-                    ns.append(None)
-                    outs.append(None)
-                    continue
-                q = np.round(np.clip(pcm, -1.0, 1.0) * 32767.0).astype("<i2")
-                raw = q.tobytes()
-                srs.append(int(sr))
-                ns.append(int(q.shape[0]))
-                outs.append(hashlib.md5(raw).hexdigest() if digest else raw)
-            arrays = [batch.column(names.index(nm)) for nm in keep_names]
-            arrays.append(pa.array(srs, type=pa.int32()))
-            arrays.append(pa.array(ns, type=pa.int32()))
-            arrays.append(pa.array(outs, type=pa.string() if digest else pa.binary()))
-            yield pa.RecordBatch.from_arrays(arrays, names=out_names)
-
-    return df.mapInArrow(fn, out_schema)
 
 
 def with_sniffed_pcm16(df, bytes_col: str = "bytes", digest: bool = False):
@@ -1639,67 +1229,17 @@ def with_sniffed_pcm16(df, bytes_col: str = "bytes", digest: bool = False):
     unknown magic / truncated payloads => NULL columns (F1 semantics).
     ``digest=True`` appends ``pcm16_md5`` instead of the bytes — see
     with_augmented_noise."""
-    import hashlib
-    from collections.abc import Iterator
-
-    import pyarrow as pa
-    from pyspark.sql.types import (
-        BinaryType,
-        IntegerType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from dataflow_geobeam_spark.functions.decode import _binary_views
-
-    keep = [f for f in df.schema.fields if f.name != bytes_col]
-    out_field = (
-        StructField("pcm16_md5", StringType())
-        if digest
-        else StructField("pcm16", BinaryType())
-    )
-    out_schema = StructType(
-        keep
-        + [
+    return clip_map(
+        df,
+        lambda pcm, sr, row: [(codecs.sniff(row[bytes_col]), sr, len(pcm), _pcm16_bytes(pcm))],
+        [
             StructField("container", StringType()),
             StructField("sniff_sr", IntegerType()),
             StructField("n_samples", IntegerType()),
-            out_field,
-        ]
+            StructField("pcm16", BinaryType()),
+        ],
+        on_error=(None, None, None, None),
+        digest="pcm16_md5" if digest else None,
+        bytes_col=bytes_col,
+        decode=lambda buf, row: codecs.decode_sniffed(buf)[:2],
     )
-    keep_names = [f.name for f in keep]
-    out_names = [f.name for f in out_schema.fields]
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import numpy as np
-
-        from dataflow_geobeam_spark import codecs
-
-        for batch in batches:
-            names = batch.schema.names
-            bufs = _binary_views(batch.column(names.index(bytes_col)))
-            conts, srs, ns, outs = [], [], [], []
-            for buf in bufs:
-                try:
-                    pcm, sr, cont = codecs.decode_sniffed(bytes(buf))
-                except Exception:  # noqa: BLE001 - unknown/corrupt => invalid row
-                    conts.append(None)
-                    srs.append(None)
-                    ns.append(None)
-                    outs.append(None)
-                    continue
-                q = np.round(np.clip(pcm, -1.0, 1.0) * 32767.0).astype("<i2")
-                raw = q.tobytes()
-                conts.append(cont)
-                srs.append(int(sr))
-                ns.append(int(q.shape[0]))
-                outs.append(hashlib.md5(raw).hexdigest() if digest else raw)
-            arrays = [batch.column(names.index(nm)) for nm in keep_names]
-            arrays.append(pa.array(conts, type=pa.string()))
-            arrays.append(pa.array(srs, type=pa.int32()))
-            arrays.append(pa.array(ns, type=pa.int32()))
-            arrays.append(pa.array(outs, type=pa.string() if digest else pa.binary()))
-            yield pa.RecordBatch.from_arrays(arrays, names=out_names)
-
-    return df.mapInArrow(fn, out_schema)

@@ -1,4 +1,4 @@
-"""Vectorized codec->PCM decode (Arrow-batched, no per-row Python shipping).
+"""Vectorized codec->PCM decode and the one clip-kernel runner, ``clip_map``.
 
 Graft analog of the reference's per-element reprojection+repair stage
 (``/root/reference/geobeam/fn.py:23-53`` ``make_valid``;
@@ -9,8 +9,19 @@ call handles an entire Arrow batch of clips.
 Implementation note (measured on this harness): for ~50 KB binary payloads,
 ``mapInArrow`` moves data JVM->Python ~5x faster than the pandas-UDF path,
 because Arrow binary stays a zero-copy buffer instead of being re-boxed as
-Python ``bytes`` inside a pandas Series twice. The decode hot path therefore
-uses ``mapInArrow``; a pandas-UDF variant is kept for expression-position use.
+Python ``bytes`` inside a pandas Series twice. Every audio clip kernel
+therefore runs through ``clip_map``, the one ``mapInArrow`` wrapper: it
+looks up the columns, takes zero-copy views of the payloads, decodes each
+clip once, applies the failure rule and assembles the Arrow output. A
+kernel is a pure ``(pcm, sr, row) -> [output tuple, ...]`` function.
+
+Failure rule (the analog of ``make_valid`` returning ``None`` +
+``filter_invalid`` dropping it, ``geobeam/fn.py:56-88``): a payload the
+codecs reject (``ValueError``: malformed, truncated, empty, null, unknown
+or wrong codec, zero sample rate) yields the caller's ``on_error`` — one
+fill row (nulls, or ``decode_ok=false`` for the metrics pass) or no row.
+Anything the kernel itself raises fails the task: a kernel bug is never
+turned into null rows.
 
 Two decode paths, mirroring the reference's speed-vs-detail source pair
 (RasterBlockSource "optimizes for pipeline speed" vs RasterPolygonSource
@@ -21,29 +32,27 @@ Two decode paths, mirroring the reference's speed-vs-detail source pair
   windowed aggregates shuffle ~50 bytes/row instead of ~50 KB.
 * ``with_decoded_pcm`` — DETAIL path: materializes ``pcm array<float>`` for
   per-sample work (frame explode, SNR checks, feature extraction).
-
-Failure semantics: malformed payload or unknown codec => ``decode_ok=false``
-(nulled metrics) instead of a task failure — the analog of ``make_valid``
-returning ``None`` + ``filter_invalid`` dropping it (``geobeam/fn.py:56-88``).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import hashlib
+from collections.abc import Callable, Iterator, Sequence
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.functions import pandas_udf
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import (
     ArrayType,
+    BinaryType,
     BooleanType,
     DoubleType,
     FloatType,
     IntegerType,
     LongType,
+    StringType,
     StructField,
     StructType,
 )
@@ -55,46 +64,6 @@ METRIC_FIELDS = [
     StructField("rms", DoubleType()),
     StructField("peak", DoubleType()),
 ]
-DECODE_METRICS_TYPE = StructType(METRIC_FIELDS)
-
-_METRIC_ARROW = {
-    "decode_ok": pa.bool_(),
-    "sr_decoded": pa.int32(),
-    "n_samples": pa.int64(),
-    "rms": pa.float64(),
-    "peak": pa.float64(),
-}
-
-
-def _decode_batch_metrics(bufs, codec_values):
-    """Shared per-batch decode kernel -> dict of numpy metric arrays.
-
-    Heavy imports stay worker-side (lazy-import precedent,
-    ``geobeam/io.py:68-70``). Metrics (n, rms, peak in float64) are
-    computed inline — round-3 removed the shared ``audio_synth.pcm_metrics``
-    kernel so the fixture oracle (``fixtures.independent.metrics``) is a
-    genuinely independent implementation of the same formula."""
-    from dataflow_geobeam_spark import codecs
-
-    n = len(bufs)
-    ok = np.zeros(n, dtype=bool)
-    sr = np.zeros(n, dtype=np.int32)
-    ns = np.zeros(n, dtype=np.int64)
-    rms = np.zeros(n, dtype=np.float64)
-    peak = np.zeros(n, dtype=np.float64)
-    for idx in range(n):
-        try:
-            pcm, sr_hz = codecs.decode(bufs[idx], codec_values[idx])
-            ns[idx] = pcm.shape[0]
-            if ns[idx]:
-                x = pcm.astype(np.float64)
-                rms[idx] = np.sqrt(np.mean(x * x))
-                peak[idx] = np.max(np.abs(x))
-            sr[idx] = sr_hz
-            ok[idx] = True
-        except Exception:  # noqa: BLE001 - any decode failure => invalid row
-            ok[idx] = False
-    return {"decode_ok": ok, "sr_decoded": sr, "n_samples": ns, "rms": rms, "peak": peak}
 
 
 def _binary_views(col: pa.Array) -> list:
@@ -126,84 +95,160 @@ def _binary_views(col: pa.Array) -> list:
     return out
 
 
+class _Row:
+    """The input columns of one clip, as ``row[name]``.
+
+    A column is converted to Python values on first use in a batch, so a
+    kernel pays only for the columns it reads; ``row[bytes_col]`` is the
+    zero-copy payload view. One instance walks the whole batch, so a
+    kernel must not keep it past its call.
+    """
+
+    __slots__ = ("_batch", "_cols", "j")
+
+    def __init__(self, batch: pa.RecordBatch, cols: dict):
+        self._batch, self._cols, self.j = batch, cols, 0
+
+    def __getitem__(self, name: str):
+        vals = self._cols.get(name)
+        if vals is None:
+            vals = self._cols[name] = self._batch.column(name).to_pylist()
+        return vals[self.j]
+
+
+def clip_map(
+    df: DataFrame,
+    kernel: Callable,
+    out_fields: Sequence[StructField],
+    *,
+    passthrough: Sequence[str | StructField] | None = None,
+    on_error: tuple | None = None,
+    digest: str | None = None,
+    bytes_col: str = "bytes",
+    codec_col: str = "codec",
+    sr_col: str | None = None,
+    decode: Callable | None = None,
+) -> DataFrame:
+    """Decode every clip once and run ``kernel`` on it, in one mapInArrow pass.
+
+    ``kernel(pcm, sr, row)`` returns a list of tuples, one value per
+    ``out_fields`` entry: an empty list drops the clip, several tuples
+    explode it. ``sr`` is the row's ``sr_col`` value when that column is
+    given and the value is non-null and non-zero, else the decoded rate.
+
+    * ``passthrough`` — input columns copied onto every output row of their
+      clip, ahead of ``out_fields``. A ``StructField`` entry names the
+      input column and declares its output field. Default: every input
+      column but the payload.
+    * ``on_error`` — what a clip the codecs reject (``ValueError``) yields:
+      ``None`` for no row, or the one fill row (a tuple over
+      ``out_fields``). A kernel exception is not caught: it fails the task.
+    * ``digest`` — name of an md5 column that replaces the binary field of
+      ``out_fields``: the worker hashes the bytes (lowercase hex, what
+      Catalyst's ``md5()`` gives) so they never cross back through Arrow.
+    * ``decode(buf, row) -> (pcm, sr)`` — replaces the default
+      ``codecs.decode(buf, row[codec_col])``.
+    """
+    if passthrough is None:
+        passthrough = [f for f in df.schema.fields if f.name != bytes_col]
+    pass_fields = [p if isinstance(p, StructField) else df.schema[p] for p in passthrough]
+    pass_names = [f.name for f in pass_fields]
+    out_fields = list(out_fields)
+    digest_at = None
+    if digest is not None:
+        digest_at = next(i for i, f in enumerate(out_fields) if f.dataType == BinaryType())
+        out_fields[digest_at] = StructField(digest, StringType(), out_fields[digest_at].nullable)
+    out_schema = StructType(pass_fields + out_fields)
+    out_types = [to_arrow_type(f.dataType) for f in out_fields]
+    out_names = out_schema.fieldNames()
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        from dataflow_geobeam_spark import codecs
+
+        dec = decode or (lambda buf, row: codecs.decode(buf, row[codec_col]))
+        for batch in batches:
+            bufs = _binary_views(batch.column(bytes_col))
+            row = _Row(batch, {bytes_col: bufs})
+            take, outs = [], []
+            for j, buf in enumerate(bufs):
+                row.j = j
+                try:
+                    pcm, sr = dec(buf, row)
+                except ValueError:
+                    if on_error is not None:
+                        take.append(j)
+                        outs.append(on_error)
+                    continue
+                if sr_col is not None:
+                    sr = row[sr_col] or sr
+                res = kernel(pcm, sr, row)
+                take.extend([j] * len(res))
+                outs.extend(res)
+            cols = list(zip(*outs)) if outs else [()] * len(out_fields)
+            if digest_at is not None:
+                cols[digest_at] = [
+                    None if v is None else hashlib.md5(v).hexdigest() for v in cols[digest_at]
+                ]
+            if take == list(range(len(bufs))):
+                arrays = [batch.column(n) for n in pass_names]
+            else:
+                idx = pa.array(take, type=pa.int32())
+                arrays = [batch.column(n).take(idx) for n in pass_names]
+            arrays += [pa.array(c, type=t) for c, t in zip(cols, out_types)]
+            yield pa.RecordBatch.from_arrays(arrays, names=out_names)
+
+    return df.mapInArrow(fn, out_schema)
+
+
+def _metrics_kernel(pcm, sr, row):
+    """(decode_ok, sr_decoded, n_samples, rms, peak) of one clip.
+
+    Metrics (n, rms, peak in float64) are computed inline — round-3
+    removed the shared ``audio_synth.pcm_metrics`` kernel so the fixture
+    oracle (``fixtures.independent.metrics``) is a genuinely independent
+    implementation of the same formula."""
+    n = pcm.shape[0]
+    if not n:
+        return [(True, sr, 0, 0.0, 0.0)]
+    x = pcm.astype(np.float64)
+    return [(True, sr, n, float(np.sqrt(np.mean(x * x))), float(np.max(np.abs(x))))]
+
+
 def with_decoded_metrics(
     df: DataFrame, bytes_col: str = "bytes", codec_col: str = "codec", drop_bytes: bool = True
 ) -> DataFrame:
     """Append decode_ok/sr_decoded/n_samples/rms/peak via mapInArrow.
 
+    A clip that fails to decode gets ``(false, 0, 0, 0.0, 0.0)``.
     ``drop_bytes=True`` prunes the binary payload in the same pass, so
     downstream shuffles move metrics, not megabytes (column-pruning analog
     of the reference's band-subset reads, ``geobeam/io.py:129-132``).
     """
-    in_schema = df.schema
-    keep = [f for f in in_schema.fields if not (drop_bytes and f.name == bytes_col)]
-    out_schema = StructType(keep + METRIC_FIELDS)
-    keep_names = [f.name for f in keep]
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            names = batch.schema.names
-            bufs = _binary_views(batch.column(names.index(bytes_col)))
-            codec_vals = batch.column(names.index(codec_col)).to_pylist()
-            metrics = _decode_batch_metrics(bufs, codec_vals)
-            arrays = [batch.column(names.index(n)) for n in keep_names]
-            arrays += [pa.array(v, type=_METRIC_ARROW[k]) for k, v in metrics.items()]
-            yield pa.RecordBatch.from_arrays(arrays, names=keep_names + list(metrics))
-
-    return df.mapInArrow(fn, out_schema)
+    return clip_map(
+        df,
+        _metrics_kernel,
+        METRIC_FIELDS,
+        passthrough=None if drop_bytes else df.schema.fields,
+        on_error=(False, 0, 0, 0.0, 0.0),
+        bytes_col=bytes_col,
+        codec_col=codec_col,
+    )
 
 
 def with_decoded_pcm(
     df: DataFrame, bytes_col: str = "bytes", codec_col: str = "codec", drop_bytes: bool = True
 ) -> DataFrame:
-    """Append ``pcm array<float>`` (detail path) via mapInArrow."""
-    in_schema = df.schema
-    keep = [f for f in in_schema.fields if not (drop_bytes and f.name == bytes_col)]
-    out_schema = StructType(keep + [StructField("pcm", ArrayType(FloatType()))])
-    keep_names = [f.name for f in keep]
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from dataflow_geobeam_spark import codecs
-
-        for batch in batches:
-            names = batch.schema.names
-            bufs = _binary_views(batch.column(names.index(bytes_col)))
-            codec_vals = batch.column(names.index(codec_col)).to_pylist()
-            pcms = []
-            for buf, c in zip(bufs, codec_vals):
-                try:
-                    pcm, _ = codecs.decode(buf, c)
-                    pcms.append(pcm)
-                except Exception:  # noqa: BLE001
-                    pcms.append(None)
-            arrays = [batch.column(names.index(n)) for n in keep_names]
-            arrays.append(pa.array(pcms, type=pa.list_(pa.float32())))
-            yield pa.RecordBatch.from_arrays(arrays, names=keep_names + ["pcm"])
-
-    return df.mapInArrow(fn, out_schema)
-
-
-@pandas_udf(DECODE_METRICS_TYPE)
-def decode_metrics_struct(data: pd.Series, codec: pd.Series) -> pd.DataFrame:
-    """Expression-position variant (pandas UDF). Slower than the mapInArrow
-    path for large payloads; kept for composability inside select()."""
-    metrics = _decode_batch_metrics(list(data.values), list(codec.values))
-    return pd.DataFrame(metrics)
-
-
-@pandas_udf(ArrayType(FloatType()))
-def decode_pcm_array(data: pd.Series, codec: pd.Series) -> pd.Series:
-    """Expression-position PCM decode; malformed rows -> null."""
-    from dataflow_geobeam_spark import codecs
-
-    out = []
-    for buf, c in zip(data.values, codec.values):
-        try:
-            pcm, _ = codecs.decode(buf, c)
-            out.append(pcm)
-        except Exception:  # noqa: BLE001
-            out.append(None)
-    return pd.Series(out)
+    """Append ``pcm array<float>`` (detail path) via mapInArrow; a clip
+    that fails to decode gets a null ``pcm``."""
+    return clip_map(
+        df,
+        lambda pcm, sr, row: [(pcm,)],
+        [StructField("pcm", ArrayType(FloatType()))],
+        passthrough=None if drop_bytes else df.schema.fields,
+        on_error=(None,),
+        bytes_col=bytes_col,
+        codec_col=codec_col,
+    )
 
 
 def expected_samples(sr_col: Column, dur_col: Column) -> Column:

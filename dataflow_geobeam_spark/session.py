@@ -13,10 +13,11 @@ session factory with scale-aware defaults:
   candidate id pairs, embeddings) batch up to 10,000 — measured 40x fewer
   Python round-trips on pair-screening mapInArrow stages. Both knobs stay
   env-tunable for other hardware.
-* ``-XX:UseAVX=2`` on the driver JVM: round-5's driver bench died with a
+* ``-XX:UseAVX=2`` on an x86 driver JVM: round-5's driver bench died with a
   SIGSEGV in ``StubRoutines::jlong_disjoint_arraycopy_avx3`` (round-5
-  VERDICT #2, ``hs_err_pid7068.log``) — masking the AVX-512 stub family
-  costs nothing measurable here and removes the crash mode. Env-tunable.
+  VERDICT #2) — masking the AVX-512 stub family costs nothing measurable
+  here and removes the crash mode. Other JVMs (aarch64) abort on the flag,
+  so they get none. Env-tunable.
 * UTC session timezone so event-time windows hash identically across engines.
 * Shuffle partitions sized for the local harness; on a real cluster AQE
   coalesces, so a higher static number is safe.
@@ -25,6 +26,7 @@ session factory with scale-aware defaults:
 from __future__ import annotations
 
 import os
+import platform
 
 from pyspark.sql import SparkSession
 
@@ -33,7 +35,15 @@ ARROW_MAX_RECORDS_PER_BATCH = int(os.environ.get("SPARK_GRAFT_ARROW_BATCH", "100
 ARROW_MAX_BYTES_PER_BATCH = int(
     os.environ.get("SPARK_GRAFT_ARROW_BATCH_BYTES", str(32 * 1024 * 1024))
 )
-DRIVER_JAVA_OPTIONS = os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", "-XX:UseAVX=2")
+
+
+def _default_driver_java_options() -> str:
+    return "-XX:UseAVX=2" if platform.machine() in ("x86_64", "AMD64") else ""
+
+
+DRIVER_JAVA_OPTIONS = os.environ.get(
+    "SPARK_GRAFT_DRIVER_JAVA_OPTS", _default_driver_java_options()
+)
 
 
 def get_spark(

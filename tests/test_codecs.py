@@ -51,6 +51,29 @@ def test_decode_rejects_none_and_garbage():
         codecs.decode(b"\x00" * 100, "flac")
 
 
+@pytest.mark.parametrize("codec", codecs.KNOWN_CODECS)
+def test_every_malformed_payload_raises_value_error(codec):
+    """ValueError is the one decode error type (clip_map catches nothing
+    else), for the labelled and the sniffed path alike."""
+    buf = codecs.encode(synth_pcm(4, 8000, 250), 8000, codec)
+    for bad in (buf[: len(buf) // 3], buf[:-7], b"", None):
+        with pytest.raises(ValueError):
+            codecs.decode(bad, codec)
+        with pytest.raises(ValueError):
+            codecs.decode_sniffed(bad)
+
+
+@pytest.mark.parametrize("codec", codecs.KNOWN_CODECS)
+def test_zero_header_rate_is_rejected(codec):
+    buf = codecs.encode(synth_pcm(5, 8000, 250), 8000, codec)
+    at = 24 if codec == "wav" else 8  # fmt-chunk rate / after the stand-in magic
+    bad = buf[:at] + bytes(4) + buf[at + 4 :]
+    with pytest.raises(ValueError, match="zero sample rate"):
+        codecs.decode(bad, codec)
+    with pytest.raises(ValueError, match="zero sample rate"):
+        codecs.decode_sniffed(bad)
+
+
 def test_lossy_codecs_are_actually_lossy_but_bounded():
     pcm = synth_pcm(9, 22050, 500)
     wav_dec, _ = codecs.decode(codecs.encode(pcm, 22050, "wav"), "wav")
