@@ -9,11 +9,15 @@ call handles an entire Arrow batch of clips.
 Implementation note (measured on this harness): for ~50 KB binary payloads,
 ``mapInArrow`` moves data JVM->Python ~5x faster than the pandas-UDF path,
 because Arrow binary stays a zero-copy buffer instead of being re-boxed as
-Python ``bytes`` inside a pandas Series twice. Every audio clip kernel
-therefore runs through ``clip_map``, the one ``mapInArrow`` wrapper: it
-looks up the columns, takes zero-copy views of the payloads, decodes each
-clip once, applies the failure rule and assembles the Arrow output. A
-kernel is a pure ``(pcm, sr, row) -> [output tuple, ...]`` function.
+Python ``bytes`` inside a pandas Series twice. Every binary-payload
+kernel therefore runs through ``clip_map``, the one ``mapInArrow`` wrapper:
+it looks up the columns, takes zero-copy views of the payloads, decodes
+each payload once, applies the failure rule and assembles the Arrow
+output. A kernel is a pure ``(pcm, sr, row) -> [output tuple, ...]``
+function. Audio uses the codec decode; the image, video and tar passes
+(``functions/multimodal.py``, ``sources/binaryfiles.py``) pass their
+container parse as the ``decode`` hook, which hands its two results to
+the kernel in place of ``(pcm, sr)``.
 
 Failure rule (the analog of ``make_valid`` returning ``None`` +
 ``filter_invalid`` dropping it, ``geobeam/fn.py:56-88``): a payload the
@@ -93,6 +97,14 @@ def _binary_views(col: pa.Array) -> list:
         else:
             out.append(values[offs[j] : offs[j + 1]])
     return out
+
+
+def payload_bytes(buf) -> bytes:
+    """One payload view as ``bytes``; a null payload raises ``ValueError``,
+    so a ``decode`` hook built on it gives null rows the failure rule."""
+    if buf is None:
+        raise ValueError("null payload")
+    return bytes(buf)
 
 
 class _Row:

@@ -18,7 +18,7 @@ Reference precedent: geobeam decodes real raster formats via rasterio
 from-spec because the container ships no imaging libs.
 
 All functions are plain bytes/ndarray kernels — the Spark plumbing that
-batches them lives in functions/multimodal.py (mapInArrow).
+batches them lives in functions/multimodal.py (through clip_map).
 """
 
 from __future__ import annotations
@@ -1015,8 +1015,7 @@ def decode_image(buf: bytes) -> np.ndarray:
     """Dispatch on magic bytes to a pure-Python decoder. PPM, PGM, BMP,
     PNG, baseline JPEG and GIF (round 5) are decoded here from spec —
     every still-image container in the sniffer registry; other containers
-    raise (callers fall back to the PIL gate / deterministic fake in
-    functions/multimodal.py)."""
+    raise."""
     if buf[:2] == b"P6":
         return decode_ppm(buf)
     if buf[:2] == b"P5":
@@ -1034,21 +1033,19 @@ def decode_image(buf: bytes) -> np.ndarray:
     raise ImageDecodeError(f"unsupported container (magic {buf[:4]!r})")
 
 
-def thumbnail_ppm(buf: bytes, width: int, height: int) -> bytes:
-    """decode (PPM/PGM/BMP) -> nearest-neighbor resize -> P6 PPM bytes:
-    the real end-to-end thumbnail kernel for the formats this repo decodes
-    from spec."""
-    return encode_ppm(resize_nearest(decode_image(buf), width, height))
-
-
 def pixel_embedding(buf: bytes, width: int, height: int) -> np.ndarray:
-    """decode -> NN-resize -> mean-centered flat pixel vector (float32,
+    """``embed_pixels`` of the decoded image."""
+    return embed_pixels(decode_image(buf), width, height)
+
+
+def embed_pixels(img: np.ndarray, width: int, height: int) -> np.ndarray:
+    """NN-resize -> mean-centered flat pixel vector (float32,
     length width*height*3) — the embedding kernel for image near-dup
     detection. Centering removes the brightness/DC component that makes
     ALL positive-pixel images correlate (~0.75 cosine between unrelated
     noise images uncentered; ~0 centered), so the cosine threshold
     separates true near-dups. Mean computed in float64, cast float32 —
     the contract the independent golden mirrors exactly."""
-    small = resize_nearest(decode_image(buf), width, height)
+    small = resize_nearest(img, width, height)
     v = small.reshape(-1).astype(np.float64)
     return (v - v.mean()).astype(np.float32)

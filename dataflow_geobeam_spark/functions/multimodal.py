@@ -1,46 +1,45 @@
-"""Multimodal binary-column plumbing: typed metadata, sniffing, stubs.
+"""Multimodal binary-column plumbing: typed metadata, sniffing, image and
+video kernels.
 
 Treats image/audio/video payloads as opaque ``binary`` columns with typed
 metadata — the reference's precedent of carrying the exotic payload in a
 standard column type (GeoJSON-in-a-STRING, ``geobeam/fn.py:213-221``;
 SURVEY.md §1.2).
 
-What is REAL here (and tested):
 * container sniffing from magic bytes (pure Catalyst on the binary prefix)
-* the mapInPandas/mapInArrow plumbing — schemas, batch shapes, partitioning
-* EVERY still-image container in the sniffer registry decodes from spec
-  (round 5): PPM / PGM / 24-bit BMP / 8-bit PNG (zlib inflate + all five
-  scanline filters) / baseline JPEG (Huffman scan + batched integer
-  IDCT) / GIF (LZW + interlace) / TIFF (IFD walk, strips, PackBits) —
-  pure-Python codecs in ``functions/imaging.py``, no imaging library;
-  golden-gated in the driver contract
+* EVERY still-image container in the sniffer registry decodes from spec:
+  PPM / PGM / 24-bit BMP / 8-bit PNG (zlib inflate + all five scanline
+  filters) / baseline JPEG (Huffman scan + batched integer IDCT) / GIF
+  (LZW + interlace) / TIFF (IFD walk, strips, PackBits) — pure-Python
+  codecs in ``functions/imaging.py``, no imaging library; golden-gated in
+  the driver contract
 * WebM/EBML container parsing (``functions/ebml.py``): tracks, codec
   ids, per-block timestamps / keyframe flags / sizes — the metadata a
   frame-sampling planner keys on, no pixel decode needed
-* a deterministic fake feature extractor (content-hash derived vector) that
-  exercises the exact pipeline a real extractor would use
 
-What is STUBBED (this container ships no vision/codec libs):
-* pixel decode INSIDE video blocks (VP8/VP9 entropy-coded pixel data)
-  and exotic containers outside the registry raise
-  ``NotImplementedError`` behind PIL/ffmpeg import-try gates — on a
-  cluster with those libs the real path activates with no code change.
+Every ``with_*`` pass runs through ``functions.decode.clip_map``: the
+container parse is its ``decode`` hook, so a payload the parser rejects
+(a ``ValueError``) gives the wrapper's null or dropped row, and an error
+raised by the kernel after it fails the task.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, FloatType, StructField, StructType
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    BooleanType,
+    FloatType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+)
 
-try:  # pragma: no cover - not present in this sandbox
-    import PIL.Image as _pil  # noqa: N813
-except Exception:  # pragma: no cover
-    _pil = None
+from dataflow_geobeam_spark.functions.decode import clip_map, payload_bytes
 
 # magic-byte registry: (prefix hex, sniffed type). Pure-Catalyst sniffing —
 # the codec whitelist analog of validate_crs (geobeam/io.py:597-638).
@@ -72,80 +71,6 @@ def sniff_container(bytes_col: Column | str) -> Column:
     return expr
 
 
-def decode_image_stub(buf: bytes) -> np.ndarray:
-    """Image decode: real via PIL when available, else NotImplementedError.
-
-    Clearly-marked stub per the build contract — the Spark-side plumbing
-    around it (batching, schema, null handling) is real and tested with
-    ``fake_feature_vector``.
-    """
-    if _pil is not None:  # pragma: no cover
-        import io
-
-        return np.asarray(_pil.open(io.BytesIO(buf)))
-    raise NotImplementedError("image decode requires Pillow (not in this container)")
-
-
-def fake_feature_vector(buf: bytes, dim: int = 16) -> np.ndarray:
-    """Deterministic stand-in feature extractor: seeded by content hash.
-
-    Exercises the identical pipeline shape (binary -> float vector) as a
-    real embedding model; output is a pure function of the payload bytes.
-    """
-    import hashlib
-
-    seed = int.from_bytes(hashlib.md5(buf).digest()[:8], "big")
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal(dim).astype(np.float32)
-
-
-def with_feature_vectors(
-    df: DataFrame, bytes_col: str = "bytes", dim: int = 16
-) -> DataFrame:
-    """Append ``features array<float>`` via mapInArrow (Arrow-batched).
-
-    The extraction kernel is swappable (fake_feature_vector here, a model
-    forward-pass on a GPU cluster); the plumbing — batch iteration, null
-    propagation, schema — is the tested contract.
-    """
-    from dataflow_geobeam_spark.functions.decode import _binary_views
-
-    keep = list(df.schema.fields)
-    out_schema = StructType(keep + [StructField("features", ArrayType(FloatType()))])
-    keep_names = [f.name for f in keep]
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            names = batch.schema.names
-            bufs = _binary_views(batch.column(names.index(bytes_col)))
-            feats = [
-                None if b is None else fake_feature_vector(bytes(b), dim) for b in bufs
-            ]
-            arrays = [batch.column(names.index(n)) for n in keep_names]
-            arrays.append(pa.array(feats, type=pa.list_(pa.float32())))
-            yield pa.RecordBatch.from_arrays(arrays, names=keep_names + ["features"])
-
-    return df.mapInArrow(fn, out_schema)
-
-
-# ---------------------------------------------------------------------------
-# Round-2 additions: resize + video frame-sample plumbing
-# ---------------------------------------------------------------------------
-
-
-def resize_image_stub(buf: bytes, width: int, height: int) -> bytes:
-    """Image resize: real via PIL when available, else NotImplementedError.
-    Returns re-encoded PNG bytes on the real path."""
-    if _pil is not None:  # pragma: no cover
-        import io
-
-        img = _pil.open(io.BytesIO(buf)).resize((width, height))
-        out = io.BytesIO()
-        img.save(out, format="PNG")
-        return out.getvalue()
-    raise NotImplementedError("image resize requires Pillow (not in this container)")
-
-
 def fake_thumbnail(buf: bytes, width: int, height: int) -> bytes:
     """Deterministic stand-in resize: content-hash-seeded width*height
     'pixel' bytes. Same contract shape as the real path (binary in,
@@ -157,62 +82,46 @@ def fake_thumbnail(buf: bytes, width: int, height: int) -> bytes:
     return rng.integers(0, 256, size=width * height, dtype=np.uint8).tobytes()
 
 
+# the still-image containers functions/imaging.decode_image reads
+_IMAGE_MAGIC = (
+    b"P6", b"P5", b"BM", b"\x89PNG", b"\xff\xd8\xff", b"GIF87a", b"GIF89a", b"II*\x00", b"MM\x00*"
+)
+
+
 def with_thumbnails(
     df: DataFrame, bytes_col: str = "bytes", width: int = 8, height: int = 8
 ) -> DataFrame:
-    """Append ``thumbnail binary`` via mapInArrow.
+    """Append ``thumbnail binary``, keeping every input column.
 
-    Kernel dispatch (round-4 VERDICT #5 — one multimodal kernel is now
-    REAL, no imaging lib needed):
-
-    * PPM ("P6") / PGM ("P5") / BMP ("BM") / PNG / baseline JPEG / GIF
-      (all still-image containers in the sniffer registry, PNG/JPEG/GIF
-      from round 5): from-spec decode -> nearest-neighbor resize ->
-      P6 PPM re-encode (functions/imaging.py). A malformed payload yields
-      a NULL thumbnail — decode-failure => invalid row, the same
-      F1/make_valid semantics the audio decode path uses.
-    * other containers (webm/...): PIL resize when installed, else the
-      deterministic content-hash fake — the plumbing (batching, null
-      propagation, schema) is identical either way.
+    * still images (PPM / PGM / BMP / PNG / baseline JPEG / GIF / TIFF):
+      from-spec decode -> nearest-neighbor resize -> P6 PPM re-encode
+      (functions/imaging.py). A malformed payload yields a NULL
+      thumbnail — decode-failure => invalid row, the same F1/make_valid
+      semantics the audio decode path uses.
+    * other containers (webm/...): the deterministic content-hash
+      ``fake_thumbnail``.
+    * a null payload yields a NULL thumbnail.
     """
-    from pyspark.sql.types import BinaryType
+    from dataflow_geobeam_spark.functions.imaging import decode_image, encode_ppm, resize_nearest
 
-    from dataflow_geobeam_spark.functions.decode import _binary_views
-    from dataflow_geobeam_spark.functions.imaging import ImageDecodeError, thumbnail_ppm
+    def decode(buf, row):
+        b = payload_bytes(buf)
+        return (decode_image(b) if b.startswith(_IMAGE_MAGIC) else None), b
 
-    keep = list(df.schema.fields)
-    out_schema = StructType(keep + [StructField("thumbnail", BinaryType())])
-    keep_names = [f.name for f in keep]
+    def kernel(img, b, row):
+        if img is None:
+            return [(fake_thumbnail(b, width, height),)]
+        return [(encode_ppm(resize_nearest(img, width, height)),)]
 
-    def _kernel(b: bytes) -> bytes | None:
-        if (
-            b[:2] in (b"P6", b"P5", b"BM")
-            or b[:4] == b"\x89PNG"
-            or b[:3] == b"\xff\xd8\xff"
-            or b[:6] in (b"GIF87a", b"GIF89a")
-            or b[:4] in (b"II*\x00", b"MM\x00*")
-        ):
-            try:
-                return thumbnail_ppm(b, width, height)
-            except ImageDecodeError:
-                return None  # malformed image payload -> invalid row
-        if _pil is not None:  # pragma: no cover
-            try:
-                return resize_image_stub(b, width, height)
-            except Exception:  # noqa: BLE001 - undecodable image -> fake path
-                pass
-        return fake_thumbnail(b, width, height)
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            names = batch.schema.names
-            bufs = _binary_views(batch.column(names.index(bytes_col)))
-            thumbs = [None if b is None else _kernel(bytes(b)) for b in bufs]
-            arrays = [batch.column(names.index(n)) for n in keep_names]
-            arrays.append(pa.array(thumbs, type=pa.binary()))
-            yield pa.RecordBatch.from_arrays(arrays, names=keep_names + ["thumbnail"])
-
-    return df.mapInArrow(fn, out_schema)
+    return clip_map(
+        df,
+        kernel,
+        [StructField("thumbnail", BinaryType())],
+        passthrough=df.schema.fields,
+        on_error=(None,),
+        bytes_col=bytes_col,
+        decode=decode,
+    )
 
 
 def with_image_embeddings(
@@ -222,103 +131,24 @@ def with_image_embeddings(
     width: int = 8,
     height: int = 6,
 ) -> DataFrame:
-    """(id, embedding array<float>) per DECODABLE image: from-spec decode
+    """(_id, embedding array<float>) per DECODABLE image: from-spec decode
     -> NN-resize -> mean-centered flat pixel vector (width*height*3
-    floats), one mapInArrow pass (functions/imaging.pixel_embedding).
+    floats), one pass (functions/imaging.embed_pixels).
     Undecodable payloads are DROPPED — the near-dup self-join downstream
     requires non-null fixed-dim vectors, and a corrupt image has no
     meaningful pixel identity. The real-model analog swaps the kernel for
     an encoder forward pass; the plumbing is identical."""
-    from pyspark.sql.types import ArrayType, FloatType, StructField, StructType
+    from dataflow_geobeam_spark.functions.imaging import decode_image, embed_pixels
 
-    from dataflow_geobeam_spark.functions.decode import _binary_views
-    from dataflow_geobeam_spark.functions.imaging import ImageDecodeError, pixel_embedding
-
-    id_field = df.schema[id_col].dataType
     in_df = df.select(F.col(id_col).alias("_id"), F.col(bytes_col).alias("_bytes"))
-    out_schema = StructType(
-        [
-            StructField("_id", id_field),
-            StructField("embedding", ArrayType(FloatType()), False),
-        ]
+    return clip_map(
+        in_df,
+        lambda img, _, row: [(embed_pixels(img, width, height),)],
+        [StructField("embedding", ArrayType(FloatType()), False)],
+        passthrough=[StructField("_id", df.schema[id_col].dataType)],
+        bytes_col="_bytes",
+        decode=lambda buf, row: (decode_image(payload_bytes(buf)), None),
     )
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            bufs = _binary_views(batch.column(1))
-            out_ids, out_vecs = [], []
-            for i, b in zip(ids, bufs):
-                if b is None:
-                    continue
-                try:
-                    vec = pixel_embedding(bytes(b), width, height)
-                except ImageDecodeError:
-                    continue
-                out_ids.append(i)
-                out_vecs.append(vec)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_ids, type=batch.schema.field(0).type),
-                    pa.array([v.tolist() for v in out_vecs], type=pa.list_(pa.float32())),
-                ],
-                names=["_id", "embedding"],
-            )
-
-    return in_df.mapInArrow(fn, out_schema)
-
-
-def sample_video_frames_stub(buf: bytes, n_frames: int) -> list[bytes]:
-    """Video frame sampling: requires a real decoder (ffmpeg/PyAV) — not in
-    this container. The deterministic stand-in below chunks the payload."""
-    raise NotImplementedError("video frame sampling requires ffmpeg/PyAV")
-
-
-def with_sampled_frames(
-    df: DataFrame, bytes_col: str = "bytes", id_col: str = "clip_id", n_frames: int = 4
-) -> DataFrame:
-    """1 video row -> n_frames (id, frame_idx, frame binary) rows via
-    mapInArrow — the frame-sample plumbing (schema, 1->N batch expansion,
-    partition locality) with a deterministic chunking kernel standing in
-    for the real decoder. Swapping in ffmpeg changes only the kernel."""
-    from pyspark.sql.types import BinaryType, IntegerType
-
-    from dataflow_geobeam_spark.functions.decode import _binary_views
-
-    id_field = df.schema[id_col].dataType
-    in_df = df.select(F.col(id_col).alias("_id"), F.col(bytes_col).alias("_bytes"))
-    out_schema = StructType(
-        [
-            StructField("_id", id_field),
-            StructField("frame_idx", IntegerType()),
-            StructField("frame", BinaryType()),
-        ]
-    )
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            bufs = _binary_views(batch.column(1))
-            out_ids, out_idx, out_frames = [], [], []
-            for i, b in zip(ids, bufs):
-                if b is None or len(b) == 0:
-                    continue
-                data = bytes(b)
-                step = max(1, len(data) // n_frames)
-                for k in range(min(n_frames, len(data))):
-                    out_ids.append(i)
-                    out_idx.append(k)
-                    out_frames.append(data[k * step : k * step + step])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_ids, type=batch.schema.field(0).type),
-                    pa.array(out_idx, type=pa.int32()),
-                    pa.array(out_frames, type=pa.binary()),
-                ],
-                names=["_id", "frame_idx", "frame"],
-            )
-
-    return in_df.mapInArrow(fn, out_schema)
 
 
 def with_video_block_index(
@@ -326,59 +156,29 @@ def with_video_block_index(
 ) -> DataFrame:
     """1 video row -> N (id, track_number, codec_id, ts_ms, keyframe,
     block_bytes) rows: REAL from-spec EBML/WebM container parse
-    (functions/ebml.py) in one mapInArrow pass — the metadata layer a
+    (functions/ebml.py) in one pass — the metadata layer a
     frame-sampling planner keys on (pick keyframes nearest the sample
-    grid, budget by block size) without decoding a single pixel. Only
-    the in-block pixel decode remains ffmpeg-gated. Malformed payloads
-    drop (F1 semantics)."""
-    from pyspark.sql.types import BooleanType, IntegerType, LongType, StringType
+    grid, budget by block size) without decoding a single pixel.
+    Malformed or null payloads drop (F1 semantics)."""
+    from dataflow_geobeam_spark.functions.ebml import parse_webm_blocks
 
-    from dataflow_geobeam_spark.functions.decode import _binary_views
-    from dataflow_geobeam_spark.functions.ebml import EbmlDecodeError, parse_webm_blocks
+    def kernel(tracks, blocks, row):
+        return [
+            (blk["track"], tracks[blk["track"]], blk["ts_ms"], blk["keyframe"], blk["size"])
+            for blk in blocks
+        ]
 
-    id_field = df.schema[id_col].dataType
-    in_df = df.select(F.col(id_col).alias("_id"), F.col(bytes_col).alias("_bytes"))
-    out_schema = StructType(
+    return clip_map(
+        df.select(id_col, bytes_col),
+        kernel,
         [
-            StructField("_id", id_field),
             StructField("track_number", IntegerType()),
             StructField("codec_id", StringType()),
             StructField("ts_ms", LongType()),
             StructField("keyframe", BooleanType()),
             StructField("block_bytes", LongType()),
-        ]
+        ],
+        passthrough=[StructField(id_col, df.schema[id_col].dataType)],
+        bytes_col=bytes_col,
+        decode=lambda buf, row: parse_webm_blocks(payload_bytes(buf)),
     )
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            bufs = _binary_views(batch.column(1))
-            o_id, o_tr, o_cd, o_ts, o_kf, o_sz = [], [], [], [], [], []
-            for i, b in zip(ids, bufs):
-                if b is None:
-                    continue
-                try:
-                    tracks, blocks = parse_webm_blocks(bytes(b))
-                except EbmlDecodeError:
-                    continue  # malformed container -> dropped row
-                for blk in blocks:
-                    o_id.append(i)
-                    o_tr.append(blk["track"])
-                    o_cd.append(tracks[blk["track"]])
-                    o_ts.append(blk["ts_ms"])
-                    o_kf.append(blk["keyframe"])
-                    o_sz.append(blk["size"])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(o_id, type=batch.schema.field(0).type),
-                    pa.array(o_tr, type=pa.int32()),
-                    pa.array(o_cd, type=pa.string()),
-                    pa.array(o_ts, type=pa.int64()),
-                    pa.array(o_kf, type=pa.bool_()),
-                    pa.array(o_sz, type=pa.int64()),
-                ],
-                names=["_id", "track_number", "codec_id", "ts_ms", "keyframe", "block_bytes"],
-            )
-
-    out = in_df.mapInArrow(fn, out_schema)
-    return out.withColumnRenamed("_id", id_col)

@@ -7,18 +7,19 @@ same contract: one row per file (path, modificationTime, length, content),
 parallel across files. Use for container formats that cannot be
 row-split (a zipped shapefile then; a .tar of audio clips now).
 
-The per-archive -> per-record explode runs in mapInArrow (batched), the
-``read_records`` generator analog.
+The per-archive -> per-record explode runs through ``clip_map`` (Arrow
+batches), the ``read_records`` generator analog.
 """
 
 from __future__ import annotations
 
 import io
+import lzma
 import tarfile
-from collections.abc import Iterator
+import zlib
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
     LongType,
@@ -26,6 +27,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from dataflow_geobeam_spark.functions.decode import clip_map, payload_bytes
 
 MEMBER_SCHEMA = StructType(
     [
@@ -47,37 +50,33 @@ def read_binary_files(
     return reader.load(path_glob)
 
 
+def _read_members(buf, row) -> tuple[list, None]:
+    """Every non-empty file member of one archive as (name, size, bytes),
+    read in full before any is emitted: a corrupt, truncated or empty
+    archive raises ``ValueError`` and yields no member at all."""
+    try:
+        with tarfile.open(fileobj=io.BytesIO(payload_bytes(buf))) as tf:
+            members = [
+                (m.name, m.size, tf.extractfile(m).read())
+                for m in tf.getmembers()
+                if m.isfile() and m.size
+            ]
+    # tarfile's own errors, and what its gzip/bz2/xz readers raise on a cut or corrupt stream
+    except (tarfile.TarError, EOFError, OSError, zlib.error, lzma.LZMAError) as e:
+        raise ValueError(f"tar: {e}") from None
+    return members, None
+
+
 def explode_tar_members(df: DataFrame, content_col: str = "content") -> DataFrame:
     """Archive rows -> one row per tar member (1->N generator, the
     ``read_records`` analog; ``GeodatabaseSource``'s skip-empty behavior at
-    ``geobeam/io.py:410-416`` maps to dropping zero-byte members)."""
-    from dataflow_geobeam_spark.functions.decode import _binary_views
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            names = batch.schema.names
-            paths = batch.column(names.index("path")).to_pylist()
-            bufs = _binary_views(batch.column(names.index(content_col)))
-            out = {"archive": [], "member": [], "size": [], "bytes": []}
-            for p, buf in zip(paths, bufs):
-                if buf is None:
-                    continue
-                with tarfile.open(fileobj=io.BytesIO(bytes(buf))) as tf:
-                    for m in tf.getmembers():
-                        if not m.isfile() or m.size == 0:
-                            continue  # skip null/empty members
-                        out["archive"].append(p)
-                        out["member"].append(m.name)
-                        out["size"].append(m.size)
-                        out["bytes"].append(tf.extractfile(m).read())
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out["archive"], type=pa.string()),
-                    pa.array(out["member"], type=pa.string()),
-                    pa.array(out["size"], type=pa.int64()),
-                    pa.array(out["bytes"], type=pa.binary()),
-                ],
-                names=["archive", "member", "size", "bytes"],
-            )
-
-    return df.select("path", content_col).mapInArrow(fn, MEMBER_SCHEMA)
+    ``geobeam/io.py:410-416`` maps to dropping zero-byte members). A null
+    or unreadable archive drops only its own row."""
+    return clip_map(
+        df.select(F.col("path").alias("archive"), content_col),
+        lambda members, _, row: members,
+        MEMBER_SCHEMA.fields[1:],
+        passthrough=[MEMBER_SCHEMA["archive"]],
+        bytes_col=content_col,
+        decode=_read_members,
+    )

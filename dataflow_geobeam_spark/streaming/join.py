@@ -230,159 +230,3 @@ def stateful_join_apply(
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-
-
-# ---------------------------------------------------------------------------
-# Round-2: the same join on Spark 4's transformWithStateInPandas API
-# ---------------------------------------------------------------------------
-# applyInPandasWithState is the flatMapGroupsWithState-era API; Spark 4's
-# StatefulProcessor adds typed state primitives (ValueState / ListState /
-# MapState), explicit timers, and state TTL. The engine provides BOTH so a
-# user can pick either; tests pin that they emit identical rows for the
-# same input and watermark.
-
-try:  # pragma: no cover - present on pyspark >= 4.0
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    _HAS_TWS = True
-except ImportError:  # pragma: no cover
-    StatefulProcessor = object  # type: ignore[assignment,misc]
-    _HAS_TWS = False
-
-_US = 1_000_000
-
-
-class ClipTranscriptJoinProcessor(StatefulProcessor):
-    """Typed-state form of _stateful_join_fn: ValueState for the clip row,
-    ListState for buffered pre-clip transcripts, an event-time timer for
-    the unmatched emission. Semantics identical: one row per clip, matched
-    with the earliest in-window transcript, else unmatched at timeout."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._clip = handle.getValueState(
-            "clip", "clip_ts_us long, transcript string, emitted boolean"
-        )
-        self._cands = handle.getListState("cands", "t_ts_us long, t_transcript string")
-        # active join-window deadline (ms). transformWithState keeps EVERY
-        # registered timer until it fires or is deleted — unlike
-        # applyInPandasWithState, where setTimeoutTimestamp REPLACES the
-        # previous timeout. Without tracking the active deadline, a timer
-        # anchored on an early buffered transcript (anchor = min cand ts,
-        # which precedes the clip ts) would fire before clip_ts + window and
-        # be treated as the join deadline — emitting a premature unmatched
-        # row and clearing state, silently dropping a still-timely
-        # transcript (round-2 ADVICE, medium).
-        self._deadline = handle.getValueState("deadline", "deadline_ms long")
-        self._handle = handle
-
-    def _emit(self, key, clip_ts_us, transcript, t_transcript, matched):
-        import pandas as pd
-
-        return pd.DataFrame(
-            {
-                "clip_id": [key[0]],
-                "ts": [pd.Timestamp(clip_ts_us, unit="us")],
-                "transcript": [transcript],
-                "t_transcript": [t_transcript],
-                "matched": [matched],
-            }
-        )
-
-    def handleInputRows(self, key, rows, timerValues):
-        import pandas as pd
-
-        clip_ts_us, transcript, emitted = None, None, False
-        if self._clip.exists():
-            clip_ts_us, transcript, emitted = self._clip.get()
-        cands = [(r[0], r[1]) for r in self._cands.get()] if self._cands.exists() else []
-
-        for pdf in rows:
-            for row in pdf.itertuples(index=False):
-                if row.side == "c" and clip_ts_us is None:
-                    clip_ts_us = int(pd.Timestamp(row.ts).value // 1000)
-                    transcript = row.transcript
-                elif row.side == "t":
-                    cands.append((int(pd.Timestamp(row.ts).value // 1000), row.transcript))
-
-        if clip_ts_us is not None:
-            lo, hi = clip_ts_us, clip_ts_us + JOIN_WINDOW_SECONDS * _US
-            in_window = [c for c in cands if lo <= c[0] <= hi]
-            cands = []
-            if not emitted and in_window:
-                t_ts_us, t_transcript = min(in_window)
-                emitted = True
-                yield self._emit(key, clip_ts_us, transcript, t_transcript, True)
-        elif len(cands) > MAX_BUFFERED_TRANSCRIPTS:
-            cands = sorted(cands)[:MAX_BUFFERED_TRANSCRIPTS]
-
-        self._clip.update((clip_ts_us, transcript, emitted))
-        self._cands.clear()
-        if cands:
-            self._cands.put([tuple(c) for c in cands])
-        anchor_us = clip_ts_us if clip_ts_us is not None else (min(c[0] for c in cands) if cands else None)
-        if anchor_us is not None:
-            desired_ms = anchor_us // 1000 + JOIN_WINDOW_SECONDS * 1000 + 1000
-            wm_ms = timerValues.getCurrentWatermarkInMs()
-            new_deadline = max(desired_ms, wm_ms + 1000)
-            prior = self._deadline.get()[0] if self._deadline.exists() else None
-            if prior != new_deadline:
-                if prior is not None:
-                    self._handle.deleteTimer(prior)
-                self._handle.registerTimer(new_deadline)
-                self._deadline.update((new_deadline,))
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        # only the tracked deadline is the join-window deadline; a stale
-        # timer surviving a deleteTimer race (or registered before the clip
-        # arrived and moved the anchor) must NOT evict state early
-        active = self._deadline.get()[0] if self._deadline.exists() else None
-        if active is not None and expiredTimerInfo.getExpiryTimeInMs() != active:
-            return
-        clip_ts_us, transcript, emitted = (None, None, False)
-        if self._clip.exists():
-            clip_ts_us, transcript, emitted = self._clip.get()
-        self._clip.clear()
-        self._cands.clear()
-        self._deadline.clear()
-        if clip_ts_us is not None and not emitted:
-            yield self._emit(key, clip_ts_us, transcript, None, False)
-
-    def close(self) -> None:
-        pass
-
-
-def stateful_join_tws(
-    clips: DataFrame,
-    transcripts: DataFrame,
-    watermark: str = "2 minutes",
-) -> DataFrame:
-    """transformWithStateInPandas form of stateful_join_apply (Spark 4
-    StatefulProcessor: typed state + timers). Same union-tag input shape,
-    same output schema and semantics.
-
-    Runtime requirements beyond applyInPandasWithState: the RocksDB state
-    store provider (spark.sql.streaming.stateStore.providerClass) and the
-    google.protobuf package (the TWS state-server wire protocol) — the
-    latter is absent in this sandbox, so the equivalence test is
-    skipif-gated the same way the soundfile codec tests are."""
-    if not _HAS_TWS:  # pragma: no cover
-        raise NotImplementedError("transformWithStateInPandas requires pyspark >= 4.0")
-    c = clips.select(
-        F.col("clip_id"), F.lit("c").alias("side"), F.col("ts"), F.col("transcript")
-    )
-    t = transcripts.select(
-        F.col("t_clip_id").alias("clip_id"),
-        F.lit("t").alias("side"),
-        F.col("t_ts").alias("ts"),
-        F.col("t_transcript").alias("transcript"),
-    )
-    unioned = c.unionByName(t).withWatermark("ts", watermark)
-    return unioned.groupBy("clip_id").transformWithStateInPandas(
-        ClipTranscriptJoinProcessor(),
-        outputStructType=JOIN_OUT_SCHEMA,
-        outputMode="Append",
-        timeMode="EventTime",
-    )

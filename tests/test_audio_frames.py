@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from dataflow_geobeam_spark import codecs
@@ -97,23 +96,6 @@ def test_container_sniffing(spark):
     df = spark.createDataFrame(rows, "bytes binary")
     got = [r.t for r in df.select(multimodal.sniff_container("bytes").alias("t")).collect()]
     assert got == ["riff", "png", "jpeg", "unknown"]
-
-
-def test_feature_vector_plumbing_deterministic(spark):
-    rows = [(b"payload-1",), (b"payload-2",), (None,)]
-    df = spark.createDataFrame(rows, "bytes binary")
-    out = multimodal.with_feature_vectors(df, dim=8).collect()
-    by_payload = {bytes(r.bytes) if r.bytes is not None else None: r.features for r in out}
-    assert by_payload[None] is None
-    assert len(by_payload[b"payload-1"]) == 8
-    # deterministic: same payload -> same vector, pure function of content
-    want = multimodal.fake_feature_vector(b"payload-1", 8)
-    assert np.allclose(by_payload[b"payload-1"], want)
-
-
-def test_image_decode_is_clearly_stubbed():
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_image_stub(b"\x89PNG....")
 
 
 def test_trim_silence(spark):

@@ -1,16 +1,22 @@
-"""The clip-kernel runner (``functions.decode.clip_map``) and its failure rule.
+"""The binary-payload runner (``functions.decode.clip_map``) and its failure rule.
 
-Every audio ``with_*`` wrapper runs through ``clip_map``. A clip the codecs
-reject becomes a null/fill row or no row, as the wrapper documents, and the
-job carries on; an exception raised by a kernel fails the job.
+Every audio, image, video and tar wrapper runs through ``clip_map``. A
+payload the decoder rejects becomes a null/fill row or no row, as the
+wrapper documents, and the job carries on; an exception raised by a kernel
+fails the job.
 """
 
 from __future__ import annotations
 
+import io
+import pathlib
 import struct
+import tarfile
 
+import numpy as np
 import pytest
 from pyspark.errors import PythonException
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
     DoubleType,
@@ -22,8 +28,12 @@ from pyspark.sql.types import (
 
 from dataflow_geobeam_spark import codecs
 from dataflow_geobeam_spark.audio_synth import synth_pcm
+from dataflow_geobeam_spark.fixtures import independent as ind
 from dataflow_geobeam_spark.functions import audio as A
+from dataflow_geobeam_spark.functions import decode, imaging
+from dataflow_geobeam_spark.functions import multimodal as mm
 from dataflow_geobeam_spark.functions.decode import clip_map, with_decoded_metrics, with_decoded_pcm
+from dataflow_geobeam_spark.sources import binaryfiles
 
 CLIPS = StructType(
     [
@@ -141,3 +151,111 @@ def test_explode_passthrough_and_digest(spark):
     assert sorted((r.clip_id, r.k, r.b_md5) for r in dig.collect()) == sorted(
         (cid, k, hashlib.md5(bytes([k])).hexdigest()) for cid, k in want
     )
+
+
+def _tar(members) -> bytes:
+    buf = io.BytesIO()
+    with tarfile.open(fileobj=buf, mode="w") as tf:
+        for name, data in members:
+            info = tarfile.TarInfo(name)
+            info.size = len(data)
+            tf.addfile(info, io.BytesIO(data))
+    return buf.getvalue()
+
+
+def _payloads(spark):
+    img = np.random.default_rng(3).integers(0, 256, (10, 12, 3), dtype=np.uint8)
+    png, jpeg, gif = ind.png_bytes(img), ind.jpeg_bytes(img), ind.gif_bytes(img)
+    webm = ind.webm_bytes([(1, "V_VP8")], [(0, [(1, 0, True, b"k" * 30), (1, 40, False, b"d" * 9)])])
+    tar = _tar([("a.wav", b"A" * 3000), ("b.wav", b"B" * 3000)])
+    rows = [
+        ("ok_png", png),
+        ("ok_jpeg", jpeg),
+        ("ok_gif", gif),
+        ("ok_webm", webm),
+        ("ok_tar", tar),
+        ("null", None),
+        ("empty", b""),
+        ("trunc_png", png[: len(png) // 2]),
+        ("trunc_jpeg", jpeg[: len(jpeg) // 2]),
+        ("trunc_gif", gif[: len(gif) // 2]),
+        ("garbage_webm", webm[:4] + b"\xff" * 40),
+        ("corrupt_tar", tar[:2048]),  # first member header intact, its data cut
+    ]
+    return spark.createDataFrame(rows, "id string, bytes binary")
+
+
+# (name, call, output id column, {surviving id: output rows}): every other
+# payload is dropped
+DROPPING = [
+    (
+        "with_image_embeddings",
+        lambda df: mm.with_image_embeddings(df, "id"),
+        "_id",
+        {"ok_png": 1, "ok_jpeg": 1, "ok_gif": 1},
+    ),
+    (
+        "with_video_block_index",
+        lambda df: mm.with_video_block_index(df, id_col="id"),
+        "id",
+        {"ok_webm": 2},
+    ),
+    (
+        "explode_tar_members",
+        lambda df: binaryfiles.explode_tar_members(
+            df.select(F.col("id").alias("path"), F.col("bytes").alias("content"))
+        ),
+        "archive",
+        {"ok_tar": 2},
+    ),
+]
+
+
+@pytest.mark.parametrize("name,call,id_col,want", DROPPING, ids=[w[0] for w in DROPPING])
+def test_dirty_payloads_drop_only_their_own_row(spark, name, call, id_col, want):
+    rows = call(_payloads(spark)).collect()
+    got: dict = {}
+    for r in rows:
+        got[r[id_col]] = got.get(r[id_col], 0) + 1
+    assert got == want, name
+
+
+def test_dirty_images_get_null_thumbnails(spark):
+    """Decodable images get a real 4x4 PPM, images that fail to decode a
+    null, and non-image containers the deterministic fake thumbnail."""
+    df = _payloads(spark)
+    rows = {r.id: r for r in mm.with_thumbnails(df, width=4, height=4).collect()}
+    assert sorted(rows) == sorted(r.id for r in df.collect())
+    for i, r in rows.items():
+        if i in ("ok_png", "ok_jpeg", "ok_gif"):
+            assert r.thumbnail.startswith(b"P6\n4 4\n255\n"), i
+        elif i == "null" or i.startswith("trunc_"):
+            assert r.thumbnail is None, i
+        else:
+            assert r.thumbnail == mm.fake_thumbnail(bytes(r.bytes), 4, 4), i
+
+
+def test_image_kernel_error_fails_the_job(spark, monkeypatch):
+    def boom(img, width, height):
+        return 1 / 0
+
+    monkeypatch.setattr(imaging, "resize_nearest", boom)
+    out = mm.with_thumbnails(_payloads(spark).where("id = 'ok_png'"))
+    with pytest.raises(PythonException, match="ZeroDivisionError"):
+        out.collect()
+
+
+def test_one_arrow_runner_and_no_blanket_except():
+    """Every binary-payload pass goes through clip_map: the only
+    ``.mapInArrow(`` in functions/ and sources/ is its own, and no kernel
+    module hides errors behind ``except Exception``."""
+    pkg = pathlib.Path(decode.__file__).parents[1]
+    calls = {
+        str(p.relative_to(pkg)): n
+        for sub in ("functions", "sources")
+        for p in sorted((pkg / sub).rglob("*.py"))
+        if (n := p.read_text().count(".mapInArrow("))
+    }
+    assert calls == {"functions/decode.py": 1}
+    blanket = [p.name for p in (pkg / "functions").rglob("*.py") if "except Exception" in p.read_text()]
+    assert blanket == []

@@ -2,10 +2,9 @@
 
 Covers: LSH-bucketed embedding near-dups (plan + correctness), single-scan
 mapInArrow sketching at dim=768, TakeOrderedAndProject top-k, null-safe
-exact-dedup keys, simhash long assembly, stateful-join in-window buffering
-and the transformWithStateInPandas variant (protobuf-gated), Hadoop-FS
-sink IO (file:// scheme), sink time travel/compaction/schema evolution,
-IVF ANN recall + plan shape, multimodal resize/frame-sample plumbing,
+exact-dedup keys, simhash long assembly, stateful-join in-window buffering,
+Hadoop-FS sink IO (file:// scheme), sink time travel/compaction/schema
+evolution, IVF ANN recall + plan shape, multimodal thumbnail plumbing,
 text metrics (stopword/BPE-ish/rolling hash), explode_frames hop guard.
 """
 
@@ -15,7 +14,6 @@ import os
 import time
 
 import numpy as np
-import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -321,7 +319,7 @@ def test_ivf_assign_one_cell_per_vector(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# multimodal: resize + frame-sample plumbing (r2)
+# multimodal: thumbnail plumbing (r2)
 # ---------------------------------------------------------------------------
 
 
@@ -337,33 +335,6 @@ def test_thumbnail_plumbing(spark):
     # deterministic: same input -> same thumbnail
     again = {r.id: r.thumbnail for r in mm.with_thumbnails(df, width=4, height=4).collect()}
     assert got == again
-
-
-def test_frame_sample_plumbing(spark):
-    from dataflow_geobeam_spark.functions import multimodal as mm
-
-    rows = [("v1", bytes(range(100))), ("v2", b""), ("v3", None)]
-    df = spark.createDataFrame(rows, "clip_id string, bytes binary")
-    out = mm.with_sampled_frames(df, n_frames=4).collect()
-    by_id: dict = {}
-    for r in out:
-        by_id.setdefault(r._id, []).append(r)
-    assert set(by_id) == {"v1"}                  # empty/null rows emit no frames
-    frames = sorted(by_id["v1"], key=lambda r: r.frame_idx)
-    assert [f.frame_idx for f in frames] == [0, 1, 2, 3]
-    assert all(len(f.frame) == 25 for f in frames)
-    assert b"".join(f.frame for f in frames) == bytes(range(100))
-
-
-def test_image_stubs_raise_without_pil(spark):
-    from dataflow_geobeam_spark.functions import multimodal as mm
-
-    if mm._pil is not None:
-        pytest.skip("PIL present: real path active")
-    with pytest.raises(NotImplementedError):
-        mm.decode_image_stub(b"\x89PNG....")
-    with pytest.raises(NotImplementedError):
-        mm.resize_image_stub(b"\x89PNG....", 8, 8)
 
 
 # ---------------------------------------------------------------------------
@@ -394,80 +365,6 @@ def test_text_metrics_functions(spark):
     # but fingerprint (content hash of normalized text) also differs; the
     # rolling property: same prefix evolves incrementally
     assert 0 <= a.fp < (1 << 31)
-
-
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except Exception:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithState's state-server protocol needs google.protobuf "
-    "(not in this container); runs the day the dependency appears",
-)
-def test_stateful_join_tws_matches_apply(spark, fixture_dir, tmp_path):
-    """The transformWithStateInPandas implementation must emit the same
-    matched rows as the applyInPandasWithState one for the same input
-    stream (unmatched timeout rows depend on final-watermark handling at
-    stream end, so the pinned contract is the matched set + schema)."""
-    import os
-
-    from dataflow_geobeam_spark.sources.clips import TRANSCRIPTS_SCHEMA
-    from dataflow_geobeam_spark.streaming import join as sjoin
-
-    cdir, tdir = str(tmp_path / "c"), str(tmp_path / "t")
-    clips = spark.read.parquet(os.path.join(fixture_dir, "clips.parquet")).select(
-        "clip_id", "ts", "transcript"
-    ).limit(200)
-    clips.repartition(2, "clip_id").write.mode("overwrite").parquet(cdir)
-    tr = spark.read.parquet(os.path.join(fixture_dir, "transcripts_late.parquet"))
-    tr.repartition(2, "t_clip_id").write.mode("overwrite").parquet(tdir)
-
-    def run(impl, name):
-        cs = (
-            spark.readStream.schema("clip_id string, ts timestamp, transcript string")
-            .option("maxFilesPerTrigger", "1").parquet(cdir)
-        )
-        ts = (
-            spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-            .option("maxFilesPerTrigger", "1").parquet(tdir)
-        )
-        out = impl(cs, ts)
-        q = (
-            out.writeStream.format("memory").queryName(name).outputMode("append")
-            .option("checkpointLocation", str(tmp_path / f"ck_{name}"))
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination(600)
-        return {
-            (r.clip_id, r.t_transcript)
-            for r in spark.sql(f"SELECT * FROM {name}").collect()
-            if r.matched
-        }
-
-    import time as _time
-
-    a = run(sjoin.stateful_join_apply, f"tws_a_{int(_time.time()*1000)}")
-    # transformWithState requires the RocksDB state store provider
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        b = run(sjoin.stateful_join_tws, f"tws_b_{int(_time.time()*1000)}")
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    assert a == b
-    assert len(b) > 0
 
 
 # ---------------------------------------------------------------------------

@@ -212,178 +212,3 @@ def test_streaming_md_splice_preserves_later_sections(tmp_path, monkeypatch):
     assert "## Later section added by another tool" in after
     assert "must survive" in after
     assert after.count(bs.MD_HEADER) == 1
-
-
-# ---------------------------------------------------------------------------
-# TWS processor timer hygiene (ADVICE medium): testable without the TWS
-# runtime — the StatefulProcessor methods are plain Python over fake
-# handle/state/timer objects
-# ---------------------------------------------------------------------------
-
-
-class _FakeValueState:
-    def __init__(self):
-        self._v = None
-
-    def exists(self):
-        return self._v is not None
-
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = tuple(v)
-
-    def clear(self):
-        self._v = None
-
-
-class _FakeListState:
-    def __init__(self):
-        self._rows = []
-
-    def exists(self):
-        return bool(self._rows)
-
-    def get(self):
-        return list(self._rows)
-
-    def put(self, rows):
-        self._rows = [tuple(r) for r in rows]
-
-    def clear(self):
-        self._rows = []
-
-
-class _FakeHandle:
-    def __init__(self):
-        self.states = {}
-        self.timers = []  # live timers
-        self.deleted = []
-
-    def getValueState(self, name, schema):
-        return self.states.setdefault(name, _FakeValueState())
-
-    def getListState(self, name, schema):
-        return self.states.setdefault(name, _FakeListState())
-
-    def registerTimer(self, ts):
-        self.timers.append(ts)
-
-    def deleteTimer(self, ts):
-        self.deleted.append(ts)
-        if ts in self.timers:
-            self.timers.remove(ts)
-
-
-class _FakeTimerValues:
-    def __init__(self, wm_ms):
-        self._wm = wm_ms
-
-    def getCurrentWatermarkInMs(self):
-        return self._wm
-
-
-class _FakeExpiredTimerInfo:
-    def __init__(self, ts):
-        self._ts = ts
-
-    def getExpiryTimeInMs(self):
-        return self._ts
-
-
-def _pdf(rows):
-    import pandas as pd
-
-    return pd.DataFrame(rows, columns=["clip_id", "side", "ts", "transcript"])
-
-
-def test_tws_stale_timer_does_not_evict_state():
-    """An early buffered transcript registers a timer anchored BEFORE the
-    clip's deadline; when the clip arrives the deadline moves. A stale
-    expiry (the transcript-anchored timer surviving a deleteTimer race)
-    must be ignored — round 2 emitted a premature unmatched row and
-    dropped the state (ADVICE medium)."""
-    import pandas as pd
-
-    from dataflow_geobeam_spark.streaming.join import (
-        JOIN_WINDOW_SECONDS,
-        ClipTranscriptJoinProcessor,
-    )
-
-    proc = ClipTranscriptJoinProcessor()
-    handle = _FakeHandle()
-    proc.init(handle)
-    key = ("clip-1",)
-
-    # batch 1: out-of-window EARLY transcript only (200 s before the clip)
-    t_early = pd.Timestamp("2026-01-01 00:00:00")
-    out1 = list(
-        proc.handleInputRows(key, [_pdf([["clip-1", "t", t_early, "early words"]])],
-                             _FakeTimerValues(wm_ms=0))
-    )
-    assert out1 == []
-    assert len(handle.timers) == 1
-    stale_deadline = handle.timers[0]
-
-    # batch 2: the clip arrives 400 s later -> new deadline, old timer deleted
-    t_clip = pd.Timestamp("2026-01-01 00:06:40")
-    out2 = list(
-        proc.handleInputRows(key, [_pdf([["clip-1", "c", t_clip, "clip words"]])],
-                             _FakeTimerValues(wm_ms=0))
-    )
-    assert out2 == []  # early transcript was out of window; no match yet
-    assert stale_deadline in handle.deleted
-    assert len(handle.timers) == 1
-    active_deadline = handle.timers[0]
-    assert active_deadline > stale_deadline
-
-    # a stale expiry must be a no-op: no output, state intact
-    out3 = list(
-        proc.handleExpiredTimer(key, _FakeTimerValues(wm_ms=stale_deadline),
-                                _FakeExpiredTimerInfo(stale_deadline))
-    )
-    assert out3 == []
-    assert handle.states["clip"].exists()
-
-    # an in-window transcript arriving AFTER the stale expiry still matches
-    t_ok = t_clip + pd.Timedelta(seconds=60)
-    out4 = list(
-        proc.handleInputRows(key, [_pdf([["clip-1", "t", t_ok, "clip words"]])],
-                             _FakeTimerValues(wm_ms=0))
-    )
-    assert len(out4) == 1 and bool(out4[0]["matched"][0]) is True
-
-    # the ACTIVE deadline firing after emission evicts silently
-    out5 = list(
-        proc.handleExpiredTimer(key, _FakeTimerValues(wm_ms=active_deadline),
-                                _FakeExpiredTimerInfo(active_deadline))
-    )
-    assert out5 == []
-    assert not handle.states["clip"].exists()
-    assert JOIN_WINDOW_SECONDS == 300
-
-
-def test_tws_active_deadline_emits_unmatched():
-    import pandas as pd
-
-    from dataflow_geobeam_spark.streaming.join import ClipTranscriptJoinProcessor
-
-    proc = ClipTranscriptJoinProcessor()
-    handle = _FakeHandle()
-    proc.init(handle)
-    key = ("clip-2",)
-    t_clip = pd.Timestamp("2026-01-01 00:00:00")
-    list(
-        proc.handleInputRows(key, [_pdf([["clip-2", "c", t_clip, "words"]])],
-                             _FakeTimerValues(wm_ms=0))
-    )
-    [deadline] = handle.timers
-    out = list(
-        proc.handleExpiredTimer(key, _FakeTimerValues(wm_ms=deadline),
-                                _FakeExpiredTimerInfo(deadline))
-    )
-    assert len(out) == 1
-    assert bool(out[0]["matched"][0]) is False
-    assert out[0]["t_transcript"][0] is None
-    assert not handle.states["clip"].exists()

@@ -51,6 +51,32 @@ def test_binaryfile_tar_explode(spark, tmp_path):
     assert got == {("a.wav", b"AAA1"), ("b.wav", b"BB22")}  # empty member skipped
 
 
+def test_corrupt_tar_drops_only_its_own_archive(spark, tmp_path):
+    """An empty, garbage or truncated archive yields no member rows (not a
+    partial list) and the good archive next to it still explodes."""
+    buf = io.BytesIO()
+    with tarfile.open(fileobj=buf, mode="w") as tf:
+        for name in ("a.wav", "b.wav"):
+            info = tarfile.TarInfo(name)
+            info.size = 2500
+            tf.addfile(info, io.BytesIO(b"x" * 2500))
+    good = buf.getvalue()
+    assert len(good) > 5000
+    for name, data in [
+        ("good.tar", good),
+        ("empty.tar", b""),
+        ("garbage.tar", b"garbage"),
+        ("truncated.tar", good[:2048]),
+    ]:
+        (tmp_path / name).write_bytes(data)
+    files = binaryfiles.read_binary_files(spark, str(tmp_path), "*.tar")
+    members = binaryfiles.explode_tar_members(files).collect()
+    assert sorted((r.archive.rsplit("/", 1)[-1], r.member) for r in members) == [
+        ("good.tar", "a.wav"),
+        ("good.tar", "b.wav"),
+    ]
+
+
 def test_schema_inference_and_ddl(spark, fixture_dir):
     inferred = schema_mod.infer_schema(spark, f"{fixture_dir}/clips.parquet")
     names = [f.name for f in inferred.fields]
