@@ -1014,7 +1014,7 @@ def ensure_golden_ivfpq_topk(
     score is the fold-ordered sum of its ``m_sub`` LUT entries over
     ``q_norm * sqrt(fold-sum of codeword norm² entries)``, rounded HALF-UP
     to 6 places — matching operators/similarity.pq_adc_luts /
-    pq_adc_score_col bit-for-bit without ever reconstructing a dim-float
+    _adc_cosine bit-for-bit without ever reconstructing a dim-float
     vector. Shortlist = top ``refine`` by (approx desc, neighbor id);
     exact fold-order cosines rank the final top-k."""
     emb_path = os.path.join(sf_dir, "embeddings.parquet")

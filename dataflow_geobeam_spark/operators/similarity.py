@@ -1,6 +1,6 @@
 """Similarity search over embedding columns (array<float>).
 
-Three paths, per the judge's checklist:
+Five entry points:
 
 * ``brute_force_topk`` — exact cosine top-k: broadcast the (small) query
   set against the corpus, rank with a window. Correctness baseline; cost
@@ -12,44 +12,74 @@ Three paths, per the judge's checklist:
   measure it against the brute-force baseline rather than asserting
   equality.
 * ``near_dup_pairs`` — the self-join form of the same bucketing, for
-  embedding near-duplicate detection (used by operators/dedup).
+  embedding near-duplicate detection (used by operators/dedup). Rows whose
+  vector is null or not ``dim`` long are dropped, not fatal.
 * ``ivf_topk`` — inverted-file probing: corpus assigned to Voronoi cells
   of seeded centroids (one matmul pass), queries probe their n_probe
   nearest cells, exact cosine re-ranks within probed cells.
+* ``ivfpq_topk`` — IVF cells + product-quantized (PQ) candidate scoring:
+  one fused corpus scan (``ivfpq_probe_prune``) assigns cells, encodes,
+  expands each row to the queries probing its cell, scores with ADC
+  lookup tables and keeps a per-partition top-``refine`` with exact
+  cosines; a window tail picks top-k.
 
-Round-2 rewrite (VERDICT "What's wrong" #3): sketching is ONE mapInArrow
-pass computing all ``n_tables`` sketches per Arrow batch with a single
-numpy matmul. Hyperplanes ship to workers inside the function closure
-(broadcast by Spark's task serializer), never as plan literals — round 1
-baked ``n_tables * n_planes * dim`` float literals into the plan (plan
-explosion at dim=768) and unioned 24 separate corpus scans. Now the plan
-has exactly one corpus scan and is dim-independent. ``dim`` is a plain
-parameter — no driver-side ``.first()`` probe.
+Every per-batch kernel is one mapInArrow pass (four in all: the sketch,
+the near-dup prefilter, the IVF assignment and the IVF-PQ scan) that turns
+its Arrow vector column into a matrix with ``_vectors`` and runs one numpy
+matmul per batch. Hyperplanes, centroids and codebooks ship to workers
+inside the function closure (broadcast by Spark's task serializer), never
+as plan literals, so the plan has one corpus scan and is dim-independent.
+``dim`` is a plain parameter — no driver-side ``.first()`` probe.
 
-Hyperplanes derive from a seeded Philox generator, so buckets are
-deterministic across runs and machines.
+Hyperplanes and centroids derive from seeded Philox generators, so buckets
+and cells are deterministic across runs and machines.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as sqltypes
 from pyspark.sql.window import Window
 
 
-def cosine_expr(a: Column, b: Column) -> Column:
-    """Cosine similarity between two float arrays — pure Catalyst
-    (zip_with + aggregate), computed in double."""
-    dot = F.aggregate(
+def _vectors(vecs, dim: int | None, vec_col: str) -> np.ndarray:
+    """An Arrow list column (one batch, or a collected chunked column) as an
+    ``(n, dim)`` float64 matrix; ``dim=None`` takes the first row's length.
+    Raises ``ValueError`` unless the column holds exactly ``n * dim`` values
+    (a null or wrong-length vector breaks that)."""
+    if isinstance(vecs, pa.ChunkedArray):
+        vecs = vecs.combine_chunks()
+    n = len(vecs)
+    flat = vecs.flatten().to_numpy(zero_copy_only=False)
+    if dim is None:
+        dim = len(vecs[0]) if n else 0
+    if flat.size != n * dim:
+        raise ValueError(
+            f"{vec_col}: expected fixed dim={dim}, got {flat.size} values for {n} rows"
+        )
+    return flat.reshape(n, dim).astype(np.float64, copy=False)
+
+
+def _dot(a: Column, b: Column) -> Column:
+    """Left-to-right fold of the element products, in double."""
+    return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v))
-    return dot / (na * nb)
+
+
+def _norm(c: Column) -> Column:
+    return F.sqrt(F.aggregate(c, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v))
+
+
+def cosine_expr(a: Column, b: Column) -> Column:
+    """Cosine similarity between two float arrays — pure Catalyst
+    (zip_with + aggregate), computed in double."""
+    return _dot(a, b) / (_norm(a) * _norm(b))
 
 
 def brute_force_topk(
@@ -68,11 +98,31 @@ def brute_force_topk(
         .withColumn("cosine", F.round(cosine_expr(F.col("q_vec"), F.col("c_vec")), 6))
         .select("query_id", "neighbor_id", "cosine")
     )
+    return _rank_topk(scored, k)
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, cosine, rank): each query's ``k`` best
+    neighbours by ``cosine``, ties broken by neighbor id."""
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "cosine", "rank")
+    )
+
+
+def _rerank_topk(
+    cand: DataFrame, corpus: DataFrame, queries: DataFrame, k: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """Exact re-rank of (query_id, neighbor_id) candidates: join both
+    vectors back by id (the query side broadcast), score with
+    ``cosine_expr``, keep the top ``k`` per query."""
+    q_vecs = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
+    c_vecs = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
+    scored = cand.join(F.broadcast(q_vecs), "query_id").join(c_vecs, "neighbor_id")
+    return _rank_topk(
+        scored.withColumn("cosine", F.round(cosine_expr(F.col("q_vec"), F.col("c_vec")), 6)), k
     )
 
 
@@ -147,21 +197,12 @@ def sketch_buckets(
     )
 
     def _sketch(batches):
-        import pyarrow as pa
-
         for batch in batches:
             ids = batch.column(0)
-            vecs = batch.column(1)
-            if vecs.null_count:
+            if batch.column(1).null_count:
                 raise ValueError(f"{vec_col}: null vectors are not sketchable")
-            flat = vecs.flatten().to_numpy(zero_copy_only=False)
-            if flat.size != len(batch) * dim:
-                raise ValueError(
-                    f"{vec_col}: expected fixed dim={dim}, got "
-                    f"{flat.size} values for {len(batch)} rows"
-                )
+            v = _vectors(batch.column(1), dim, vec_col)
             n = len(batch)
-            v = flat.reshape(n, dim).astype(np.float64, copy=False)
             bits = (v @ planes.T) > 0  # (n, nt*np_)
             buckets = bits.reshape(n, nt, np_).astype(np.int64) @ weights  # (n, nt)
             # table-major layout: [all ids @ table 0, all ids @ table 1, ...]
@@ -214,16 +255,7 @@ def lsh_topk(
         .select("query_id", "neighbor_id")
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    q_vecs = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
-    c_vecs = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
-    scored = cand.join(F.broadcast(q_vecs), "query_id").join(c_vecs, "neighbor_id")
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("cosine", F.round(cosine_expr(F.col("q_vec"), F.col("c_vec")), 6))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _rerank_topk(cand, corpus, queries, k, id_col, vec_col)
 
 
 # auto-cap policy for the hot-bucket guard (round-4 ADVICE fix): a fixed
@@ -296,30 +328,21 @@ def _prefilter_pairs(
     vectors => NaN) or whose ids miss the map are KEPT — only a clear
     below-margin miss drops a row, so the exact verify downstream sees a
     strict superset of its true output."""
-    import numpy as np
-
-    pdf = df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")).toPandas()
-    if len(pdf) == 0:
+    tbl = df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")).toArrow()
+    if tbl.num_rows == 0:
         return pairs  # empty corpus: nothing to screen against
-    mat = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf["_v"]])
-    if mat.ndim != 2 or mat.shape[1] != dim:
-        raise ValueError(
-            f"prefilter: expected fixed dim={dim}, got matrix shape {mat.shape}"
-        )
+    mat = _vectors(tbl.column(1), dim, vec_col)
     norms = np.sqrt((mat * mat).sum(axis=1))
     # fully vectorized id -> row lookup: sorted id array + searchsorted
     # (no per-value Python dict hits — the batch stream can be millions
     # of rows); caller guarantees an integral id column
-    ids = np.asarray(pdf["_id"].to_numpy(), dtype=np.int64)
+    ids = tbl.column(0).to_numpy().astype(np.int64, copy=False)
     order = np.argsort(ids, kind="stable")
     ids_sorted, perm = ids[order], order
     bc = df.sparkSession.sparkContext.broadcast((ids_sorted, perm, mat, norms))
     out_schema = pairs.schema
 
     def fn(batches):
-        import numpy as np
-        import pyarrow as pa
-
         ids_s, pm, m, nr = bc.value
 
         def rows_of(col):
@@ -420,13 +443,19 @@ def near_dup_pairs(
     100 TB case — there, raise n_planes per the docstring instead).
     ``prefilter=None`` disables unconditionally.
 
+    A row whose vector is null or not ``dim`` long is dropped before the
+    sketch, so it can neither fail the job nor pair with anything; the
+    counts behind the auto features still see the raw input.
+
     Output: (id_a, id_b, cosine), id_a < id_b.
     """
     if n_planes == "auto":
         if corpus_n is None:
             corpus_n = df.count()  # one column-pruned pass, driver-side scalar
         n_planes = recommended_n_planes(corpus_n)
-    sk = sketch_buckets(df, id_col, vec_col, dim, n_planes, n_tables, seed)
+    # the sketch, the prefilter and the verify all read these rows
+    clean = df.where(F.size(F.col(vec_col)) == dim)
+    sk = sketch_buckets(clean, id_col, vec_col, dim, n_planes, n_tables, seed)
     if max_bucket_size is not None:
         # hot-bucket guard, ON BY DEFAULT (see operators/dedup.
         # minhash_lsh_pairs for the full rationale): a (table, bucket) of B
@@ -469,7 +498,7 @@ def near_dup_pairs(
         # so the (much larger) pre-distinct stream costs less to filter
         # than to exchange — the distinct then runs on ~true-pair volume
         collided = _prefilter_pairs(
-            df, collided, id_col, vec_col, dim, threshold - PREFILTER_MARGIN
+            clean, collided, id_col, vec_col, dim, threshold - PREFILTER_MARGIN
         )
     cand = collided.dropDuplicates(["id_a", "id_b"])
     # Round-6 (guide §1.2 per-task work): the interpreted higher-order
@@ -479,26 +508,17 @@ def near_dup_pairs(
     # work is then just the dot fold. cosine = dot / (n_a * n_b) with
     # n_a/n_b the identical sqrt-of-fold doubles, so the result is
     # bit-identical to the fused cosine_expr it replaces.
-    def _norm(c: Column) -> Column:
-        return F.sqrt(
-            F.aggregate(c, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v)
-        )
-
-    va = df.select(
+    va = clean.select(
         F.col(id_col).alias("id_a"),
         F.col(vec_col).alias("v_a"),
         _norm(F.col(vec_col)).alias("_na"),
     )
-    vb = df.select(
+    vb = clean.select(
         F.col(id_col).alias("id_b"),
         F.col(vec_col).alias("v_b"),
         _norm(F.col(vec_col)).alias("_nb"),
     )
-    dot = F.aggregate(
-        F.zip_with("v_a", "v_b", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    dot = _dot(F.col("v_a"), F.col("v_b"))
     return (
         cand.join(va, "id_a")
         .join(vb, "id_b")
@@ -589,6 +609,19 @@ def _centroids(dim: int, n_cells: int, seed: int = 42) -> np.ndarray:
     return c / np.linalg.norm(c, axis=1, keepdims=True)
 
 
+def _nearest_cells(v: np.ndarray, cents: np.ndarray, n_probe: int) -> np.ndarray:
+    """(n, n_probe) cells of each row of ``v``, nearest centroid first by
+    cosine (a zero vector scores 0 everywhere). One probe takes ``argmax``,
+    several take ``argsort(-sims)[:, :n_probe]``; every IVF path assigns
+    through here, so the corpus cells and the query probe sets agree."""
+    norms = np.linalg.norm(v, axis=1, keepdims=True)
+    norms[norms == 0] = 1.0
+    sims = (v / norms) @ cents.T  # (n, n_cells)
+    if n_probe == 1:
+        return sims.argmax(axis=1)[:, None]
+    return np.argsort(-sims, axis=1)[:, :n_probe]
+
+
 def ivf_assign(
     df: DataFrame,
     id_col: str,
@@ -611,36 +644,16 @@ def ivf_assign(
             sqltypes.StructField("cell", sqltypes.IntegerType(), False),
         ]
     )
-    np_probe = n_probe
 
     def _assign(batches):
-        import pyarrow as pa
-
         for batch in batches:
-            ids = batch.column(0)
-            vecs = batch.column(1)
-            flat = vecs.flatten().to_numpy(zero_copy_only=False)
-            n = len(batch)
-            if flat.size != n * dim:
-                raise ValueError(f"{vec_col}: expected fixed dim={dim}")
-            v = flat.reshape(n, dim).astype(np.float64, copy=False)
-            norms = np.linalg.norm(v, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            sims = (v / norms) @ cents.T  # (n, n_cells)
-            if np_probe == 1:
-                cells = sims.argmax(axis=1).astype(np.int32)
-                yield pa.RecordBatch.from_arrays(
-                    [ids, pa.array(cells)], names=["_id", "cell"]
-                )
-            else:
-                top = np.argsort(-sims, axis=1)[:, :np_probe].astype(np.int32)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.concat_arrays([ids] * np_probe),
-                        pa.array(top.T.reshape(-1)),
-                    ],
-                    names=["_id", "cell"],
-                )
+            v = _vectors(batch.column(1), dim, vec_col)
+            top = _nearest_cells(v, cents, n_probe).astype(np.int32)
+            # probe-major layout: [all ids @ probe 0, all ids @ probe 1, ...]
+            yield pa.RecordBatch.from_arrays(
+                [pa.concat_arrays([batch.column(0)] * n_probe), pa.array(top.T.reshape(-1))],
+                names=["_id", "cell"],
+            )
 
     return in_df.mapInArrow(_assign, schema=out_schema)
 
@@ -675,16 +688,7 @@ def ivf_topk(
         # one cell and a query's probe cells are distinct (round 5:
         # dropped a no-op dropDuplicates that shuffled every candidate)
     )
-    q_vecs = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
-    c_vecs = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
-    scored = cand.join(F.broadcast(q_vecs), "query_id").join(c_vecs, "neighbor_id")
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("cosine", F.round(cosine_expr(F.col("q_vec"), F.col("c_vec")), 6))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _rerank_topk(cand, corpus, queries, k, id_col, vec_col)
 
 
 # ---------------------------------------------------------------------------
@@ -737,166 +741,8 @@ def pq_training_sample(
     vectors, collected to the driver in float64. Index TRAINING is a
     driver-side fit on a bounded sample by design (how production PQ
     builds run — a separate small job), never a per-row path."""
-    rows = corpus.select(id_col, vec_col).orderBy(id_col).limit(n_sample).collect()
-    return np.asarray([list(r[1]) for r in rows], dtype=np.float64)
-
-
-def pq_encode(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    books: np.ndarray,
-) -> DataFrame:
-    """(id, codes array<int>) — each vector compressed to m_sub codeword
-    ids (nearest codeword per subspace, L2) against the trained
-    ``books``. ONE mapInArrow pass; the codebooks ship in the closure. At
-    10^9+ vectors this is the memory story: candidate scoring touches
-    m_sub small ints per vector instead of dim floats."""
-    m_sub, _k_codes, dsub = books.shape
-    if dim != m_sub * dsub:
-        raise ValueError(f"books shape {books.shape} does not tile dim={dim}")
-    id_field = df.schema[id_col].dataType
-    in_df = df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"))
-    out_schema = sqltypes.StructType(
-        [
-            sqltypes.StructField("_id", id_field, False),
-            sqltypes.StructField(
-                "codes", sqltypes.ArrayType(sqltypes.IntegerType()), False
-            ),
-        ]
-    )
-
-    def _encode(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            ids = batch.column(0)
-            flat = batch.column(1).flatten().to_numpy(zero_copy_only=False)
-            n = len(batch)
-            if flat.size != n * dim:
-                raise ValueError(f"{vec_col}: expected fixed dim={dim}")
-            v = flat.reshape(n, m_sub, dsub).astype(np.float64, copy=False)
-            codes = np.empty((n, m_sub), dtype=np.int32)
-            for s in range(m_sub):
-                # (n, k): squared L2 to every codeword of subspace s
-                d2 = ((v[:, s, None, :] - books[s][None, :, :]) ** 2).sum(axis=2)
-                codes[:, s] = d2.argmin(axis=1)
-            # vectorized list construction (round-5 VERDICT #1): offsets +
-            # flat values, no per-row Python materialization
-            codes_arr = pa.ListArray.from_arrays(
-                pa.array(np.arange(0, (n + 1) * m_sub, m_sub, dtype=np.int32)),
-                pa.array(codes.reshape(-1)),
-            )
-            yield pa.RecordBatch.from_arrays([ids, codes_arr], names=["_id", "codes"])
-
-    return in_df.mapInArrow(_encode, out_schema)
-
-
-def ivfpq_index(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    n_cells: int,
-    books: np.ndarray,
-    seed: int = 42,
-) -> DataFrame:
-    """(_id, cell, codes) — ONE mapInArrow pass fusing IVF cell assignment
-    (``ivf_assign`` with n_probe=1) and PQ encoding (``pq_encode``), bit-
-    identical math to running both separately. Round 5: replaces the
-    ``c_cells ⋈ c_codes`` self-join of the corpus inside ``ivfpq_topk`` —
-    at 10^9+ vectors that join re-shuffled the entire corpus by id just to
-    stitch two per-row columns computed from the same vector; fusing them
-    makes index construction a single scan with zero shuffle."""
-    m_sub, _k_codes, dsub = books.shape
-    if dim != m_sub * dsub:
-        raise ValueError(f"books shape {books.shape} does not tile dim={dim}")
-    cents = _centroids(dim, n_cells, seed)
-    id_field = df.schema[id_col].dataType
-    in_df = df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"))
-    out_schema = sqltypes.StructType(
-        [
-            sqltypes.StructField("_id", id_field, False),
-            sqltypes.StructField("cell", sqltypes.IntegerType(), False),
-            sqltypes.StructField(
-                "codes", sqltypes.ArrayType(sqltypes.IntegerType()), False
-            ),
-        ]
-    )
-
-    def _index(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            ids = batch.column(0)
-            flat = batch.column(1).flatten().to_numpy(zero_copy_only=False)
-            n = len(batch)
-            if flat.size != n * dim:
-                raise ValueError(f"{vec_col}: expected fixed dim={dim}")
-            v = flat.reshape(n, dim).astype(np.float64, copy=False)
-            norms = np.linalg.norm(v, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            cells = ((v / norms) @ cents.T).argmax(axis=1).astype(np.int32)
-            vs = v.reshape(n, m_sub, dsub)
-            codes = np.empty((n, m_sub), dtype=np.int32)
-            for s in range(m_sub):
-                d2 = ((vs[:, s, None, :] - books[s][None, :, :]) ** 2).sum(axis=2)
-                codes[:, s] = d2.argmin(axis=1)
-            codes_arr = pa.ListArray.from_arrays(
-                pa.array(np.arange(0, (n + 1) * m_sub, m_sub, dtype=np.int32)),
-                pa.array(codes.reshape(-1)),
-            )
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(cells), codes_arr], names=["_id", "cell", "codes"]
-            )
-
-    return in_df.mapInArrow(_index, out_schema)
-
-
-def pq_reconstruct_col(df: DataFrame, dim: int, books: np.ndarray,
-                       codes_col: str = "codes") -> DataFrame:
-    """Append ``approx_vec array<float>``: codes -> concatenated codewords.
-
-    Round-5: fully vectorized — ``flatten().to_numpy()`` on the way in
-    (honors list offsets, no ``to_pylist``), offsets+values ``ListArray``
-    on the way out, and empty Arrow batches reshape cleanly instead of
-    crashing on 1-D ``codes[:, s]`` (ADVICE low fix). Utility/debug path;
-    ``ivfpq_topk`` scores candidates with ``pq_adc_score_col`` instead,
-    which never materializes the ``dim`` floats this kernel emits."""
-    m_sub, _k_codes, dsub = books.shape
-    out_fields = list(df.schema.fields) + [
-        sqltypes.StructField("approx_vec", sqltypes.ArrayType(sqltypes.FloatType()), False)
-    ]
-    out_schema = sqltypes.StructType(out_fields)
-    names = [f.name for f in df.schema.fields]
-    codes_idx = names.index(codes_col)
-
-    def _rec(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            n = len(batch)
-            codes = (
-                batch.column(codes_idx)
-                .flatten()
-                .to_numpy(zero_copy_only=False)
-                .reshape(n, m_sub)
-                .astype(np.int64, copy=False)
-            )
-            approx = np.empty((n, dim), dtype=np.float32)
-            for s in range(m_sub):
-                approx[:, s * dsub : (s + 1) * dsub] = books[s][codes[:, s]]
-            arrays = [batch.column(i) for i in range(len(names))]
-            arrays.append(
-                pa.ListArray.from_arrays(
-                    pa.array(np.arange(0, (n + 1) * dim, dim, dtype=np.int32)),
-                    pa.array(approx.reshape(-1)),
-                )
-            )
-            yield pa.RecordBatch.from_arrays(arrays, names=names + ["approx_vec"])
-
-    return df.mapInArrow(_rec, out_schema)
+    tbl = corpus.select(id_col, vec_col).orderBy(id_col).limit(n_sample).toArrow()
+    return _vectors(tbl.column(1), None, vec_col)
 
 
 def pq_adc_luts(Q: np.ndarray, books: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -928,170 +774,37 @@ def pq_adc_luts(Q: np.ndarray, books: np.ndarray) -> tuple[np.ndarray, np.ndarra
     return lut_dot, lut_nrm, q_norm
 
 
-def pq_adc_score_col(
-    df: DataFrame,
-    books: np.ndarray,
-    lut_dot: np.ndarray,
-    lut_nrm: np.ndarray,
-    q_norm: np.ndarray,
-    qidx_col: str = "_q_idx",
-    codes_col: str = "codes",
-    out_col: str = "approx_cos",
-) -> DataFrame:
-    """Append ``approx_cos double`` = ADC-scored cosine vs the query each
-    row's ``qidx_col`` indexes (round-5 VERDICT #1: the promised LUT
-    kernel). One fancy-index gather + row-wise cumsum per Arrow batch —
-    no ``to_pylist``, no per-row Python, no (n, dim) float
-    materialization; empty batches flow through the same vectorized path.
-    Scores are rounded like Spark's ``round(x, 6)`` (HALF_UP via
-    floor(x*1e6+0.5)) to match the golden mirror's fold spec."""
-    m_sub = books.shape[0]
-    out_fields = list(df.schema.fields) + [
-        sqltypes.StructField(out_col, sqltypes.DoubleType(), False)
-    ]
-    out_schema = sqltypes.StructType(out_fields)
-    names = [f.name for f in df.schema.fields]
-    codes_idx = names.index(codes_col)
-    qidx_idx = names.index(qidx_col)
-    s_idx = np.arange(m_sub)
-
-    def _score(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            n = len(batch)
-            codes = (
-                batch.column(codes_idx)
-                .flatten()
-                .to_numpy(zero_copy_only=False)
-                .reshape(n, m_sub)
-                .astype(np.int64, copy=False)
-            )
-            qi = batch.column(qidx_idx).to_numpy(zero_copy_only=False).astype(np.int64)
-            dot = lut_dot[qi[:, None], s_idx[None, :], codes].cumsum(axis=1)[:, -1] if n else np.empty(0)
-            nrm = lut_nrm[s_idx[None, :], codes].cumsum(axis=1)[:, -1] if n else np.empty(0)
-            cos = dot / (q_norm[qi] * np.sqrt(nrm))
-            cos = np.floor(cos * 1e6 + 0.5) / 1e6  # Spark round(x, 6) HALF_UP
-            arrays = [batch.column(i) for i in range(len(names))]
-            arrays.append(pa.array(cos, type=pa.float64()))
-            yield pa.RecordBatch.from_arrays(arrays, names=names + [out_col])
-
-    return df.mapInArrow(_score, out_schema)
+def _pq_codes(v: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """(n, m_sub) PQ codes of the rows of ``v``: per subspace, the id of
+    the nearest codeword (L2) in ``books`` (m_sub, k_codes, dsub)."""
+    m_sub, _k_codes, dsub = books.shape
+    vs = v.reshape(len(v), m_sub, dsub)
+    codes = np.empty((len(v), m_sub), dtype=np.int64)
+    for s in range(m_sub):
+        d2 = ((vs[:, s, None, :] - books[s][None, :, :]) ** 2).sum(axis=2)
+        codes[:, s] = d2.argmin(axis=1)
+    return codes
 
 
-def pq_adc_score_prune_col(
-    df: DataFrame,
-    books: np.ndarray,
-    lut_dot: np.ndarray,
-    lut_nrm: np.ndarray,
-    q_norm: np.ndarray,
-    refine: int,
-    qid_col: str = "query_id",
-    nid_col: str = "neighbor_id",
-    qidx_col: str = "_q_idx",
-    codes_col: str = "codes",
-    out_col: str = "approx_cos",
-) -> DataFrame:
-    """ADC scoring FUSED with a per-partition partial top-``refine``: the
-    map-side combine for the global shortlist window (round 5).
-
-    Same scoring math as ``pq_adc_score_col`` (LUT gather, fold-ordered
-    sums, Spark HALF_UP round-6), but instead of emitting every candidate
-    this kernel keeps a running per-query top-``refine`` buffer across the
-    partition's Arrow batches — under the SAME strict total order the
-    downstream window uses (approx_cos desc, neighbor_id asc), so the
-    global top-``refine`` of the union of per-partition survivors is
-    exactly the global top-``refine`` of all candidates. The window
-    shuffle input drops from |candidates| (~n_probe/n_cells × corpus ×
-    queries) to ≤ n_partitions × n_queries × refine rows, and the
-    ``codes``/``_q_idx`` columns never cross the exchange at all.
-
-    Emits (qid_col, nid_col, out_col) only.
-    """
-    import pyarrow.compute as pc
-
-    m_sub = books.shape[0]
-    names = [f.name for f in df.schema.fields]
-    codes_idx = names.index(codes_col)
-    qidx_idx = names.index(qidx_col)
-    qid_field = df.schema[qid_col].dataType
-    nid_field = df.schema[nid_col].dataType
-    out_schema = sqltypes.StructType(
-        [
-            sqltypes.StructField(qid_col, qid_field, False),
-            sqltypes.StructField(nid_col, nid_field, False),
-            sqltypes.StructField(out_col, sqltypes.DoubleType(), False),
-        ]
-    )
-    s_idx = np.arange(m_sub)
-    sort_keys = [
-        (qidx_col, "ascending"),
-        (out_col, "descending"),
-        (nid_col, "ascending"),
-    ]
-
-    def _prune(tbl):
-        """Keep the first ``refine`` rows per _q_idx under the window's
-        total order — vectorized (one multi-key sort + run-length ranks)."""
-        import pyarrow as pa
-
-        idx = pc.sort_indices(tbl, sort_keys=sort_keys)
-        tbl = tbl.take(idx)
-        qi = tbl.column(qidx_col).to_numpy(zero_copy_only=False)
-        n = len(qi)
-        if n == 0:
-            return tbl
-        starts = np.flatnonzero(np.r_[True, qi[1:] != qi[:-1]])
-        group = np.cumsum(np.r_[False, qi[1:] != qi[:-1]])
-        rank = np.arange(n) - starts[group]
-        return tbl.filter(pa.array(rank < refine))
-
-    def _score_prune(batches):
-        import pyarrow as pa
-
-        buf = None
-        for batch in batches:
-            n = len(batch)
-            codes = (
-                batch.column(codes_idx)
-                .flatten()
-                .to_numpy(zero_copy_only=False)
-                .reshape(n, m_sub)
-                .astype(np.int64, copy=False)
-            )
-            qi = batch.column(qidx_idx).to_numpy(zero_copy_only=False).astype(np.int64)
-            dot = lut_dot[qi[:, None], s_idx[None, :], codes].cumsum(axis=1)[:, -1] if n else np.empty(0)
-            nrm = lut_nrm[s_idx[None, :], codes].cumsum(axis=1)[:, -1] if n else np.empty(0)
-            cos = dot / (q_norm[qi] * np.sqrt(nrm))
-            cos = np.floor(cos * 1e6 + 0.5) / 1e6  # Spark round(x, 6) HALF_UP
-            part = pa.table(
-                {
-                    qid_col: batch.column(names.index(qid_col)),
-                    nid_col: batch.column(names.index(nid_col)),
-                    qidx_col: batch.column(qidx_idx),
-                    out_col: pa.array(cos, type=pa.float64()),
-                }
-            )
-            buf = part if buf is None else _prune(pa.concat_tables([buf, part]))
-        if buf is not None and len(buf):
-            out = _prune(buf).drop_columns([qidx_col])
-            for out_batch in out.to_batches():
-                yield out_batch
-
-    return df.mapInArrow(_score_prune, out_schema)
+def _adc_cosine(
+    lut_dot: np.ndarray, lut_nrm: np.ndarray, q_norm: np.ndarray, qi: np.ndarray, codes: np.ndarray
+) -> np.ndarray:
+    """ADC cosine of query ``qi[i]`` against the vector coded ``codes[i]``,
+    from the ``pq_adc_luts`` tables: one gather and a fold-ordered sum per
+    row, rounded like Spark's ``round(x, 6)`` (HALF_UP)."""
+    s_idx = np.arange(codes.shape[1])
+    dot = lut_dot[qi[:, None], s_idx[None, :], codes].cumsum(axis=1)[:, -1]
+    nrm = lut_nrm[s_idx[None, :], codes].cumsum(axis=1)[:, -1]
+    cos = dot / (q_norm[qi] * np.sqrt(nrm))
+    return np.floor(cos * 1e6 + 0.5) / 1e6
 
 
 def _probe_csr(Q: np.ndarray, cents: np.ndarray, n_cells: int, n_probe: int):
     """Driver-side inversion of the query probe sets: CSR arrays
     ``(offsets, qidx)`` such that ``qidx[offsets[c]:offsets[c+1]]`` are the
-    indices (into Q's row order) of the queries probing cell ``c``. Uses
-    the SAME assignment math as ``ivf_assign`` (normalize, matmul,
-    ``np.argsort(-sims)[:, :n_probe]``) so the probe sets are identical to
-    the distributed form."""
-    norms = np.linalg.norm(Q, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    sims = (Q / norms) @ cents.T
-    top = np.argsort(-sims, axis=1)[:, :n_probe]
+    indices (into Q's row order) of the queries probing cell ``c``. The
+    probe sets come from ``_nearest_cells``, like ``ivf_assign``'s."""
+    top = _nearest_cells(Q, cents, n_probe)
     nq = Q.shape[0]
     cell_of = top.reshape(-1)
     qidx = np.repeat(np.arange(nq, dtype=np.int64), n_probe)
@@ -1118,16 +831,16 @@ def ivfpq_probe_prune(
     seed: int = 42,
 ) -> DataFrame:
     """The whole IVF-PQ candidate phase as ONE map-only corpus scan
-    (round 5): per Arrow batch — assign cells (``ivf_assign`` math),
-    PQ-encode (``pq_encode`` math), expand each row to the queries probing
-    its cell (the broadcast probe join, executed inside the kernel from a
-    closure-shipped CSR — the ADC LUTs already have to ship, and shipping
-    the probe lists beside them replaces ~n_probe/n_cells × n_queries
-    Arrow rows of JVM->Python candidate traffic per corpus row with the
-    ONE corpus row itself; measured 25x less kernel I/O at the 200k-vector
-    bench), ADC-score the expansions, and keep a running per-query partial
-    top-``refine`` under the downstream window's exact total order
-    (approx_cos desc, neighbor_id asc).
+    (round 5): per Arrow batch — assign cells (``_nearest_cells``, as in
+    ``ivf_assign``), PQ-encode (``_pq_codes``), expand each row to the
+    queries probing its cell (the broadcast probe join, executed inside the
+    kernel from a closure-shipped CSR — the ADC LUTs already have to ship,
+    and shipping the probe lists beside them replaces ~n_probe/n_cells ×
+    n_queries Arrow rows of JVM->Python candidate traffic per corpus row
+    with the ONE corpus row itself; measured 25x less kernel I/O at the
+    200k-vector bench), ADC-score the expansions (``_adc_cosine``), and
+    keep a running per-query partial top-``refine`` under the downstream
+    window's exact total order (approx_cos desc, neighbor_id asc).
 
     Emits (query_id, neighbor_id, approx_cos, cosine): ≤ n_queries ×
     refine rows per partition, where ``cosine`` is the EXACT cosine
@@ -1161,7 +874,6 @@ def ivfpq_probe_prune(
             sqltypes.StructField("cosine", sqltypes.DoubleType(), False),
         ]
     )
-    s_idx = np.arange(m_sub)
     sort_keys = [
         ("_q_idx", "ascending"),
         ("approx_cos", "descending"),
@@ -1169,8 +881,6 @@ def ivfpq_probe_prune(
     ]
 
     def _prune(tbl):
-        import pyarrow as pa
-
         idx = pc.sort_indices(tbl, sort_keys=sort_keys)
         tbl = tbl.take(idx)
         qi = tbl.column("_q_idx").to_numpy(zero_copy_only=False)
@@ -1183,26 +893,15 @@ def ivfpq_probe_prune(
         return tbl.filter(pa.array(rank < refine))
 
     def _scan(batches):
-        import pyarrow as pa
-
         buf = None
         for batch in batches:
             n = len(batch)
             if n == 0:
                 continue
             ids_arr = batch.column(0)
-            flat = batch.column(1).flatten().to_numpy(zero_copy_only=False)
-            if flat.size != n * dim:
-                raise ValueError(f"{vec_col}: expected fixed dim={dim}")
-            v = flat.reshape(n, dim).astype(np.float64, copy=False)
-            norms = np.linalg.norm(v, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            cells = ((v / norms) @ cents.T).argmax(axis=1)
-            vs = v.reshape(n, m_sub, dsub)
-            codes = np.empty((n, m_sub), dtype=np.int64)
-            for s in range(m_sub):
-                d2 = ((vs[:, s, None, :] - books[s][None, :, :]) ** 2).sum(axis=2)
-                codes[:, s] = d2.argmin(axis=1)
+            v = _vectors(batch.column(1), dim, vec_col)
+            cells = _nearest_cells(v, cents, 1)[:, 0]
+            codes = _pq_codes(v, books)
             # probe expansion: each row -> the queries probing its cell
             deg = (offsets[cells + 1] - offsets[cells]).astype(np.int64)
             total = int(deg.sum())
@@ -1218,11 +917,7 @@ def ivfpq_probe_prune(
             row_rep, qi = row_rep[keep], qi[keep]
             if row_rep.size == 0:
                 continue
-            crep = codes[row_rep]
-            dot = lut_dot[qi[:, None], s_idx[None, :], crep].cumsum(axis=1)[:, -1]
-            nrm = lut_nrm[s_idx[None, :], crep].cumsum(axis=1)[:, -1]
-            cos = dot / (q_norm[qi] * np.sqrt(nrm))
-            cos = np.floor(cos * 1e6 + 0.5) / 1e6  # Spark round(x, 6) HALF_UP
+            cos = _adc_cosine(lut_dot, lut_nrm, q_norm, qi, codes[row_rep])
             # exact cosine for the batch's candidates, in place: the full
             # vectors are in hand, and a column-wise left-to-right fold is
             # bit-identical to cosine_expr's aggregate + round(…, 6).
@@ -1307,9 +1002,9 @@ def ivfpq_topk(
     books = train_pq_codebooks(sample, m_sub, k_codes, seed)
 
     # driver-side ADC LUT build over the (broadcast-sized) query set
-    q_rows = queries.select(id_col, vec_col).orderBy(id_col).collect()
-    Q = np.asarray([list(r[1]) for r in q_rows], dtype=np.float64)
-    q_ids = np.asarray([r[0] for r in q_rows])
+    q_tbl = queries.select(id_col, vec_col).orderBy(id_col).toArrow()
+    Q = _vectors(q_tbl.column(1), dim, vec_col)
+    q_ids = q_tbl.column(0).to_numpy()
     lut_dot, lut_nrm, q_norm = pq_adc_luts(Q, books)
 
     # the WHOLE candidate phase — cell assign, PQ encode, probe join, ADC
@@ -1328,11 +1023,6 @@ def ivfpq_topk(
     # scan, no driver-built broadcast. ≤ partitions×queries×refine rows of
     # 4 columns ever leave the map stage.
     w_a = Window.partitionBy("query_id").orderBy(F.desc("approx_cos"), F.asc("neighbor_id"))
-    w_e = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("_r", F.row_number().over(w_a))
-        .where(F.col("_r") <= refine)
-        .withColumn("rank", F.row_number().over(w_e))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    return _rank_topk(
+        scored.withColumn("_r", F.row_number().over(w_a)).where(F.col("_r") <= refine), k
     )

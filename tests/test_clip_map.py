@@ -259,3 +259,13 @@ def test_one_arrow_runner_and_no_blanket_except():
     assert calls == {"functions/decode.py": 1}
     blanket = [p.name for p in (pkg / "functions").rglob("*.py") if "except Exception" in p.read_text()]
     assert blanket == []
+
+
+def test_one_kernel_per_similarity_job_and_no_blanket_except_in_operators():
+    """operators/similarity.py keeps one ``.mapInArrow(`` per batched job
+    (sketch_buckets, the near-dup prefilter, ivf_assign, the IVF-PQ scan),
+    and no operator hides errors behind ``except Exception``."""
+    ops = pathlib.Path(decode.__file__).parents[1] / "operators"
+    assert (ops / "similarity.py").read_text().count(".mapInArrow(") == 4
+    blanket = [p.name for p in ops.rglob("*.py") if "except Exception" in p.read_text()]
+    assert blanket == []

@@ -1,11 +1,11 @@
 """Round-2 regression tests: VERDICT/ADVICE fixes + new round-2 surface.
 
-Covers: LSH-bucketed embedding near-dups (plan + correctness), single-scan
-mapInArrow sketching at dim=768, TakeOrderedAndProject top-k, null-safe
-exact-dedup keys, simhash long assembly, stateful-join in-window buffering,
-Hadoop-FS sink IO (file:// scheme), sink time travel/compaction/schema
-evolution, IVF ANN recall + plan shape, multimodal thumbnail plumbing,
-text metrics (stopword/BPE-ish/rolling hash), explode_frames hop guard.
+Covers: LSH-bucketed embedding near-dups (plan + correctness),
+TakeOrderedAndProject top-k, null-safe exact-dedup keys, simhash long
+assembly, stateful-join in-window buffering, Hadoop-FS sink IO (file://
+scheme), sink time travel/compaction/schema evolution, multimodal thumbnail
+plumbing, text metrics (stopword/BPE-ish/rolling hash), explode_frames hop
+guard. The sketch, LSH and IVF tests live in test_similarity.py.
 """
 
 from __future__ import annotations
@@ -13,8 +13,6 @@ from __future__ import annotations
 import os
 import time
 
-import numpy as np
-from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from dataflow_geobeam_spark.operators import dedup, similarity
@@ -56,51 +54,6 @@ def test_embedding_near_dups_plan_has_no_cartesian(spark, sf_dir):
     assert "CartesianProduct" not in plan
     bnlj = [ln for ln in plan.splitlines() if "BroadcastNestedLoopJoin" in ln]
     assert all("_corpus_n" in ln for ln in bnlj), bnlj
-
-
-def test_lsh_topk_single_corpus_scan_and_no_plan_literals(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = emb.where(F.col("vec_id") < 5)
-    df = similarity.lsh_topk(emb, q, k=3, dim=64)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # 4 scans total: corpus sketch + corpus vectors (re-rank) + query sketch
-    # + query vectors. Round 1 unioned n_tables=24 sketch scans PER side.
-    n_scans = plan.count("embeddings.parquet")
-    assert n_scans <= 4, f"expected <=4 corpus scans, saw {n_scans}"
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_sketch_buckets_dim768_no_plan_blowup(spark):
-    rng = np.random.default_rng(7)
-    rows = [Row(vec_id=i, embedding=rng.standard_normal(768).astype(float).tolist()) for i in range(40)]
-    df = spark.createDataFrame(rows)
-    t0 = time.time()
-    sk = similarity.sketch_buckets(df, "vec_id", "embedding", dim=768, n_planes=8, n_tables=16)
-    out = sk.groupBy("table").count().collect()
-    elapsed = time.time() - t0
-    assert len(out) == 16 and all(r["count"] == 40 for r in out)
-    assert elapsed < 60  # round-1 plan-literal version exploded analysis time
-
-
-def test_sketch_buckets_deterministic_and_consistent_with_hyperplanes(spark):
-    rng = np.random.default_rng(11)
-    vecs = rng.standard_normal((6, 16))
-    df = spark.createDataFrame(
-        [Row(vec_id=i, embedding=vecs[i].tolist()) for i in range(6)]
-    )
-    got = {
-        (r._id, r.table, r.bucket)
-        for r in similarity.sketch_buckets(df, "vec_id", "embedding", 16, 4, 3).collect()
-    }
-    want = set()
-    for t in range(3):
-        planes = similarity._hyperplanes(16, 4, t)
-        for i in range(6):
-            bits = (vecs[i] @ planes.T) > 0
-            bucket = int((bits * (1 << np.arange(4))).sum())
-            want.add((i, t, bucket))
-    assert got == want
 
 
 # ---------------------------------------------------------------------------
@@ -283,39 +236,6 @@ def test_explode_frames_tiny_sample_rate_no_divide_by_zero(spark):
     rows = explode_frames(df, frame_ms=100, hop_ms=50).collect()
     assert len(rows) == 50
     assert all(abs(r.frame_rms - 0.5) < 1e-6 for r in rows)
-
-
-# ---------------------------------------------------------------------------
-# IVF ANN
-# ---------------------------------------------------------------------------
-
-
-def test_ivf_topk_recall_and_plan(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = emb.where(F.col("vec_id") < 10)
-    exact = {
-        (r.query_id, r.neighbor_id)
-        for r in similarity.brute_force_topk(emb, q, k=5).collect()
-    }
-    df = similarity.ivf_topk(emb, q, k=5, dim=64, n_cells=16, n_probe=8)
-    approx = {(r.query_id, r.neighbor_id) for r in df.collect()}
-    recall = len(exact & approx) / len(exact)
-    # probing half the cells (8/16) must catch well over half the true
-    # neighbors even on near-orthogonal noise vectors
-    assert recall >= 0.5, recall
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_ivf_assign_one_cell_per_vector(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    n = emb.count()
-    cells = similarity.ivf_assign(emb, "vec_id", "embedding", dim=64, n_cells=32)
-    assert cells.count() == n
-    assert cells.select("_id").distinct().count() == n
-    probed = similarity.ivf_assign(emb, "vec_id", "embedding", dim=64, n_cells=32, n_probe=4)
-    assert probed.count() == 4 * n
 
 
 # ---------------------------------------------------------------------------

@@ -1,4 +1,5 @@
-"""Round-3 regression tests: hot-bucket caps on by default, sink
+"""Round-3 regression tests: the minhash hot-bucket cap on by default
+(the embedding near-dup cap tests live in test_similarity.py), sink
 concurrency/emptiness hardening, large_binary offset handling, and the
 BENCH/BASELINE.md section-surgical splice."""
 
@@ -8,7 +9,6 @@ import json
 import os
 import threading
 
-import numpy as np
 import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
@@ -29,53 +29,6 @@ def test_minhash_default_cap_bounds_degenerate_corpus(spark):
         "doc_id long, text string",
     )
     assert minhash_lsh_pairs(docs, "doc_id", "text").count() == 0
-
-
-def test_near_dup_default_cap_bounds_degenerate_corpus(spark):
-    from dataflow_geobeam_spark.operators.similarity import near_dup_pairs
-
-    vec = [float(x) for x in np.random.default_rng(7).standard_normal(64)]
-    emb = spark.createDataFrame(
-        [(i, vec) for i in range(1100)], "vec_id long, embedding array<float>"
-    )
-    out = near_dup_pairs(emb, "vec_id", "embedding", threshold=0.45, dim=64,
-                         n_planes=4, n_tables=32)
-    assert out.count() == 0
-
-
-def test_cap_preserves_results_on_healthy_corpus(spark, sf_dir):
-    """On a normal corpus (all buckets under the cap) the default-capped
-    output is IDENTICAL to cap=None — the guard only fires on skew."""
-    from dataflow_geobeam_spark.operators.similarity import near_dup_pairs
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    kw = dict(threshold=0.45, dim=64, n_planes=4, n_tables=32)
-    capped = set(map(tuple, near_dup_pairs(emb, "vec_id", "embedding", **kw).collect()))
-    uncapped = set(
-        map(
-            tuple,
-            near_dup_pairs(
-                emb, "vec_id", "embedding", max_bucket_size=None, **kw
-            ).collect(),
-        )
-    )
-    assert capped == uncapped and len(capped) > 0
-
-
-def test_cap_does_not_recompute_sketch(spark, sf_dir):
-    """The guard is a Window count over the already-shuffled sketch, NOT a
-    groupBy+join-back (which recomputed the mapInArrow sketch pass — the
-    round-2 ADVICE finding). The plan must contain exactly the 2 MapInArrow
-    nodes the self-join always had, plus a Window, and no extra aggregate
-    join of bucket sizes."""
-    from dataflow_geobeam_spark.operators.similarity import near_dup_pairs
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    out = near_dup_pairs(emb, "vec_id", "embedding", threshold=0.45, dim=64,
-                         n_planes=4, n_tables=32)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("MapInArrow") == 2
-    assert "Window" in plan
 
 
 # ---------------------------------------------------------------------------

@@ -1,6 +1,7 @@
-"""Round-4 regression tests: corpus-scaled auto bucket cap (ADVICE fix),
-cap drop accounting, runtime exchange-reuse pinning for both LSH
-self-joins, and the TPC-H skew trial for the salted aggregate.
+"""Round-4 regression tests: minhash cap drop accounting, runtime
+exchange-reuse pinning for both LSH self-joins, image decode, IVF-PQ, and
+the TPC-H skew trial for the salted aggregate. The embedding near-dup auto
+cap and its drop accounting are tested in test_similarity.py.
 """
 
 from __future__ import annotations
@@ -12,92 +13,8 @@ import pytest
 from pyspark.sql import functions as F
 
 # ---------------------------------------------------------------------------
-# auto cap: no empty-result cliff when routine occupancy crosses a fixed cap
-# ---------------------------------------------------------------------------
-
-
-def _corpus_with_planted_pair(spark, n=3000, dim=8, seed=11):
-    rng = np.random.default_rng(seed)
-    vecs = rng.standard_normal((n, dim)).astype(np.float32)
-    # vec 1 = vec 0 + tiny noise: cosine ~0.9999
-    vecs[1] = vecs[0] + 0.001 * rng.standard_normal(dim).astype(np.float32)
-    rows = [(i, [float(x) for x in vecs[i]]) for i in range(n)]
-    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-
-def test_auto_cap_scales_with_corpus(spark):
-    """The round-3 fixed cap's cliff (ADVICE-medium): with coarse buckets,
-    routine occupancy N/2^n_planes crosses any fixed cap as N grows and the
-    operator silently returns empty. Here: 3000 vectors, n_planes=1 -> 2
-    buckets of ~1500 > 1000, so the old default drops EVERY bucket; the
-    auto cap (8x uniform share = 12000) keeps them and finds the planted
-    near-identical pair."""
-    from dataflow_geobeam_spark.operators.similarity import near_dup_pairs
-
-    emb = _corpus_with_planted_pair(spark)
-    kw = dict(threshold=0.99, dim=8, n_planes=1, n_tables=2)
-
-    fixed = near_dup_pairs(emb, "vec_id", "embedding", max_bucket_size=1000, **kw)
-    assert fixed.count() == 0  # the cliff the ADVICE described
-
-    auto = near_dup_pairs(emb, "vec_id", "embedding", **kw)  # default = "auto"
-    pairs = {(r.id_a, r.id_b) for r in auto.collect()}
-    assert (0, 1) in pairs
-
-
-def test_auto_cap_matches_fixed_cap_at_small_n(spark, sf_dir):
-    """Below the floor the auto cap resolves to the same 1000 the round-3
-    default used — driver queries are unchanged by the default switch."""
-    from dataflow_geobeam_spark.operators.similarity import near_dup_pairs
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    kw = dict(threshold=0.45, dim=64, n_planes=4, n_tables=32)
-    auto = set(map(tuple, near_dup_pairs(emb, "vec_id", "embedding", **kw).collect()))
-    fixed = set(
-        map(
-            tuple,
-            near_dup_pairs(
-                emb, "vec_id", "embedding", max_bucket_size=1000, **kw
-            ).collect(),
-        )
-    )
-    assert auto == fixed and len(auto) > 0
-
-
-# ---------------------------------------------------------------------------
 # cap drop accounting (VERDICT #7)
 # ---------------------------------------------------------------------------
-
-
-def test_near_dup_cap_stats_reports_degenerate_drops(spark):
-    from dataflow_geobeam_spark.operators.similarity import near_dup_cap_stats
-
-    vec = [float(x) for x in np.random.default_rng(7).standard_normal(64)]
-    emb = spark.createDataFrame(
-        [(i, vec) for i in range(1100)], "vec_id long, embedding array<float>"
-    )
-    row = near_dup_cap_stats(
-        emb, "vec_id", "embedding", dim=64, n_planes=4, n_tables=32
-    ).collect()[0]
-    # identical vectors: one hot bucket per table, every sketch row inside it
-    assert row.cap == 1000  # auto floor (8 * 1100 / 16 = 550 < 1000)
-    assert row.n_sketch_rows == 1100 * 32
-    assert row.n_buckets_dropped == 32
-    assert row.n_rows_dropped == 1100 * 32
-    assert row.dropped_row_share == 1.0
-    assert row.max_bucket == 1100
-
-
-def test_near_dup_cap_stats_zero_on_healthy_corpus(spark, sf_dir):
-    from dataflow_geobeam_spark.operators.similarity import near_dup_cap_stats
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    row = near_dup_cap_stats(
-        emb, "vec_id", "embedding", dim=64, n_planes=4, n_tables=32
-    ).collect()[0]
-    assert row.n_buckets_dropped == 0
-    assert row.dropped_row_share == 0.0
-    assert row.n_sketch_rows > 0
 
 
 def test_minhash_cap_stats_accounting(spark):
@@ -598,14 +515,3 @@ def test_salted_sum_agg_tpch_hot_customer(spark, sf_dir):
         "o_totalprice",
     )
     assert w_salted[0] * 4 <= w_plain[0]
-
-
-def test_recommended_n_planes_keeps_candidates_linear():
-    from dataflow_geobeam_spark.operators.similarity import recommended_n_planes
-
-    for n in (1_000, 50_000, 200_000, 10**9, 10**12):
-        p = recommended_n_planes(n)
-        occupancy = n / 2**p
-        assert occupancy <= 0.5  # candidates ~ n_tables * N * occupancy / 2
-    assert recommended_n_planes(50_000) == 17
-    assert recommended_n_planes(100) == 12  # floor

@@ -1,6 +1,7 @@
 """Round-5 tests: sink maintenance-cadence correctness (compact→expire→compact,
-time travel after expiry, orphan GC), IVF-PQ kernel vectorization guards, and
-the streaming driver-gate query.
+time travel after expiry, orphan GC) and the streaming driver-gate query.
+The IVF-PQ kernel and near-dup ``corpus_n``/``n_planes="auto"`` tests live in
+test_similarity.py.
 
 Reference precedent for the sink semantics: the reference's replace-on-rerun
 BigQuery loads (``/root/reference/geobeam/examples/shapefile_nfhl.py:43-49``)
@@ -104,255 +105,6 @@ def test_sink_gc_orphans(spark, tmp_path):
     # (no crash injection needed beyond the dir-level simulation above)
     out2 = sink.gc_orphans(grace_age_sec=0)
     assert f"{DATA_DIR}/epoch=100-cafef00d" in out2["removed"]
-
-# ---------------------------------------------------------------------------
-# IVF-PQ: vectorized kernels + ADC LUT scoring (round-5 VERDICT #1)
-# ---------------------------------------------------------------------------
-
-
-def test_pq_adc_score_matches_reconstruction_math(spark):
-    """ADC LUT scores equal cosine(q, float64-reconstructed codes) to
-    floating tolerance — the ADC identity the kernel implements."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from dataflow_geobeam_spark.operators import similarity as S
-
-    rng = np.random.default_rng(7)
-    dim, m_sub, k_codes, n = 32, 4, 16, 200
-    sample = rng.standard_normal((64, dim))
-    books = S.train_pq_codebooks(sample, m_sub, k_codes)
-    Q = rng.standard_normal((3, dim))
-    lut_dot, lut_nrm, q_norm = S.pq_adc_luts(Q, books)
-
-    vecs = rng.standard_normal((n, dim)).astype(np.float32)
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(n)], ["vec_id", "embedding"]
-    )
-    codes_df = S.pq_encode(df, "vec_id", "embedding", dim, books)
-    scored = S.pq_adc_score_col(
-        codes_df.withColumn("_q_idx", (F.col("_id") % 3).cast("int")),
-        books, lut_dot, lut_nrm, q_norm,
-    ).collect()
-    assert len(scored) == n
-    dsub = dim // m_sub
-    for r in scored:
-        rec = np.concatenate(
-            [books[s][r.codes[s]] for s in range(m_sub)]
-        )
-        q = Q[r._id % 3]
-        want = float(q @ rec / (np.linalg.norm(q) * np.linalg.norm(rec)))
-        assert abs(r.approx_cos - want) < 1e-6, (r._id, r.approx_cos, want)
-
-
-def test_pq_kernels_handle_empty_and_match_reconstruction(spark):
-    """pq_encode / pq_reconstruct_col / pq_adc_score_col survive 0-row
-    inputs (ADVICE low fix: 1-D reshape crash) and reconstruct matches
-    the codebooks."""
-    import numpy as np
-
-    from dataflow_geobeam_spark.operators import similarity as S
-
-    rng = np.random.default_rng(11)
-    dim, m_sub, k_codes = 16, 4, 8
-    books = S.train_pq_codebooks(rng.standard_normal((32, dim)), m_sub, k_codes)
-
-    empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
-    assert S.pq_encode(empty, "vec_id", "embedding", dim, books).count() == 0
-    enc = S.pq_encode(empty, "vec_id", "embedding", dim, books)
-    assert S.pq_reconstruct_col(enc, dim, books).count() == 0
-
-    # non-empty: reconstruction equals codeword concatenation (float32)
-    vecs = rng.standard_normal((10, dim)).astype(np.float32)
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(10)], ["vec_id", "embedding"]
-    )
-    rows = S.pq_reconstruct_col(
-        S.pq_encode(df, "vec_id", "embedding", dim, books), dim, books
-    ).collect()
-    for r in rows:
-        want = np.concatenate([books[s][r.codes[s]] for s in range(m_sub)]).astype(
-            np.float32
-        )
-        assert np.array_equal(np.asarray(r.approx_vec, dtype=np.float32), want)
-
-
-def test_ivfpq_index_matches_separate_passes(spark):
-    """The fused (cell, codes) index scan is bit-identical to running
-    ivf_assign(n_probe=1) and pq_encode separately (round-5 shuffle
-    removal must not change a single bit of the index)."""
-    import numpy as np
-
-    from dataflow_geobeam_spark.operators import similarity as S
-
-    rng = np.random.default_rng(13)
-    dim, m_sub, k_codes, n_cells, n = 32, 4, 8, 16, 300
-    books = S.train_pq_codebooks(rng.standard_normal((64, dim)), m_sub, k_codes)
-    vecs = rng.standard_normal((n, dim)).astype(np.float32)
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(n)], ["vec_id", "embedding"]
-    )
-    fused = {
-        r._id: (r.cell, tuple(r.codes))
-        for r in S.ivfpq_index(df, "vec_id", "embedding", dim, n_cells, books).collect()
-    }
-    cells = {r._id: r.cell
-             for r in S.ivf_assign(df, "vec_id", "embedding", dim, n_cells, 1).collect()}
-    codes = {r._id: tuple(r.codes)
-             for r in S.pq_encode(df, "vec_id", "embedding", dim, books).collect()}
-    assert fused == {i: (cells[i], codes[i]) for i in cells}
-    # fused index is ONE map stage: no exchange in the plan
-    plan = S.ivfpq_index(df, "vec_id", "embedding", dim, n_cells, books)
-    assert "Exchange" not in plan._jdf.queryExecution().executedPlan().toString()
-
-
-def test_pq_adc_score_prune_matches_unpruned_topk(spark):
-    """The fused score+partial-top-refine kernel must yield exactly the
-    same global top-``refine`` shortlist as scoring everything and
-    windowing (same strict total order), across multiple partitions and
-    Arrow batches."""
-    import numpy as np
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from dataflow_geobeam_spark.operators import similarity as S
-
-    rng = np.random.default_rng(17)
-    dim, m_sub, k_codes, n, nq, refine = 32, 4, 16, 500, 5, 7
-    books = S.train_pq_codebooks(rng.standard_normal((64, dim)), m_sub, k_codes)
-    Q = rng.standard_normal((nq, dim))
-    lut_dot, lut_nrm, q_norm = S.pq_adc_luts(Q, books)
-    vecs = rng.standard_normal((n, dim)).astype(np.float32)
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(n)], ["vec_id", "embedding"]
-    ).repartition(8)
-    cand = (
-        S.pq_encode(df, "vec_id", "embedding", dim, books)
-        .withColumn("_q_idx", (F.col("_id") % nq).cast("int"))
-        .select(
-            F.col("_q_idx").cast("long").alias("query_id"),
-            F.col("_id").alias("neighbor_id"),
-            "codes",
-            "_q_idx",
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_cos"), F.asc("neighbor_id")
-    )
-    want = {
-        (r.query_id, r.neighbor_id, r.approx_cos)
-        for r in S.pq_adc_score_col(cand, books, lut_dot, lut_nrm, q_norm)
-        .withColumn("_r", F.row_number().over(w))
-        .where(F.col("_r") <= refine)
-        .select("query_id", "neighbor_id", "approx_cos")
-        .collect()
-    }
-    got = {
-        (r.query_id, r.neighbor_id, r.approx_cos)
-        for r in S.pq_adc_score_prune_col(
-            cand, books, lut_dot, lut_nrm, q_norm, refine
-        )
-        .withColumn("_r", F.row_number().over(w))
-        .where(F.col("_r") <= refine)
-        .collect()
-    }
-    assert got == want and len(want) == nq * refine
-    # empty input flows through
-    empty = cand.where(F.col("neighbor_id") < 0)
-    assert (
-        S.pq_adc_score_prune_col(empty, books, lut_dot, lut_nrm, q_norm, refine).count()
-        == 0
-    )
-
-
-# ---------------------------------------------------------------------------
-# near_dup_pairs: corpus_n literal cap + n_planes="auto" (VERDICT #2, #4)
-# ---------------------------------------------------------------------------
-
-
-def test_near_dup_corpus_n_literal_plan_and_same_output(spark, sf_dir):
-    """Passing corpus_n folds the auto cap to a literal: identical output,
-    and the one-row count broadcast join disappears from the executed
-    plan."""
-    import os
-
-    from dataflow_geobeam_spark.operators.similarity import near_dup_pairs
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    n = emb.count()
-    kw = dict(threshold=0.45, dim=64, n_planes=4, n_tables=32)
-    base = set(map(tuple, near_dup_pairs(emb, "vec_id", "embedding", **kw).collect()))
-    lit_df = near_dup_pairs(emb, "vec_id", "embedding", corpus_n=n, **kw)
-    lit = set(map(tuple, lit_df.collect()))
-    assert lit == base and len(lit) > 0
-    plan = lit_df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "_corpus_n" not in plan
-
-
-def test_near_dup_n_planes_auto_two_sizes(spark):
-    """n_planes="auto" keeps candidate volume ~linear in N: at two corpus
-    sizes 4x apart, sum-of-C(bucket,2) per table stays within a constant
-    multiple of N instead of growing ~quadratically (the fixed-plane
-    failure mode)."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from dataflow_geobeam_spark.operators.similarity import (
-        recommended_n_planes,
-        sketch_buckets,
-    )
-
-    dim, n_tables = 16, 4
-    for n in (2000, 8000):
-        rng = np.random.default_rng(5)
-        vecs = rng.standard_normal((n, dim)).astype(np.float32)
-        df = spark.createDataFrame(
-            [(i, [float(x) for x in vecs[i]]) for i in range(n)],
-            "vec_id long, embedding array<float>",
-        )
-        p = recommended_n_planes(n)
-        sk = sketch_buckets(df, "vec_id", "embedding", dim, p, n_tables)
-        cand = (
-            sk.groupBy("table", "bucket")
-            .agg(F.count(F.lit(1)).alias("b"))
-            .agg(F.sum(F.col("b") * (F.col("b") - 1) / 2).alias("pairs"))
-            .collect()[0]["pairs"]
-        )
-        # random near-orthogonal vectors: bucket collisions stay ~linear
-        assert cand <= 16 * n_tables * n, (n, p, cand)
-
-
-def test_near_dup_n_planes_auto_resolves(spark, sf_dir):
-    """n_planes="auto" gives the same output as passing the recommended
-    count explicitly."""
-    import os
-
-    from dataflow_geobeam_spark.operators.similarity import (
-        near_dup_pairs,
-        recommended_n_planes,
-    )
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    n = emb.count()
-    kw = dict(threshold=0.45, dim=64, n_tables=32)
-    auto = set(
-        map(
-            tuple,
-            near_dup_pairs(
-                emb, "vec_id", "embedding", n_planes="auto", corpus_n=n, **kw
-            ).collect(),
-        )
-    )
-    fixed = set(
-        map(
-            tuple,
-            near_dup_pairs(
-                emb, "vec_id", "embedding", n_planes=recommended_n_planes(n), corpus_n=n, **kw
-            ).collect(),
-        )
-    )
-    assert auto == fixed
 
 
 # ---------------------------------------------------------------------------

@@ -9,7 +9,6 @@ ADVICE correctness fix) to its observable contract:
   not an "unknown size" (engine and independent mirror agree).
 * digest=True kernel variants emit exactly the md5/length Catalyst would
   compute over the payload bytes, and passthrough columns survive.
-* near_dup_pairs' numpy prefilter changes nothing about the output.
 * mel_filters / dct2_basis memoization returns the identical constants.
 """
 
@@ -159,31 +158,6 @@ def test_segments_digest_matches_catalyst(spark, small_clips):
     assert joined and all(
         r.want == r.got and r.nb_want == r.nb_got for r in joined
     )
-
-
-# ---------------------------------------------------------------------------
-# near_dup_pairs prefilter: row-identical with the screen on or off
-# ---------------------------------------------------------------------------
-
-
-def test_near_dup_prefilter_is_invisible(spark, sf_dir):
-    import os
-
-    from dataflow_geobeam_spark.operators.similarity import near_dup_pairs
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    n = emb.count()
-    kw = dict(threshold=0.45, dim=64, n_planes=4, n_tables=32, corpus_n=n)
-    on = set(map(tuple, near_dup_pairs(emb, "vec_id", "embedding", **kw).collect()))
-    off = set(
-        map(
-            tuple,
-            near_dup_pairs(
-                emb, "vec_id", "embedding", prefilter=None, **kw
-            ).collect(),
-        )
-    )
-    assert on == off and len(on) > 0
 
 
 # ---------------------------------------------------------------------------
