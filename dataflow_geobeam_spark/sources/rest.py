@@ -1,98 +1,29 @@
 """Paginated REST source (reference S6 ``ESRIServerSource`` analog).
 
 The reference paginates an ArcGIS REST layer on the worker via EsriDumper
-and materializes the whole FeatureCollection in memory
-(``/root/reference/geobeam/io.py:512-594``). The Spark-first shape is a
-DRIVER-side paginated fetch -> ``spark.createDataFrame`` (external REST
-endpoints are inherently unsplittable cursors; the driver fetch keeps the
-cluster free for the heavy work downstream). For truly large feeds, pages
-can be fanned out via a page-number DataFrame + mapInPandas fetch — both
-shapes are provided.
+and materializes the whole FeatureCollection in memory (the reference's
+``geobeam/io.py:512-594``). Here the feed is a PySpark
+Python Data Source, ``spark.read.format("paginated_rest")``: pages are
+fetched lazily INSIDE executor tasks, each partition owning a page range
+and stopping early at the feed's end, so neither the driver nor any single
+task ever holds the whole feed, and the page count need not be known up
+front.
 
-The HTTP layer is injectable (``fetch_page``): this sandbox has no network,
-tests inject a fake fetcher; on a cluster pass one built on urllib/requests.
+The HTTP layer is injectable (the ``fetcher`` option names a
+``fetch_page(page_index) -> list[dict]`` function): tests use the
+deterministic ``demo_fetch_page``; on a cluster point it at one built on
+urllib/requests.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 # fetch_page(page_index) -> list of row dicts; empty list = no more pages
 FetchPage = Callable[[int], list[dict]]
-
-
-def read_paginated(
-    spark: SparkSession,
-    fetch_page: FetchPage,
-    schema,
-    max_pages: int = 10_000,
-) -> DataFrame:
-    """Driver-side cursor pagination -> DataFrame (S6 pattern).
-
-    DEPRECATED for anything beyond driver-memory-sized feeds: every page
-    accumulates in a driver-side list before createDataFrame. Prefer
-    ``paginated_rest`` (the PySpark-4 Python DataSource below) — it fetches
-    pages lazily on executors with bounded memory — or
-    ``read_pages_distributed`` when the page count is known up front. Kept
-    because an unsplittable cursor endpoint with no page count has no other
-    correct shape, and small dimension feeds fit fine.
-    """
-    rows: list[dict] = []
-    for page in range(max_pages):
-        batch = fetch_page(page)
-        if not batch:
-            break
-        rows.extend(batch)
-    return spark.createDataFrame(rows, schema)
-
-
-def read_pages_distributed(
-    spark: SparkSession,
-    fetch_page: FetchPage,
-    schema,
-    n_pages: int,
-) -> DataFrame:
-    """Known page count -> fan pages across executors via mapInPandas.
-
-    Each task fetches its own pages (the fetcher must be picklable);
-    parallelism = pages, the Spark analog of Beam's per-file splitting.
-    """
-    import pandas as pd
-
-    pages = spark.range(0, n_pages, 1, min(n_pages, 64))
-
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for page in pdf["id"].tolist():
-                out.extend(fetch_page(int(page)))
-            yield pd.DataFrame(out, columns=[f.name for f in schema.fields])
-
-    return pages.mapInPandas(fetch, schema)
-
-
-# ---------------------------------------------------------------------------
-# PySpark 4 Python Data Source: executor-side cursor pagination
-# ---------------------------------------------------------------------------
-# Round-2 upgrade (VERDICT "What's missing" #4): read_paginated accumulates
-# every page in driver memory before createDataFrame — the same
-# whole-feed-in-memory flaw as the reference (geobeam/io.py:551-556) — and
-# read_pages_distributed needs n_pages known up front. The Data Source API
-# fixes both: pages are fetched lazily INSIDE executor tasks, each partition
-# owning a page range and stopping early at the feed's end, so neither the
-# driver nor any single task ever holds the whole feed.
-
-try:  # pragma: no cover - API exists on pyspark>=4
-    from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-
-    _HAS_DATASOURCE_API = True
-except ImportError:  # pragma: no cover
-    DataSource = object  # type: ignore[assignment,misc]
-    DataSourceReader = object  # type: ignore[assignment,misc]
-    InputPartition = object  # type: ignore[assignment,misc]
-    _HAS_DATASOURCE_API = False
 
 
 def _resolve_fetcher(spec: str) -> FetchPage:
@@ -152,9 +83,8 @@ class PaginatedRestDataSource(DataSource):
 
 
 def register_rest_datasource(spark: SparkSession) -> bool:
-    """Register the format with the session; False if the API is absent."""
-    if not _HAS_DATASOURCE_API:  # pragma: no cover
-        return False
+    """Register the ``paginated_rest`` format with the session; always
+    True (the Data Source API exists on every supported PySpark)."""
     spark.dataSource.register(PaginatedRestDataSource)
     return True
 

@@ -1,30 +1,61 @@
 """Streaming CEP: watermark-correct pattern matching.
 
-``match_contiguous_stream`` is the streaming form of
-``operators/cep.match_contiguous`` (PATTERN (A B C …) over CONSECUTIVE
-events per key, bounded by a time window), ``match_absence_stream``
-the streaming form of ``operators/cep.match_absence`` (negation /
-timeout alerting — the pattern that NEEDS event-time timers, because
-the interesting case is exactly the one where no further input arrives
-for the key), and ``match_kleene_stream`` the streaming form of
-``operators/cep.match_kleene`` (PATTERN (A B+ C) — variable-length
-iteration, finalized per TERMINATOR rather than per anchor). All are
-built on ``applyInPandasWithState`` with event-time timeouts — the same
-stateful machinery as the clip<->transcript join
-(``streaming/join.py``).
+Four matchers, each the streaming form of a batch operator in
+``operators/cep.py`` (PATTERN over CONSECUTIVE events per key, bounded by
+a time window):
 
-Correctness under late data: an anchor's match outcome depends only on
-events with ``ts <= anchor_ts + within`` (later events cannot sit
-between the anchor and its k-1 immediate successors without failing the
-window bound, and events later than that bound fail it themselves). The
-watermark guarantees no event older than it will be admitted, so an
-anchor is FINALIZED — its outcome can never change — exactly when
-``watermark > anchor_ts + within``. The per-key state buffers events
-until finalized, emits matches for finalized anchors, evicts finalized
-events, and schedules an event-time timeout so buffered keys flush when
-the watermark advances without new data. Within those rules the emitted
-set equals the batch operator run over the delivered (non-late) events —
-pinned by ``test_round5.py`` against the oracle-gated batch form.
+* ``match_contiguous_stream`` — PATTERN (A B C …);
+* ``match_absence_stream`` — A NOT B within T (timeout alerting: the
+  pattern that NEEDS event-time timers, because the interesting case is
+  exactly the one where no further input arrives for the key);
+* ``match_kleene_stream`` — PATTERN (A B+ C), variable-length iteration;
+* ``match_bounded_stream`` — PATTERN (A B{m,n} C), greedy.
+
+``match_pattern_stream`` parses the batch grammar and dispatches to them.
+
+One runner, ``_run_matcher``, holds the module's only
+``applyInPandasWithState`` call. Per key it owns a typed, sorted event
+buffer (``ts_us``, ``ids``, ``types``) plus a high-water mark
+``done_us``; on every call (new rows or an event-time timeout) it
+appends the incoming frames column-wise, sorts, hands the matcher's pure
+``step`` the positions that became FINAL in this call, evicts what no
+future result can reach, and sets the next timeout. A matcher is a
+``step(ts_us, ids, types, lo, hi)`` over the sorted numpy buffer that
+returns one array per output column for the positions ``[lo, hi)``, its
+output column names, and its finalization offset ``fwd``:
+
+* ``fwd = within`` for the ANCHOR-final shapes (contiguous, absence,
+  bounded). An anchor's outcome depends only on events with
+  ``ts <= anchor_ts + within``, and the watermark admits no event older
+  than itself, so the anchor is final once ``anchor_ts + within < wm``.
+* ``fwd = 0`` for the TERMINATOR-final Kleene shape. A terminator's
+  outcome depends only on its predecessors, so it is final once
+  ``ts < wm``: no admissible event can insert before it anymore.
+
+Position ``i`` is emitted exactly once, in the call where
+``done_us <= ts[i] + fwd < wm`` (then ``done_us`` advances to ``wm``).
+The same rule, framed as watermark delay against result error, is
+PECJ's (SIGMOD 2024); holding keyed state until the watermark makes a
+result final, then evicting it, is Flink's ("State Management in Apache
+Flink", VLDB 2017). Eviction drops events with ``ts + within < wm``:
+every unfinalized result looks at most ``within`` back (Kleene islands)
+or forward (anchors) from its own timestamp. The timeout wakes the key
+when its next position can finalize (else when its oldest event becomes
+evictable), clamped to ``wm + 1 s`` because Spark rejects timeouts
+behind the watermark; when the buffer empties the state is removed.
+Within those rules the emitted set equals the batch operator over the
+delivered (non-late) events, pinned by ``tests/test_cep_stream.py``
+against the oracle-gated batch forms.
+
+Dirty rows: a row with a null ``user_id``, ``ts`` or ``event_id`` is
+dropped (one Catalyst filter before the stateful stage) and never fails
+the query; a null ``event_type`` keeps a non-step label and still
+occupies its position.
+
+State layout: every shape stores ``(ts_us, ids, types, done_us)``. A
+checkpoint written before the shapes shared this layout (when only the
+Kleene shape stored ``done_us``) does not resume; restart such a query
+from a fresh checkpoint.
 
 Input contract: an events stream with ``withWatermark`` already applied
 on the timestamp column; at-least-once duplicate delivery is NOT
@@ -38,81 +69,86 @@ only keys with new rows or expiring timeouts.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import LongType, StructField, StructType
+from pyspark.sql.types import ArrayType, LongType, StringType, StructField, StructType
+
+# step(ts_us, ids, types, lo, hi) -> one int64 array per output column
+Step = Callable[[np.ndarray, np.ndarray, np.ndarray, int, int], list[np.ndarray]]
+
+_STATE = StructType(
+    [
+        StructField("ts_us", ArrayType(LongType()), True),
+        StructField("ids", ArrayType(LongType()), True),
+        StructField("types", ArrayType(StringType()), True),
+        StructField("done_us", LongType(), True),
+    ]
+)
 
 
-def _out_schema(k: int) -> StructType:
-    return StructType(
-        [StructField("user_id", LongType(), False), StructField("anchor_id", LongType(), False)]
-        + [StructField(f"t{i}_s", LongType(), False) for i in range(k)]
-        + [StructField("span_s", LongType(), False)]
+def _run_matcher(
+    events: DataFrame, cols: list[str], step: Step, *, within_s: int, fwd_s: int
+) -> DataFrame:
+    """Run ``step`` per ``user_id`` under the buffer → finalize → evict →
+    timeout loop described in the module docstring; output columns are
+    ``user_id`` followed by ``cols``, all BIGINT."""
+    within_us, fwd_us = int(within_s * 1_000_000), int(fwd_s * 1_000_000)
+
+    def fn(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
+        if state.exists:
+            ts_l, id_l, ty_l, done_us = state.get
+        else:
+            ts_l, id_l, ty_l, done_us = [], [], [], -(1 << 62)
+        parts = [(np.asarray(ts_l, np.int64), np.asarray(id_l, np.int64), np.asarray(ty_l, str))]
+        for pdf in pdfs:
+            ts_new = pdf["ts"].to_numpy("datetime64[ns]").view(np.int64) // 1000
+            parts.append((ts_new, pdf["event_id"].to_numpy(np.int64), pdf["event_type"].to_numpy(str)))
+        ts, ids, types = (np.concatenate(c) for c in zip(*parts))
+        order = np.lexsort((types, ids, ts))
+        ts, ids, types = ts[order], ids[order], types[order]
+
+        wm_ms = state.getCurrentWatermarkMs()
+        wm_us = wm_ms * 1000
+        lo, hi = np.searchsorted(ts + fwd_us, [done_us, wm_us])
+        out = step(ts, ids, types, int(lo), int(hi)) if hi > lo else None
+        done_us = max(done_us, wm_us)
+        keep = np.searchsorted(ts + within_us, wm_us)
+        ts, ids, types = ts[keep:], ids[keep:], types[keep:]
+        if len(ts):
+            state.update((ts.tolist(), ids.tolist(), types.tolist(), int(done_us)))
+            # wake when the next position can finalize, else when the
+            # oldest event becomes evictable; Spark rejects timeouts
+            # behind the watermark
+            pending = ts[ts + fwd_us >= done_us]
+            wake_us = pending[0] + fwd_us if len(pending) else ts[0] + within_us
+            state.setTimeoutTimestamp(max(int(wake_us) // 1000 + 1000, wm_ms + 1000))
+        else:
+            state.remove()
+        if out is not None and len(out[0]):
+            yield pd.DataFrame({"user_id": key[0], **dict(zip(cols, out))}, columns=["user_id", *cols])
+
+    schema = StructType([StructField(c, LongType(), False) for c in ["user_id", *cols]])
+    return (
+        events.select("user_id", "event_id", "ts", "event_type")
+        .dropna(subset=["user_id", "ts", "event_id"])
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            fn,
+            outputStructType=schema,
+            stateStructType=_STATE,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        )
     )
 
 
-def _make_fn(pattern: list[str], within_s: int):
-    k = len(pattern)
-    within_us = within_s * 1_000_000
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import pandas as pd  # noqa: PLC0415 - worker-side import
-
-        if state.exists:
-            ts_l, id_l, ty_l = state.get
-            buf = list(zip(ts_l, id_l, ty_l))
-        else:
-            buf = []
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                for row in pdf.itertuples(index=False):
-                    buf.append(
-                        (
-                            int(pd.Timestamp(row.ts).value // 1000),
-                            int(row.event_id),
-                            str(row.event_type),
-                        )
-                    )
-        buf.sort()
-        wm_ms = state.getCurrentWatermarkMs()
-        wm_us = wm_ms * 1000
-        rows = []
-        keep_from = 0
-        for i, (ts_us, eid, ty) in enumerate(buf):
-            if ts_us + within_us >= wm_us:
-                break  # not finalized yet; later anchors even less so
-            keep_from = i + 1
-            if ty != pattern[0] or i + k - 1 >= len(buf):
-                continue
-            succ = buf[i + 1 : i + k]
-            if all(succ[j - 1][2] == pattern[j] for j in range(1, k)) and succ[-1][
-                0
-            ] <= ts_us + within_us:
-                t_secs = [ts_us // 1_000_000] + [s[0] // 1_000_000 for s in succ]
-                rows.append(
-                    (int(key[0]), eid, *t_secs, t_secs[-1] - t_secs[0])
-                )
-        buf = buf[keep_from:]
-        if buf:
-            state.update(
-                ([b[0] for b in buf], [b[1] for b in buf], [b[2] for b in buf])
-            )
-            # wake this key when its oldest anchor can finalize; clamp
-            # above the current watermark (Spark rejects timeouts behind it)
-            desired_ms = buf[0][0] // 1000 + within_s * 1000 + 1000
-            state.setTimeoutTimestamp(max(desired_ms, wm_ms + 1000))
-        else:
-            state.remove()
-        if rows:
-            cols = ["user_id", "anchor_id"] + [f"t{i}_s" for i in range(k)] + ["span_s"]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return fn
+def _secs(ts_us: np.ndarray) -> np.ndarray:
+    return ts_us // 1_000_000
 
 
 def match_contiguous_stream(
@@ -127,84 +163,20 @@ def match_contiguous_stream(
     anchor finalizes under the watermark."""
     if len(pattern) < 2:
         raise ValueError("pattern needs at least 2 steps")
-    k = len(pattern)
-    state_schema = StructType(
-        [
-            StructField("ts_us", _long_array(), True),
-            StructField("ids", _long_array(), True),
-            StructField("types", _str_array(), True),
-        ]
-    )
-    return events.select("user_id", "event_id", "ts", "event_type").groupBy(
-        "user_id"
-    ).applyInPandasWithState(
-        _make_fn(list(pattern), within_s),
-        outputStructType=_out_schema(k),
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def _make_absence_fn(first: str, absent: str, within_s: int):
+    pattern, k = list(pattern), len(pattern)
     within_us = within_s * 1_000_000
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import pandas as pd  # noqa: PLC0415 - worker-side import
+    def step(ts, ids, types, lo, hi):
+        i = np.arange(lo, min(hi, len(ts) - k + 1))
+        ok = ts[i + k - 1] <= ts[i] + within_us
+        for j, name in enumerate(pattern):
+            ok &= types[i + j] == name
+        i = i[ok]
+        t = [_secs(ts[i + j]) for j in range(k)]
+        return [ids[i], *t, t[-1] - t[0]]
 
-        if state.exists:
-            ts_l, id_l, ty_l = state.get
-            buf = list(zip(ts_l, id_l, ty_l))
-        else:
-            buf = []
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                for row in pdf.itertuples(index=False):
-                    buf.append(
-                        (
-                            int(pd.Timestamp(row.ts).value // 1000),
-                            int(row.event_id),
-                            str(row.event_type),
-                        )
-                    )
-        buf.sort()
-        wm_ms = state.getCurrentWatermarkMs()
-        wm_us = wm_ms * 1000
-        rows = []
-        keep_from = 0
-        for i, (ts_us, eid, ty) in enumerate(buf):
-            if ts_us + within_us >= wm_us:
-                break  # not finalized yet (and neither is any later entry)
-            keep_from = i + 1
-            if ty != first:
-                continue
-            # cleared iff ANY absent-type event lands in the half-open
-            # VALUE window (ts, ts + within] — scan forward over the
-            # sorted, horizon-bounded buffer
-            cleared = False
-            for ts2, _eid2, ty2 in buf[i + 1 :]:
-                if ts2 > ts_us + within_us:
-                    break
-                if ty2 == absent and ts2 > ts_us:
-                    cleared = True
-                    break
-            if not cleared:
-                rows.append((int(key[0]), eid, ts_us // 1_000_000))
-        buf = buf[keep_from:]
-        if buf:
-            state.update(
-                ([b[0] for b in buf], [b[1] for b in buf], [b[2] for b in buf])
-            )
-            desired_ms = buf[0][0] // 1000 + within_s * 1000 + 1000
-            state.setTimeoutTimestamp(max(desired_ms, wm_ms + 1000))
-        else:
-            state.remove()
-        if rows:
-            yield pd.DataFrame(rows, columns=["user_id", "anchor_id", "t0_s"])
-
-    return fn
+    cols = ["anchor_id", *(f"t{i}_s" for i in range(k)), "span_s"]
+    return _run_matcher(events, cols, step, within_s=within_s, fwd_s=within_s)
 
 
 def match_absence_stream(
@@ -221,126 +193,28 @@ def match_absence_stream(
     (``watermark > ts + within_s`` — by then no admissible event can
     clear it).
 
-    Same state discipline as ``match_contiguous_stream``: per-key sorted
-    buffer bounded by one ``within`` horizon, finalized-prefix eviction
-    (an absent-type event that could still clear an unfinalized anchor
-    is necessarily unfinalized itself, so eviction never loses a
-    clearer), and an event-time timeout so silence — the very thing the
-    pattern detects — still flushes the key when the watermark advances.
+    Eviction keeps every clearer: an absent-type event that could still
+    clear an unfinalized anchor is necessarily unfinalized itself, and
+    the event-time timeout flushes the key when the watermark advances
+    without new rows — silence is the very thing the pattern detects.
     Output equals the batch ``operators/cep.match_absence`` over the
-    delivered (non-late) events; pinned by tests/test_round5b.py."""
-    state_schema = StructType(
-        [
-            StructField("ts_us", _long_array(), True),
-            StructField("ids", _long_array(), True),
-            StructField("types", _str_array(), True),
-        ]
-    )
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType(), False),
-            StructField("anchor_id", LongType(), False),
-            StructField("t0_s", LongType(), False),
-        ]
-    )
-    return events.select("user_id", "event_id", "ts", "event_type").groupBy(
-        "user_id"
-    ).applyInPandasWithState(
-        _make_absence_fn(first, absent, within_s),
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def _make_kleene_fn(a_ty: str, b_ty: str, c_ty: str, within_s: int):
+    delivered (non-late) events; pinned by tests/test_cep_stream.py."""
     within_us = within_s * 1_000_000
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import pandas as pd  # noqa: PLC0415 - worker-side import
+    def step(ts, ids, types, lo, hi):
+        i = np.arange(lo, hi)
+        i = i[types[i] == first]
+        # absent-type events with ts in (t, t + within]: prefix counts
+        n_absent = np.concatenate([[0], np.cumsum(types == absent)])
+        lo_w = np.searchsorted(ts, ts[i], "right")
+        hi_w = np.searchsorted(ts, ts[i] + within_us, "right")
+        i = i[n_absent[hi_w] == n_absent[lo_w]]
+        return [ids[i], _secs(ts[i])]
 
-        if state.exists:
-            ts_l, id_l, ty_l, done_l = state.get
-            buf = list(zip(ts_l, id_l, ty_l))
-            done_us = int(done_l)
-        else:
-            buf, done_us = [], -(1 << 62)
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                for row in pdf.itertuples(index=False):
-                    buf.append(
-                        (
-                            int(pd.Timestamp(row.ts).value // 1000),
-                            int(row.event_id),
-                            str(row.event_type),
-                        )
-                    )
-        buf.sort()
-        wm_ms = state.getCurrentWatermarkMs()
-        wm_us = wm_ms * 1000
-        rows = []
-        for i, (ts_us, eid, ty) in enumerate(buf):
-            if ts_us >= wm_us:
-                break  # a later event could still insert before this one
-            if ts_us < done_us or ty != c_ty:
-                continue
-            # nearest non-b predecessor: walk back over the b-run. The
-            # buffer is a contiguous time-suffix from the previous cut
-            # (prev_wm - within); since ts_c >= done_us = prev_wm, every
-            # event a VALID island could contain (anchor >= ts_c - within)
-            # is still buffered — hitting the buffer start means the true
-            # anchor already failed the time bound.
-            j = i - 1
-            n_b = 0
-            while j >= 0 and buf[j][2] == b_ty:
-                n_b += 1
-                j -= 1
-            if (
-                n_b >= 1
-                and j >= 0
-                and buf[j][2] == a_ty
-                and ts_us <= buf[j][0] + within_us
-            ):
-                t0 = buf[j][0] // 1_000_000
-                t_end = ts_us // 1_000_000
-                rows.append((int(key[0]), buf[j][1], n_b, t0, t_end, t_end - t0))
-        done_us = max(done_us, wm_us)
-        # evict only what no FUTURE c (ts >= wm) can reach: its island is
-        # time-bounded by within, so anything older than wm - within is
-        # out of reach for every not-yet-finalized terminator
-        keep_from = 0
-        while keep_from < len(buf) and buf[keep_from][0] + within_us < wm_us:
-            keep_from += 1
-        buf = buf[keep_from:]
-        if buf:
-            state.update(
-                (
-                    [b[0] for b in buf],
-                    [b[1] for b in buf],
-                    [b[2] for b in buf],
-                    done_us,
-                )
-            )
-            # wake when the oldest unemitted candidate can finalize, else
-            # when the oldest retained delimiter becomes evictable
-            pending = next((b[0] for b in buf if b[0] >= done_us), None)
-            if pending is not None:
-                desired_ms = pending // 1000 + 1000
-            else:
-                desired_ms = (buf[0][0] + within_us) // 1000 + 1000
-            state.setTimeoutTimestamp(max(desired_ms, wm_ms + 1000))
-        else:
-            state.remove()
-        if rows:
-            yield pd.DataFrame(
-                rows,
-                columns=["user_id", "anchor_id", "n_b", "t0_s", "t_end_s", "span_s"],
-            )
+    return _run_matcher(events, ["anchor_id", "t0_s"], step, within_s=within_s, fwd_s=within_s)
 
-    return fn
+
+_RUN_COLS = ["anchor_id", "n_b", "t0_s", "t_end_s", "span_s"]
 
 
 def match_kleene_stream(
@@ -354,9 +228,8 @@ def match_kleene_stream(
     Finalization: a terminator (``c``) row's outcome depends ONLY on its
     predecessors (nearest non-``b``, the run between, the time bound), so
     it is final exactly when the watermark passes its own timestamp — no
-    admissible event can insert before it anymore. Emission therefore
-    advances a per-key high-water mark (``done_us``): each batch emits
-    terminators with ``done_us <= ts < watermark`` exactly once.
+    admissible event can insert before it anymore. Each terminator with
+    ``done_us <= ts < watermark`` is therefore emitted exactly once.
 
     Eviction keeps a longer tail than emission: an unfinalized terminator
     (``ts >= watermark``) can reach back ``within`` seconds for its
@@ -368,107 +241,34 @@ def match_kleene_stream(
 
     Output equals the batch operator over the delivered (non-late)
     events restricted to finalized terminators; pinned by
-    tests/test_cep_api.py.
+    tests/test_cep_stream.py.
     """
     a_ty, b_ty, c_ty = pattern
-    state_schema = StructType(
-        [
-            StructField("ts_us", _long_array(), True),
-            StructField("ids", _long_array(), True),
-            StructField("types", _str_array(), True),
-            StructField("done_us", LongType(), True),
-        ]
-    )
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType(), False),
-            StructField("anchor_id", LongType(), False),
-            StructField("n_b", LongType(), False),
-            StructField("t0_s", LongType(), False),
-            StructField("t_end_s", LongType(), False),
-            StructField("span_s", LongType(), False),
-        ]
-    )
-    return events.select("user_id", "event_id", "ts", "event_type").groupBy(
-        "user_id"
-    ).applyInPandasWithState(
-        _make_kleene_fn(a_ty, b_ty, c_ty, within_s),
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
+    within_us = within_s * 1_000_000
+
+    def step(ts, ids, types, lo, hi):
+        # position of the nearest non-b at or before each position
+        pos = np.arange(len(ts))
+        last_non_b = np.maximum.accumulate(np.where(types != b_ty, pos, -1))
+        i = np.arange(max(lo, 1), hi)
+        i = i[types[i] == c_ty]
+        j = last_non_b[i - 1]
+        ok = (j >= 0) & (j < i - 1)
+        i, j = i[ok], j[ok]
+        ok = (types[j] == a_ty) & (ts[i] <= ts[j] + within_us)
+        i, j = i[ok], j[ok]
+        t0, t_end = _secs(ts[j]), _secs(ts[i])
+        return [ids[j], i - j - 1, t0, t_end, t_end - t0]
+
+    return _run_matcher(events, _RUN_COLS, step, within_s=within_s, fwd_s=0)
 
 
-def _match_set(name: str) -> frozenset:
+def _match_set(name: str) -> list[str]:
     """Labels/types that satisfy a pattern step: the step's own name (the
     dispatcher's label projection emits full names, alternations
     included) plus each alternation branch (raw event types when no
     projection ran)."""
-    return frozenset([name]) | frozenset(name.split("|"))
-
-
-def _make_bounded_fn(a: str, b: str, c: str, m: int, n: int, within_s: int):
-    within_us = within_s * 1_000_000
-    a_set, b_set, c_set = _match_set(a), _match_set(b), _match_set(c)
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import pandas as pd  # noqa: PLC0415 - worker-side import
-
-        if state.exists:
-            ts_l, id_l, ty_l = state.get
-            buf = list(zip(ts_l, id_l, ty_l))
-        else:
-            buf = []
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                for row in pdf.itertuples(index=False):
-                    buf.append(
-                        (
-                            int(pd.Timestamp(row.ts).value // 1000),
-                            int(row.event_id),
-                            str(row.event_type),
-                        )
-                    )
-        buf.sort()
-        wm_ms = state.getCurrentWatermarkMs()
-        wm_us = wm_ms * 1000
-        rows = []
-        keep_from = 0
-        for i, (ts_us, eid, ty) in enumerate(buf):
-            if ts_us + within_us >= wm_us:
-                break  # anchor not finalized; later anchors even less so
-            keep_from = i + 1
-            if ty not in a_set:
-                continue
-            for k in range(n, m - 1, -1):  # GREEDY: largest width first
-                j = i + k + 1
-                if j >= len(buf):
-                    continue
-                if buf[j][0] > ts_us + within_us or buf[j][2] not in c_set:
-                    continue
-                if all(buf[i + x][2] in b_set for x in range(1, k + 1)):
-                    t0, te = ts_us // 1_000_000, buf[j][0] // 1_000_000
-                    rows.append((int(key[0]), eid, k, t0, te, te - t0))
-                    break
-        buf = buf[keep_from:]
-        if buf:
-            state.update(
-                ([x[0] for x in buf], [x[1] for x in buf], [x[2] for x in buf])
-            )
-            desired_ms = buf[0][0] // 1000 + within_s * 1000 + 1000
-            state.setTimeoutTimestamp(max(desired_ms, wm_ms + 1000))
-        else:
-            state.remove()
-        if rows:
-            yield pd.DataFrame(
-                rows,
-                columns=["user_id", "anchor_id", "n_b", "t0_s", "t_end_s", "span_s"],
-            )
-
-    return fn
+    return [name, *name.split("|")]
 
 
 def match_bounded_stream(
@@ -489,50 +289,34 @@ def match_bounded_stream(
     Alternation step names (``'x|y'``) match either raw branch types or
     the dispatcher's projected labels. Output equals the batch operator
     over the delivered events restricted to finalized anchors; pinned by
-    tests/test_cep_api.py::test_match_bounded_stream_equals_batch.
+    tests/test_cep_stream.py::test_match_bounded_stream_equals_batch.
     """
     a_ty, b_ty, c_ty = pattern
     m, n = bounds
     if m < 0 or n < m or n == 0:
         raise ValueError(f"bad bounds {{{m},{n}}}")
-    state_schema = StructType(
-        [
-            StructField("ts_us", _long_array(), True),
-            StructField("ids", _long_array(), True),
-            StructField("types", _str_array(), True),
-        ]
-    )
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType(), False),
-            StructField("anchor_id", LongType(), False),
-            StructField("n_b", LongType(), False),
-            StructField("t0_s", LongType(), False),
-            StructField("t_end_s", LongType(), False),
-            StructField("span_s", LongType(), False),
-        ]
-    )
-    return events.select("user_id", "event_id", "ts", "event_type").groupBy(
-        "user_id"
-    ).applyInPandasWithState(
-        _make_bounded_fn(a_ty, b_ty, c_ty, m, n, within_s),
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
+    within_us = within_s * 1_000_000
 
+    def step(ts, ids, types, lo, hi):
+        size = len(ts)
+        is_b = np.isin(types, _match_set(b_ty))
+        is_c = np.isin(types, _match_set(c_ty))
+        # b_run[p] = length of the run of b rows starting at p (b_run[size] = 0)
+        pos = np.arange(size + 1)
+        next_non_b = np.minimum.accumulate(np.where(np.append(is_b, False), size, pos)[::-1])[::-1]
+        b_run = next_non_b - pos
+        i = np.arange(lo, hi)
+        i = i[np.isin(types[i], _match_set(a_ty))]
+        width = np.full(len(i), -1)
+        for k in range(n, m - 1, -1):  # GREEDY: largest width first
+            j = np.minimum(i + k + 1, size - 1)
+            ok = (width < 0) & (i + k + 1 < size) & (b_run[i + 1] >= k)
+            width[ok & is_c[j] & (ts[j] <= ts[i] + within_us)] = k
+        i, width = i[width >= 0], width[width >= 0]
+        t0, t_end = _secs(ts[i]), _secs(ts[i + width + 1])
+        return [ids[i], width, t0, t_end, t_end - t0]
 
-def _long_array():
-    from pyspark.sql.types import ArrayType
-
-    return ArrayType(LongType())
-
-
-def _str_array():
-    from pyspark.sql.types import ArrayType, StringType
-
-    return ArrayType(StringType())
+    return _run_matcher(events, _RUN_COLS, step, within_s=within_s, fwd_s=within_s)
 
 
 def match_pattern_stream(
@@ -543,9 +327,10 @@ def match_pattern_stream(
 ) -> DataFrame:
     """Declarative entry point for the STREAMING matchers — the
     streaming counterpart of ``operators/cep.match_pattern``. Parses the
-    same PATTERN grammar (``"a b c"``, ``"a b+ c"``, ``"a !b"``) and
-    dispatches to :func:`match_contiguous_stream`,
-    :func:`match_kleene_stream`, or :func:`match_absence_stream`.
+    same PATTERN grammar (``"a b c"``, ``"a b+ c"``, ``"a b{1,2} c"``,
+    ``"a !b"``) and dispatches to :func:`match_contiguous_stream`,
+    :func:`match_kleene_stream`, :func:`match_bounded_stream` or
+    :func:`match_absence_stream`.
 
     ``defines`` (MATCH_RECOGNIZE DEFINE, round 5: batch/streaming parity
     for the dispatcher) maps a step name to an arbitrary per-row Column
@@ -565,11 +350,9 @@ def match_pattern_stream(
     the batch Kleene form would let it satisfy both (reluctant-B+
     termination). Equality with the batch operator under disjoint
     DEFINEs is pinned by
-    tests/test_cep_api.py::test_match_pattern_stream_defines_equals_batch.
+    tests/test_cep_stream.py::test_match_pattern_stream_defines_equals_batch.
     ``events`` must already carry ``withWatermark`` on ``ts``.
     """
-    from pyspark.sql import functions as F
-
     from dataflow_geobeam_spark.operators.cep import _step_pred, parse_pattern
 
     steps = parse_pattern(pattern)

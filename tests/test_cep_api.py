@@ -2,6 +2,7 @@
 parser grammar, dispatch equivalence to the four hand-built matchers, and
 DEFINE-clause predicates cross-checked against an independently-formulated
 DuckDB query (correlated/self-join SQL, not the engine's window compilation).
+The streaming dispatcher and matchers are pinned in test_cep_stream.py.
 
 Reference parity: the reference (Beam ingestion glue) has no CEP surface;
 this is north-rule scope (``BASELINE.json: north_star``, "CEP engine").
@@ -179,213 +180,6 @@ def test_defines_null_predicate_is_nonmatch(spark):
     assert sorted(r.user_id for r in got_abs) == [1]
 
 
-def test_match_kleene_stream_equals_batch(spark, tmp_path):
-    """Streaming Kleene CEP vs the (oracle-gated) batch operator: the
-    events table streamed as 4 time-ordered files with a 1-hour
-    watermark delay must emit exactly the batch matches whose TERMINATOR
-    finalizes under the final watermark (wm > ts_c) — terminator-based
-    finalization, unlike the anchor-based contiguous/absence forms —
-    including matches flushed purely by the event-time timeout."""
-    import datetime as dt
-
-    import pyarrow as pa
-    import pyarrow.parquet as apq
-    from pyspark.sql import functions as F
-
-    from dataflow_geobeam_spark.operators.cep import match_kleene
-    from dataflow_geobeam_spark.streaming.cep import match_kleene_stream
-
-    sf_dir = "/root/testdata/sf0.001"
-    pattern, within_s = ("view", "click", "purchase"), 7 * 86400
-    t = apq.read_table(
-        f"{sf_dir}/events.parquet",
-        columns=["user_id", "event_id", "ts", "event_type"],
-    )
-    idx = pa.compute.sort_indices(
-        t, sort_keys=[("ts", "ascending"), ("event_id", "ascending")]
-    )
-    t = t.take(idx)
-    stream_dir = tmp_path / "ev_stream_kleene"
-    stream_dir.mkdir()
-    n = t.num_rows
-    per = (n + 3) // 4
-    for f in range(4):
-        apq.write_table(t.slice(f * per, per), str(stream_dir / f"part-{f:04d}.parquet"))
-
-    stream = (
-        spark.readStream.schema(
-            "user_id long, event_id long, ts timestamp, event_type string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(stream_dir))
-        .withWatermark("ts", "1 hour")
-    )
-    out = match_kleene_stream(stream, pattern, within_s)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("cep_kleene_stream_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {
-        tuple(r) for r in spark.sql("select * from cep_kleene_stream_test").collect()
-    }
-
-    # Spark's watermark = ms-truncated max event time - delay; a match is
-    # finalized iff its terminator ts < wm. Restricting the batch INPUT to
-    # ts < wm keeps every island intact (islands only look backward).
-    max_ts = pa.compute.max(t.column("ts")).as_py()
-    wm_dt = dt.datetime.fromtimestamp(
-        (int(max_ts.timestamp() * 1000) - 3600_000) / 1000.0
-    )
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").where(
-        F.col("ts") < F.lit(wm_dt)
-    )
-    batch = {tuple(r) for r in match_kleene(ev, pattern, within_s).collect()}
-    assert got == batch and len(batch) > 0
-
-
-def test_match_pattern_stream_dispatch(spark, tmp_path):
-    """The streaming declarative entry point: grammar errors raise before
-    any query starts, and a dispatched contiguous pattern run availableNow
-    over a tiny file stream emits exactly the hand-computed finalized
-    match."""
-    import datetime as dt
-
-    import pyarrow as pa
-    import pyarrow.parquet as apq
-    import pytest
-
-    from dataflow_geobeam_spark.streaming.cep import match_pattern_stream
-
-    t0 = dt.datetime(2024, 1, 1)
-    rows = {
-        "user_id": [1, 1, 1, 2, 9],
-        "event_id": [10, 11, 12, 20, 90],
-        "ts": [
-            t0,
-            t0 + dt.timedelta(seconds=5),
-            t0 + dt.timedelta(seconds=9),
-            t0 + dt.timedelta(seconds=3),
-            t0 + dt.timedelta(days=30),  # watermark driver row
-        ],
-        "event_type": ["a", "b", "c", "a", "z"],
-    }
-    stream_dir = tmp_path / "tiny_stream"
-    stream_dir.mkdir()
-    apq.write_table(pa.table(rows), str(stream_dir / "part-0000.parquet"))
-    stream = (
-        spark.readStream.schema(
-            "user_id long, event_id long, ts timestamp, event_type string"
-        )
-        .parquet(str(stream_dir))
-        .withWatermark("ts", "1 hour")
-    )
-    with pytest.raises(ValueError, match="negation"):
-        match_pattern_stream(stream, "a b !c", 60)
-    with pytest.raises(ValueError, match="quantifiers"):
-        match_pattern_stream(stream, "a+ b c", 60)
-
-    out = match_pattern_stream(stream, "a b c", within_s=60)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("cep_dispatch_stream_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = [tuple(r) for r in spark.sql("select * from cep_dispatch_stream_test").collect()]
-    t0_s = int(t0.timestamp())
-    assert got == [(1, 10, t0_s, t0_s + 5, t0_s + 9, 9)]
-
-
-def test_match_pattern_stream_defines_equals_batch(spark, tmp_path):
-    """Streaming dispatcher with a DEFINE clause (round 5: batch/streaming
-    parity): the driver query's exact shape — PATTERN 'view click+
-    big_purchase' with big_purchase := purchase AND value >= 30 — run
-    availableNow over the events table as a 4-file stream must emit
-    exactly the batch match_pattern matches whose terminator finalizes
-    under the final watermark. The DEFINEs here are pairwise disjoint per
-    row (type-equality against distinct types), the case the upstream
-    label projection is exact for."""
-    import datetime as dt
-
-    import pyarrow as pa
-    import pyarrow.parquet as apq
-    from pyspark.sql import functions as F
-
-    from dataflow_geobeam_spark.operators.cep import match_pattern
-    from dataflow_geobeam_spark.streaming.cep import match_pattern_stream
-
-    sf_dir = "/root/testdata/sf0.001"
-    pattern, within_s = "view click+ big_purchase", 7 * 86400
-
-    def defines():
-        return {
-            "big_purchase": (F.col("event_type") == "purchase")
-            & (F.col("value") >= 30.0)
-        }
-
-    t = apq.read_table(
-        f"{sf_dir}/events.parquet",
-        columns=["user_id", "event_id", "ts", "event_type", "value"],
-    )
-    idx = pa.compute.sort_indices(
-        t, sort_keys=[("ts", "ascending"), ("event_id", "ascending")]
-    )
-    t = t.take(idx)
-    stream_dir = tmp_path / "ev_stream_defines"
-    stream_dir.mkdir()
-    n = t.num_rows
-    per = (n + 3) // 4
-    for f in range(4):
-        apq.write_table(t.slice(f * per, per), str(stream_dir / f"part-{f:04d}.parquet"))
-
-    stream = (
-        spark.readStream.schema(
-            "user_id long, event_id long, ts timestamp, event_type string, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(stream_dir))
-        .withWatermark("ts", "1 hour")
-    )
-    out = match_pattern_stream(stream, pattern, within_s, defines=defines())
-    q = (
-        out.writeStream.format("memory")
-        .queryName("cep_defines_stream_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {
-        tuple(r) for r in spark.sql("select * from cep_defines_stream_test").collect()
-    }
-
-    # terminator-finalized subset: restrict the batch INPUT to ts < wm
-    # (islands only look backward — see the Kleene equality test)
-    max_ts = pa.compute.max(t.column("ts")).as_py()
-    wm_dt = dt.datetime.fromtimestamp(
-        (int(max_ts.timestamp() * 1000) - 3600_000) / 1000.0
-    )
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").where(
-        F.col("ts") < F.lit(wm_dt)
-    )
-    batch = {
-        tuple(r)
-        for r in match_pattern(ev, pattern, within_s, defines=defines()).collect()
-    }
-    assert got == batch and len(batch) > 0
-    # a defined step name absent from the pattern is a spec error
-    import pytest
-
-    with pytest.raises(ValueError, match="not in pattern"):
-        match_pattern_stream(stream, "view click+ purchase", within_s, defines=defines())
-
-
 def test_parse_pattern_alternation_and_bounds():
     assert parse_pattern("view (click|cart){1,2} purchase") == [
         Step("view"),
@@ -466,66 +260,3 @@ def test_match_bounded_single_pass_plan(spark, sf_dir):
     assert final.count("Exchange hashpartitioning") == 1
     assert final.count("Window [") == 1
     assert "Join" not in final and "Union" not in final
-
-
-def test_match_bounded_stream_equals_batch(spark, tmp_path):
-    """Streaming bounded-repetition CEP (with alternation, through the
-    declarative dispatcher) vs the hash-gated batch operator: events
-    streamed as 4 time-ordered files with a 1-hour watermark delay emit
-    exactly the batch matches whose anchors FINALIZE under the final
-    watermark (wm > anchor_ts + within)."""
-    import datetime as dt
-
-    import pyarrow as pa
-    import pyarrow.parquet as apq
-
-    from dataflow_geobeam_spark.streaming.cep import match_pattern_stream
-
-    sf_dir = "/root/testdata/sf0.001"
-    pat, within_s = "view (click|error){1,2} purchase", 3 * 86400
-    t = apq.read_table(
-        f"{sf_dir}/events.parquet",
-        columns=["user_id", "event_id", "ts", "event_type"],
-    )
-    idx = pa.compute.sort_indices(
-        t, sort_keys=[("ts", "ascending"), ("event_id", "ascending")]
-    )
-    t = t.take(idx)
-    stream_dir = tmp_path / "ev_stream_bounded"
-    stream_dir.mkdir()
-    n = t.num_rows
-    per = (n + 3) // 4
-    for f in range(4):
-        apq.write_table(t.slice(f * per, per), str(stream_dir / f"part-{f:04d}.parquet"))
-
-    stream = (
-        spark.readStream.schema(
-            "user_id long, event_id long, ts timestamp, event_type string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(stream_dir))
-        .withWatermark("ts", "1 hour")
-    )
-    out = match_pattern_stream(stream, pat, within_s)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("cep_bounded_stream_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {
-        tuple(r)
-        for r in spark.sql("select * from cep_bounded_stream_test").collect()
-    }
-
-    max_ts = pa.compute.max(t.column("ts")).as_py()
-    wm_s = int((max_ts - dt.timedelta(hours=1)).timestamp())
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    batch = {
-        tuple(r)
-        for r in match_pattern(ev, pat, within_s).collect()
-        if r.t0_s + within_s < wm_s
-    }
-    assert got == batch and len(batch) > 0

@@ -3,7 +3,8 @@
 Every audio, image, video and tar wrapper runs through ``clip_map``. A
 payload the decoder rejects becomes a null/fill row or no row, as the
 wrapper documents, and the job carries on; an exception raised by a kernel
-fails the job.
+fails the job. The call-site guards at the end also pin the other
+one-runner modules (similarity jobs, streaming CEP).
 """
 
 from __future__ import annotations
@@ -269,3 +270,14 @@ def test_one_kernel_per_similarity_job_and_no_blanket_except_in_operators():
     assert (ops / "similarity.py").read_text().count(".mapInArrow(") == 4
     blanket = [p.name for p in ops.rglob("*.py") if "except Exception" in p.read_text()]
     assert blanket == []
+
+
+def test_one_keyed_state_runner_in_streaming_cep():
+    """Every streaming CEP matcher runs through one keyed-state runner:
+    ``streaming/cep.py`` holds exactly one ``applyInPandasWithState(``,
+    reads its input frames column-wise (no ``itertuples``) and hides no
+    error behind ``except Exception``."""
+    src = (pathlib.Path(decode.__file__).parents[1] / "streaming" / "cep.py").read_text()
+    assert src.count("applyInPandasWithState(") == 1
+    assert "itertuples" not in src
+    assert "except Exception" not in src

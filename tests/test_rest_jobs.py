@@ -1,39 +1,8 @@
-"""Paginated REST source (injected fetcher) + spark-submit job entry."""
+"""Paginated REST Data Source (S6) + spark-submit job entry."""
 
 from __future__ import annotations
 
 import json
-
-from pyspark.sql.types import IntegerType, StringType, StructField, StructType
-
-from dataflow_geobeam_spark.sources import rest
-
-SCHEMA = StructType(
-    [StructField("clip_id", StringType()), StructField("sr_hz", IntegerType())]
-)
-
-
-def _make_fetcher():
-    # nested so cloudpickle serializes it by value (a module-level function
-    # in tests/ is not importable on Spark workers)
-    def fetch(page: int) -> list[dict]:
-        if page >= 3:
-            return []
-        return [{"clip_id": f"p{page}c{i}", "sr_hz": 8000 * (page + 1)} for i in range(4)]
-
-    return fetch
-
-
-def test_read_paginated_driver_side(spark):
-    df = rest.read_paginated(spark, _make_fetcher(), SCHEMA)
-    assert df.count() == 12
-    assert {r.sr_hz for r in df.collect()} == {8000, 16000, 24000}
-
-
-def test_read_pages_distributed(spark):
-    df = rest.read_pages_distributed(spark, _make_fetcher(), SCHEMA, n_pages=3)
-    assert df.count() == 12
-    assert sorted(r.clip_id for r in df.collect())[0] == "p0c0"
 
 
 def test_jobs_cli_batch(spark, fixture_dir, tmp_path, capsys):

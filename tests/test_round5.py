@@ -1,7 +1,7 @@
 """Round-5 tests: sink maintenance-cadence correctness (compact→expire→compact,
 time travel after expiry, orphan GC) and the streaming driver-gate query.
 The IVF-PQ kernel and near-dup ``corpus_n``/``n_planes="auto"`` tests live in
-test_similarity.py.
+test_similarity.py; the streaming CEP parity tests in test_cep_stream.py.
 
 Reference precedent for the sink semantics: the reference's replace-on-rerun
 BigQuery loads (``/root/reference/geobeam/examples/shapefile_nfhl.py:43-49``)
@@ -412,62 +412,6 @@ def test_audio_near_dup_stream_vs_corpus(spark, tmp_path):
     }
     assert got == batch
     idx[0].unpersist(), idx[1].unpersist()
-
-
-def test_match_contiguous_stream_equals_batch(spark, tmp_path):
-    """Streaming CEP vs the (oracle-gated) batch operator: the events
-    table streamed as 4 time-ordered files with a 1-hour watermark delay
-    must emit exactly the batch matches whose anchors FINALIZE under the
-    final watermark (wm > anchor_ts + within)."""
-    import pyarrow as pa
-    import pyarrow.parquet as apq
-
-    from dataflow_geobeam_spark.operators.cep import match_contiguous
-    from dataflow_geobeam_spark.streaming.cep import match_contiguous_stream
-
-    sf_dir = "/root/testdata/sf0.001"
-    pattern, within_s = ["view", "click"], 3 * 86400
-    t = apq.read_table(f"{sf_dir}/events.parquet", columns=["user_id", "event_id", "ts", "event_type"])
-    idx = pa.compute.sort_indices(t, sort_keys=[("ts", "ascending"), ("event_id", "ascending")])
-    t = t.take(idx)
-    stream_dir = tmp_path / "ev_stream"
-    stream_dir.mkdir()
-    n = t.num_rows
-    per = (n + 3) // 4
-    for f in range(4):
-        apq.write_table(t.slice(f * per, per), str(stream_dir / f"part-{f:04d}.parquet"))
-
-    stream = (
-        spark.readStream.schema("user_id long, event_id long, ts timestamp, event_type string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(stream_dir))
-        .withWatermark("ts", "1 hour")
-    )
-    out = match_contiguous_stream(stream, pattern, within_s)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("cep_stream_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {
-        tuple(r) for r in spark.sql("select * from cep_stream_test").collect()
-    }
-
-    # final watermark: max event ts minus the 1h delay (to the second)
-    import datetime as dt
-
-    max_ts = pa.compute.max(t.column("ts")).as_py()
-    wm_s = int((max_ts - dt.timedelta(hours=1)).timestamp())
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    batch = {
-        tuple(r)
-        for r in match_contiguous(ev, pattern, within_s).collect()
-        if r.t0_s + within_s < wm_s
-    }
-    assert got == batch and len(batch) > 0
 
 
 def test_cep_batch_plan_shapes(spark):

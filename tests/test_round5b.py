@@ -3,7 +3,8 @@ independent scalar-loop mirror), energy-threshold VAD segmentation, and
 the two new CEP match semantics (absence / negation and Kleene-plus
 iteration) — semantics pinned on hand-built sequences, plan shapes
 pinned window-only, and cross-checked against DuckDB formulations that
-differ from the engine's compilation (NOT EXISTS vs RANGE frame).
+differ from the engine's compilation (NOT EXISTS vs RANGE frame). Their
+streaming forms are pinned in test_cep_stream.py.
 
 Reference parity: the reference (Beam ingestion glue) has no feature
 extraction or CEP surface; this is north-rule scope
@@ -274,73 +275,6 @@ def test_vad_plan_single_exchange(spark, sf_dir):
     plan = plan.split("== Initial Plan ==")[0]
     assert "Join" not in plan
     assert plan.count("Exchange hashpartitioning") == 1
-
-
-# ---------------------------------------------------------------------------
-# streaming absence matcher == batch operator on the finalizable subset
-# ---------------------------------------------------------------------------
-
-
-def test_match_absence_stream_equals_batch(spark, tmp_path):
-    """Streaming negation CEP vs the (oracle-gated) batch operator: the
-    events table streamed as 4 time-ordered files with a 1-hour
-    watermark delay must emit exactly the batch absences whose anchors
-    FINALIZE under the final watermark (wm > anchor_ts + within) —
-    including anchors flushed purely by the event-time timeout (absence
-    means no further rows arrive for the key)."""
-    import datetime as dt
-
-    import pyarrow as pa
-    import pyarrow.parquet as apq
-
-    from dataflow_geobeam_spark.operators.cep import match_absence
-    from dataflow_geobeam_spark.streaming.cep import match_absence_stream
-
-    sf_dir = "/root/testdata/sf0.001"
-    first, absent, within_s = "view", "purchase", 6 * 3600
-    t = apq.read_table(
-        f"{sf_dir}/events.parquet",
-        columns=["user_id", "event_id", "ts", "event_type"],
-    )
-    idx = pa.compute.sort_indices(
-        t, sort_keys=[("ts", "ascending"), ("event_id", "ascending")]
-    )
-    t = t.take(idx)
-    stream_dir = tmp_path / "ev_stream_abs"
-    stream_dir.mkdir()
-    n = t.num_rows
-    per = (n + 3) // 4
-    for f in range(4):
-        apq.write_table(t.slice(f * per, per), str(stream_dir / f"part-{f:04d}.parquet"))
-
-    stream = (
-        spark.readStream.schema("user_id long, event_id long, ts timestamp, event_type string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(stream_dir))
-        .withWatermark("ts", "1 hour")
-    )
-    out = match_absence_stream(stream, first, absent, within_s)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("cep_absence_stream_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {
-        tuple(r) for r in spark.sql("select * from cep_absence_stream_test").collect()
-    }
-
-    max_ts = pa.compute.max(t.column("ts")).as_py()
-    wm_s = int((max_ts - dt.timedelta(hours=1)).timestamp())
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    batch = {
-        tuple(r)
-        for r in match_absence(ev, first, absent, within_s).collect()
-        if r.t0_s + within_s < wm_s
-    }
-    assert got == batch and len(batch) > 0
 
 
 def test_vad_segments_multi_segment_extraction(spark):
