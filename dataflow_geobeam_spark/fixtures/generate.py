@@ -1,35 +1,53 @@
-"""Seeded generator for the clips / transcripts_late fixture tables + oracle.
+"""Seeded generator for the fixture tables and their golden oracle outputs.
 
-Implements FIXTURES.md. Written with numpy/pandas/pyarrow ONLY (no Spark) so
-the golden outputs are an independent oracle: the engine decodes `bytes`
-with its vectorized UDF at query time, while the golden table's metrics were
-computed here at generation time from the same encoded payloads.
+Implements FIXTURES.md. Written with numpy/pyarrow only (no Spark), so the
+goldens are an independent oracle: the engine decodes ``bytes`` with its
+kernels at query time, while the goldens were computed here at generation
+time from the same encoded payloads. Every compute kernel on the oracle
+side (container encode/decode, metrics, spectral features, LSH planes, ...)
+comes from ``fixtures.independent``, a second implementation written
+against the container/normalization spec that imports nothing from the
+engine; ``tests/test_independent_kernels.py`` pins the two equal and pins
+that this module imports no engine compute module.
 
-Round-3: every compute kernel on the oracle side (container encode/decode,
-metrics, spectral features, LSH planes) comes from ``fixtures.independent``
-— a second implementation written against the container/normalization SPEC,
-importing NOTHING from the engine (round-2 VERDICT "What's wrong" #3: the
-generator previously imported ``codecs.decode`` / ``spectral_features_np`` /
-``_all_planes``, so a shared-kernel bug would pass both sides).
-``tests/test_independent_kernels.py`` pins the two implementations equal.
+Layout per scale factor (the basename of a testdata dir such as
+``sf0.01`` picks ``<root>/sf0.01/``): ``ensure_fixtures`` writes
+clips.parquet, transcripts_late.parquet, golden_clips.parquet,
+golden_frames.parquet, golden_spectral.parquet and MANIFEST.json, gated on
+the manifest's version and row count; every other ``ensure_*`` writes one
+more input table (images_v5, audio_dupes, flac_clips, ...) or golden.
 
-Layout per scale factor (mirrors /root/testdata/sf*):
+Every file is a pure function of its scale factor, written through a few
+helpers:
 
-    /root/repo/fixtures/sf0.01/clips.parquet
-    /root/repo/fixtures/sf0.01/transcripts_late.parquet
-    /root/repo/fixtures/sf0.01/golden_clips.parquet   (oracle: per-row decode)
-    /root/repo/fixtures/sf0.01/MANIFEST.json
+* ``_cached(sf_dir, root, name, build, **write_kw)`` is the one existence
+  gate: ``build()`` runs only when the file is missing, and its table is
+  written crash-safe by ``_write_table_atomic`` (zstd).
+* ``_per_clip_golden(sf_dir, root, name, kernel, schema)`` is the one
+  decode -> kernel -> table loop over clips.parquet. A golden is a pure
+  ``kernel(row, pcm, sr) -> list[tuple]`` (``sr`` is the row's ``sr_hz``,
+  else the decoded rate): 0 tuples drop the clip, N tuples explode it.
+  The failure rule is the engine's ``clip_map`` contract: a decode
+  ``ValueError`` means no row; any other error fails generation, so an
+  oracle bug can never silently drop golden rows.
+* Shared numerics, one copy each: ``_frame_rms``, ``_fold_cos`` (Spark's
+  sequential fold accumulation), ``_embeddings``, ``_topk_rows`` and
+  ``_pairs_at_least``.
 
-Schema of `clips` is exactly the input_hint shape plus event-time:
-(clip_id string, bytes binary, sr_hz int, dur_ms int, codec string,
- transcript string, ts timestamp).
+Schema of ``clips`` is the input_hint shape plus event time: (clip_id
+string, bytes binary, sr_hz int, dur_ms int, codec string, transcript
+string, ts timestamp).
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
+import math
 import os
+import zlib
 from datetime import datetime, timedelta
+from typing import Callable, Iterable, Iterator
 
 import numpy as np
 import pyarrow as pa
@@ -63,24 +81,126 @@ CLIPS_SCHEMA = pa.schema(
     ]
 )
 
+_Kernel = Callable[[dict, np.ndarray, int], list]
 
-def _write_table_atomic(tbl: pa.Table, path: str, **kwargs) -> None:
-    """Crash-safe parquet write. Every ensure_* golden below is
-    existence-gated (``if os.path.exists(path): return path``), so a kill
-    mid-write — driver timeout, SIGKILL between gate phases — must not leave
-    a truncated file at the final path: it would be trusted as a valid cache
-    forever and fail every later hash gate. Write to a pid-unique temp name
-    in the same directory, then ``os.replace`` (atomic on POSIX). The pid
-    suffix also makes concurrent generators (pytest and the driver gate can
-    race on the same fixtures root) last-writer-wins on identical content
-    instead of interleaving bytes into one file."""
+
+def _write_table_atomic(
+    tbl: pa.Table | Iterable[pa.Table], path: str, row_group_size: int | None = None, **kwargs
+) -> None:
+    """Crash-safe parquet write. Every fixture file is existence-gated
+    (``_cached``), so a kill mid-write (driver timeout, SIGKILL between
+    gate phases) must not leave a truncated file at the final path: it
+    would be trusted as a valid cache forever and fail every later hash
+    gate. Write to a pid-unique temp name in the same directory, then
+    ``os.replace`` (atomic on POSIX). The pid suffix also makes concurrent
+    generators (pytest and the driver gate can race on the same fixtures
+    root) last-writer-wins on identical content instead of interleaving
+    bytes into one file. ``tbl`` may also be an iterable of same-schema
+    blocks, streamed one at a time so a bench-scale corpus never sits in
+    memory whole."""
     tmp = f"{path}.tmp.{os.getpid()}"
+    writer = None
     try:
-        pq.write_table(tbl, tmp, **kwargs)
+        for block in [tbl] if isinstance(tbl, pa.Table) else tbl:
+            if writer is None:
+                writer = pq.ParquetWriter(tmp, block.schema, **kwargs)
+            writer.write_table(block, row_group_size=row_group_size)
+        writer.close()
         os.replace(tmp, path)
     finally:
+        if writer is not None:
+            writer.close()
         if os.path.exists(tmp):
             os.unlink(tmp)
+
+
+def _cached(
+    sf_dir: str,
+    root: str,
+    name: str,
+    build: Callable[[], pa.Table | Iterable[pa.Table]],
+    **write_kw,
+) -> str:
+    """``<fixtures dir>/<name>``: built and written only when missing."""
+    out_dir = fixtures_dir_for(sf_dir, root)
+    os.makedirs(out_dir, exist_ok=True)
+    path = os.path.join(out_dir, name)
+    if os.path.exists(path):
+        return path
+    _write_table_atomic(build(), path, compression="zstd", **write_kw)
+    return path
+
+
+def _table(schema: pa.Schema, rows: list[tuple]) -> pa.Table:
+    """Row tuples (in ``schema`` field order) -> a table of exactly ``schema``."""
+    cols = list(zip(*rows)) if rows else [() for _ in schema]
+    return pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, schema)], schema=schema
+    )
+
+
+def _decoded_clips(path: str) -> Iterator[tuple[dict, np.ndarray, int]]:
+    """(row, pcm, sr) for every row of a clip table (clip_id, bytes, codec,
+    sr_hz, ...) that the oracle decodes; ``sr`` is the row's ``sr_hz``,
+    else the decoded rate. A decode ``ValueError`` skips the row, as the
+    engine nulls or drops it; any other error propagates."""
+    with pq.ParquetFile(path) as f:
+        for batch in f.iter_batches(batch_size=256):
+            for row in batch.to_pylist():
+                try:
+                    pcm, sr = independent.decode(row["bytes"], row["codec"])
+                except ValueError:
+                    continue
+                yield row, pcm, row["sr_hz"] or sr
+
+
+def _per_clip_golden(
+    sf_dir: str, root: str, name: str, kernel: _Kernel, schema: pa.Schema, **write_kw
+) -> str:
+    """A golden with one kernel call per decodable clips.parquet row (see
+    the module docstring for the kernel contract). clips.parquet must
+    already exist: the public goldens pass ``ensure_fixtures(sf_dir,
+    root)`` as ``sf_dir`` (a fixtures dir maps to itself), and the two
+    goldens ensure_fixtures writes itself cannot call back into it."""
+    clips = os.path.join(fixtures_dir_for(sf_dir, root), "clips.parquet")
+
+    def build() -> pa.Table:
+        return _table(
+            schema, [out for row, pcm, sr in _decoded_clips(clips) for out in kernel(row, pcm, sr)]
+        )
+
+    return _cached(sf_dir, root, name, build, **write_kw)
+
+
+def _requantize16(pcm: np.ndarray) -> np.ndarray:
+    """float PCM -> little-endian int16, the engine's PCM16 quantization."""
+    return np.round(np.clip(pcm, -1.0, 1.0) * 32767.0).astype("<i2")
+
+
+def _md5(b: bytes) -> str:
+    return hashlib.md5(b).hexdigest()
+
+
+def _clip_seed(row: dict) -> int:
+    """The per-clip RNG key the engine's augment kernels share."""
+    return zlib.crc32(row["clip_id"].encode("utf-8"))
+
+
+def _spark_round6(x: float) -> float:
+    """Spark's round(x, 6) (HALF_UP) for positive doubles."""
+    return math.floor(x * 1e6 + 0.5) / 1e6
+
+
+def _fold(x: np.ndarray) -> np.float64:
+    """Sequential left-to-right sum (np.cumsum is sequential by
+    construction, unlike np.sum's pairwise reduction): Spark's
+    aggregate-fold accumulation order."""
+    return np.cumsum(x)[-1]
+
+
+def _fold_cos(a: np.ndarray, b: np.ndarray) -> float:
+    """Fold-order cosine of two float64 vectors, rounded like round(x, 6)."""
+    return _spark_round6(_fold(a * b) / (np.sqrt(_fold(a * a)) * np.sqrt(_fold(b * b))))
 
 
 def sf_from_dir(sf_dir: str) -> float:
@@ -103,6 +223,11 @@ def fixtures_dir_for(sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT) -> str:
 
 def rows_for_sf(sf: float) -> int:
     return max(300, int(ROWS_PER_SF * sf))
+
+
+# ---------------------------------------------------------------------------
+# clips + transcripts_late + golden_clips (ensure_fixtures)
+# ---------------------------------------------------------------------------
 
 
 def _transcript_for(i: int, rng: np.random.Generator) -> str:
@@ -148,14 +273,33 @@ def _row(i: int) -> dict:
     }
 
 
-def _golden_decode(row: dict) -> dict:
-    """Oracle decode of the encoded payload — same rules as the engine UDF."""
+_GOLDEN_CLIPS_SCHEMA = pa.schema(
+    {
+        "clip_id": pa.string(),
+        "bucket": pa.string(),
+        "ts": pa.timestamp("us"),
+        "sr_hz": pa.int32(),
+        "dur_ms": pa.int32(),
+        "codec": pa.string(),
+        "transcript": pa.string(),
+        "decode_ok": pa.bool_(),
+        "n_samples": pa.int64(),
+        "rms": pa.float64(),
+        "peak": pa.float64(),
+        "valid": pa.bool_(),
+    }
+)
+
+
+def _golden_decode(row: dict) -> tuple:
+    """Oracle decode of the encoded payload — same rules as the engine UDF:
+    a decode ``ValueError`` is an invalid row."""
     decode_ok, n_samples, rms, peak, sr_decoded = False, 0, 0.0, 0.0, 0
     try:
         pcm, sr_decoded = independent.decode(row["bytes"], row["codec"])
         n_samples, rms, peak = independent.metrics(pcm)
         decode_ok = True
-    except (ValueError, Exception):  # noqa: BLE001 - any decode failure => invalid row
+    except ValueError:
         decode_ok = False
     expected = row["sr_hz"] * row["dur_ms"] / 1000.0
     valid = (
@@ -166,23 +310,17 @@ def _golden_decode(row: dict) -> dict:
         and expected > 0
         and abs(n_samples - expected) <= 0.1 * expected
     )
-    return {
-        "clip_id": row["clip_id"],
-        "bucket": row["bucket"],
-        "ts": row["ts"],
-        "sr_hz": row["sr_hz"],
-        "dur_ms": row["dur_ms"],
-        "codec": row["codec"],
-        "transcript": row["transcript"],
-        "decode_ok": decode_ok,
-        "n_samples": n_samples,
-        "rms": rms,
-        "peak": peak,
-        "valid": bool(valid),
-    }
+    return (
+        *(row[c] for c in ("clip_id", "bucket", "ts", "sr_hz", "dur_ms", "codec", "transcript")),
+        decode_ok,
+        n_samples,
+        rms,
+        peak,
+        bool(valid),
+    )
 
 
-def _transcript_rows(rows: list[dict]) -> list[dict]:
+def _transcript_rows(rows: list[dict]) -> list[tuple]:
     out = []
     for row in rows:
         i = row["i"]
@@ -193,26 +331,16 @@ def _transcript_rows(rows: list[dict]) -> list[dict]:
             delay = float(rng.uniform(360.0, 600.0))
         else:
             delay = float(rng.uniform(0.0, 240.0))
-        rec = {
-            "t_clip_id": row["clip_id"],
-            "t_transcript": row["transcript"],
-            "t_ts": row["ts"] + timedelta(seconds=delay),
-        }
-        out.append(rec)
+        t_ts = row["ts"] + timedelta(seconds=delay)
+        out.append((row["clip_id"], row["transcript"], t_ts))
         if i % 101 == 3:  # ~1% duplicates (dedup / exactly-once check)
-            out.append(dict(rec))
+            out.append(out[-1])
         if i % 37 == 2:  # ~3% orphans: transcript with no matching clip
-            out.append(
-                {
-                    "t_clip_id": f"zz{i:012d}",
-                    "t_transcript": f"orphan {i}",
-                    "t_ts": row["ts"] + timedelta(seconds=delay),
-                }
-            )
+            out.append((f"zz{i:012d}", f"orphan {i}", t_ts))
     return out
 
 
-def _gen_chunk(span: tuple[int, int]) -> tuple[list[dict], list[dict]]:
+def _gen_chunk(span: tuple[int, int]) -> tuple[list[dict], list[tuple]]:
     rows = [_row(i) for i in range(span[0], span[1])]
     return rows, [_golden_decode(r) for r in rows]
 
@@ -235,54 +363,34 @@ def generate_fixtures(out_dir: str, n_rows: int) -> dict:
     rows = [r for c in chunks for r in c[0]]
     golden = [g for c in chunks for g in c[1]]
 
-    clips_tbl = pa.Table.from_pydict(
-        {name: [r[name] for r in rows] for name in CLIPS_SCHEMA.names},
-        schema=CLIPS_SCHEMA,
-    )
+    clips = _table(CLIPS_SCHEMA, [tuple(r[n] for n in CLIPS_SCHEMA.names) for r in rows])
     # Bounded row groups: the row group is the scan-split unit (the engine's
     # analog of the reference's native raster block windows, geobeam/io.py:79-81);
     # ~256 rows x ~50 KB payloads keeps each unit ~13 MB and splittable.
     _write_table_atomic(
-        clips_tbl,
-        os.path.join(out_dir, "clips.parquet"),
-        compression="zstd",
-        row_group_size=256,
+        clips, os.path.join(out_dir, "clips.parquet"), compression="zstd", row_group_size=256
     )
-
     trows = _transcript_rows(rows)
-    t_tbl = pa.Table.from_pydict(
-        {
-            "t_clip_id": [t["t_clip_id"] for t in trows],
-            "t_transcript": [t["t_transcript"] for t in trows],
-            "t_ts": pa.array([t["t_ts"] for t in trows], type=pa.timestamp("us")),
-        }
+    transcripts = pa.schema(
+        {"t_clip_id": pa.string(), "t_transcript": pa.string(), "t_ts": pa.timestamp("us")}
     )
-    _write_table_atomic(t_tbl, os.path.join(out_dir, "transcripts_late.parquet"), compression="zstd")
-
-    g_tbl = pa.Table.from_pydict(
-        {
-            "clip_id": [g["clip_id"] for g in golden],
-            "bucket": [g["bucket"] for g in golden],
-            "ts": pa.array([g["ts"] for g in golden], type=pa.timestamp("us")),
-            "sr_hz": pa.array([g["sr_hz"] for g in golden], type=pa.int32()),
-            "dur_ms": pa.array([g["dur_ms"] for g in golden], type=pa.int32()),
-            "codec": [g["codec"] for g in golden],
-            "transcript": [g["transcript"] for g in golden],
-            "decode_ok": [g["decode_ok"] for g in golden],
-            "n_samples": pa.array([g["n_samples"] for g in golden], type=pa.int64()),
-            "rms": pa.array([g["rms"] for g in golden], type=pa.float64()),
-            "peak": pa.array([g["peak"] for g in golden], type=pa.float64()),
-            "valid": [g["valid"] for g in golden],
-        }
+    _write_table_atomic(
+        _table(transcripts, trows),
+        os.path.join(out_dir, "transcripts_late.parquet"),
+        compression="zstd",
     )
-    _write_table_atomic(g_tbl, os.path.join(out_dir, "golden_clips.parquet"), compression="zstd")
+    _write_table_atomic(
+        _table(_GOLDEN_CLIPS_SCHEMA, golden),
+        os.path.join(out_dir, "golden_clips.parquet"),
+        compression="zstd",
+    )
 
     manifest = {
         "version": FIXTURE_VERSION,
         "seed": SEED,
         "n_rows": n_rows,
         "n_transcripts": len(trows),
-        "n_valid": sum(1 for g in golden if g["valid"]),
+        "n_valid": sum(1 for g in golden if g[-1]),
     }
     manifest_path = os.path.join(out_dir, "MANIFEST.json")
     tmp = f"{manifest_path}.tmp.{os.getpid()}"
@@ -298,54 +406,44 @@ FRAME_MS, HOP_MS = 100, 50
 GOLDEN_FRAMES_MAX_ROWS = 3_000  # test-scale artifact (driver gate = sf0.01)
 
 
-def _spark_round6(x: float) -> float:
-    """Spark's round(x, 6) (HALF_UP) for positive doubles."""
-    import math
-
-    return math.floor(x * 1e6 + 0.5) / 1e6
-
-
-def _frame_rms_rows(row: dict) -> list[dict]:
-    """Numpy oracle of functions.audio.explode_frames for one clip.
-
-    Matches the Catalyst expression exactly: sequential left-to-right
-    double accumulation over the float32 slice (np.cumsum is sequential by
-    construction, unlike np.sum's pairwise reduction), truncating int
-    frame/hop, 1-based slice starts, tail dropped.
-    """
-    if not (
-        row["sr_hz"] > 0
-        and row["dur_ms"] > 0
-        and row["codec"] in independent.KNOWN_CODECS
-        and row["bytes"]
-    ):
-        return []  # precheck_predicate excludes the row before decode
-    try:
-        pcm, _sr = independent.decode(row["bytes"], row["codec"])
-    except Exception:  # noqa: BLE001 - decode failure => pcm NULL => no frames
-        return []
-    sr = row["sr_hz"]
+def _frame_rms(pcm: np.ndarray, sr: int) -> tuple[int, int, list[float]]:
+    """(frame, hop, per-frame RMS rounded like round(x, 6)): the numpy
+    oracle of functions.audio.explode_frames. Matches the Catalyst
+    expression exactly: sequential left-to-right double accumulation over
+    the float32 slice, truncating int frame/hop, tail dropped."""
     frame = max(1, int(sr * FRAME_MS / 1000))
     hop = max(1, int(sr * HOP_MS / 1000))
     n = pcm.shape[0]
     if n < frame:
-        return []
+        return frame, hop, []
     n_frames = (n - frame) // hop + 1
     sq = pcm.astype(np.float64) ** 2
     idx = np.arange(n_frames)[:, None] * hop + np.arange(frame)[None, :]
-    ss = np.cumsum(sq[idx], axis=1)[:, -1]
-    rms = np.sqrt(ss / float(frame))
-    return [
-        {"clip_id": row["clip_id"], "frame_idx": i, "frame_rms": _spark_round6(float(r))}
-        for i, r in enumerate(rms)
-    ]
+    rms = np.sqrt(np.cumsum(sq[idx], axis=1)[:, -1] / float(frame))
+    return frame, hop, [_spark_round6(float(r)) for r in rms]
 
 
-def _frames_chunk(span: tuple[int, int]) -> list[dict]:
-    out = []
-    for i in range(span[0], span[1]):
-        out.extend(_frame_rms_rows(_row(i)))
-    return out
+def _passes_precheck(row: dict) -> bool:
+    """The engine's precheck_predicate: it excludes these rows before decode."""
+    return bool(
+        row["sr_hz"] > 0
+        and row["dur_ms"] > 0
+        and row["codec"] in independent.KNOWN_CODECS
+        and row["bytes"]
+    )
+
+
+def _frames_kernel(row: dict, pcm: np.ndarray, sr: int) -> list[tuple]:
+    if not _passes_precheck(row):
+        return []
+    return [(row["clip_id"], i, r) for i, r in enumerate(_frame_rms(pcm, sr)[2])]
+
+
+def _spectral_kernel(row: dict, pcm: np.ndarray, sr: int) -> list[tuple]:
+    if not _passes_precheck(row):
+        return []
+    c, b, r = independent.spectral_features(pcm, sr)
+    return [(row["clip_id"], _spark_round6(c), _spark_round6(b), _spark_round6(r))]
 
 
 def ensure_golden_frames(out_dir: str, n_rows: int) -> str | None:
@@ -355,90 +453,29 @@ def ensure_golden_frames(out_dir: str, n_rows: int) -> str | None:
     correctness gate runs at sf0.01; bench scales don't read it."""
     if n_rows > GOLDEN_FRAMES_MAX_ROWS:
         return None
-    path = os.path.join(out_dir, "golden_frames.parquet")
-    if os.path.exists(path):
-        return path
-    spans = [(lo, min(lo + 500, n_rows)) for lo in range(0, n_rows, 500)]
-    if len(spans) > 1:
-        from concurrent.futures import ProcessPoolExecutor
-
-        with ProcessPoolExecutor(max_workers=min(16, os.cpu_count() or 4)) as ex:
-            chunks = list(ex.map(_frames_chunk, spans))
-    else:
-        chunks = [_frames_chunk(s) for s in spans]
-    frames = [f for c in chunks for f in c]
-    tbl = pa.Table.from_pydict(
-        {
-            "clip_id": [f["clip_id"] for f in frames],
-            "frame_idx": pa.array([f["frame_idx"] for f in frames], type=pa.int32()),
-            "frame_rms": pa.array([f["frame_rms"] for f in frames], type=pa.float64()),
-        }
+    schema = pa.schema({"clip_id": pa.string(), "frame_idx": pa.int32(), "frame_rms": pa.float64()})
+    return _per_clip_golden(
+        out_dir, os.path.dirname(out_dir), "golden_frames.parquet", _frames_kernel, schema
     )
-    _write_table_atomic(tbl, path, compression="zstd")
-    return path
-
-
-def _spectral_chunk(span: tuple[int, int]) -> list[dict]:
-    out = []
-    for i in range(span[0], span[1]):
-        row = _row(i)
-        if not (
-            row["sr_hz"] > 0
-            and row["dur_ms"] > 0
-            and row["codec"] in independent.KNOWN_CODECS
-            and row["bytes"]
-        ):
-            continue
-        try:
-            pcm, _ = independent.decode(row["bytes"], row["codec"])
-        except Exception:  # noqa: BLE001
-            continue
-        c, b, r = independent.spectral_features(pcm, row["sr_hz"])
-        out.append(
-            {
-                "clip_id": row["clip_id"],
-                "spectral_centroid_hz": _spark_round6(c),
-                "spectral_bandwidth_hz": _spark_round6(b),
-                "spectral_rolloff_hz": _spark_round6(r),
-            }
-        )
-    return out
 
 
 def ensure_golden_spectral(out_dir: str, n_rows: int) -> str | None:
-    """Idempotent golden_spectral.parquet: per-clip FFT features computed
-    by the SAME numpy kernel the Spark worker runs (functions.audio.
-    independent.spectral_features) on an independent decode. Test-scale only."""
+    """Idempotent golden_spectral.parquet: per-clip FFT features
+    (independent.spectral_features, pinned bit-identical to the engine's
+    kernel) on an independent decode. Test-scale only."""
     if n_rows > GOLDEN_FRAMES_MAX_ROWS:
         return None
-    path = os.path.join(out_dir, "golden_spectral.parquet")
-    if os.path.exists(path):
-        return path
-    spans = [(lo, min(lo + 500, n_rows)) for lo in range(0, n_rows, 500)]
-    if len(spans) > 1:
-        from concurrent.futures import ProcessPoolExecutor
-
-        with ProcessPoolExecutor(max_workers=min(16, os.cpu_count() or 4)) as ex:
-            chunks = list(ex.map(_spectral_chunk, spans))
-    else:
-        chunks = [_spectral_chunk(s) for s in spans]
-    rows = [r for c in chunks for r in c]
-    tbl = pa.Table.from_pydict(
+    schema = pa.schema(
         {
-            "clip_id": [r["clip_id"] for r in rows],
-            "spectral_centroid_hz": pa.array(
-                [r["spectral_centroid_hz"] for r in rows], type=pa.float64()
-            ),
-            "spectral_bandwidth_hz": pa.array(
-                [r["spectral_bandwidth_hz"] for r in rows], type=pa.float64()
-            ),
-            "spectral_rolloff_hz": pa.array(
-                [r["spectral_rolloff_hz"] for r in rows], type=pa.float64()
-            ),
+            "clip_id": pa.string(),
+            "spectral_centroid_hz": pa.float64(),
+            "spectral_bandwidth_hz": pa.float64(),
+            "spectral_rolloff_hz": pa.float64(),
         }
     )
-    _write_table_atomic(tbl, path, compression="zstd")
-    return path
+    return _per_clip_golden(
+        out_dir, os.path.dirname(out_dir), "golden_spectral.parquet", _spectral_kernel, schema
+    )
 
 
 def ensure_fixtures(sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT) -> str:
@@ -446,115 +483,254 @@ def ensure_fixtures(sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT) -> str:
     out_dir = fixtures_dir_for(sf_dir, root)
     manifest_path = os.path.join(out_dir, "MANIFEST.json")
     n_rows = rows_for_sf(sf_from_dir(sf_dir))
+    current = False
     if os.path.exists(manifest_path):
         try:
             with open(manifest_path) as f:
                 m = json.load(f)
-            if m.get("version") == FIXTURE_VERSION and m.get("n_rows") == n_rows:
-                ensure_golden_frames(out_dir, n_rows)
-                ensure_golden_spectral(out_dir, n_rows)
-                return out_dir
+            current = m.get("version") == FIXTURE_VERSION and m.get("n_rows") == n_rows
         except (json.JSONDecodeError, OSError):
             pass
-    if os.path.isdir(out_dir):
-        # version/row-count mismatch: wipe the WHOLE sf dir. Every other
-        # artifact in it (golden_*, audio_dupes, clips_stream_*, images,
-        # d256 embeddings) is existence-gated and derived — leaving them
-        # would silently pair v(N-1) goldens with v(N) clips. All of them
-        # regenerate lazily and deterministically.
-        import shutil
+    if not current:
+        if os.path.isdir(out_dir):
+            # version/row-count mismatch: wipe the WHOLE sf dir. Every other
+            # artifact in it (golden_*, audio_dupes, images, d256
+            # embeddings) is existence-gated and derived — leaving them
+            # would silently pair v(N-1) goldens with v(N) clips. All of
+            # them regenerate lazily and deterministically.
+            import shutil
 
-        shutil.rmtree(out_dir)
-    generate_fixtures(out_dir, n_rows)
+            shutil.rmtree(out_dir)
+        generate_fixtures(out_dir, n_rows)
     ensure_golden_frames(out_dir, n_rows)
     ensure_golden_spectral(out_dir, n_rows)
     return out_dir
 
 
-if __name__ == "__main__":
-    import sys
+# ---------------------------------------------------------------------------
+# Embedding goldens: LSH / IVF / IVF-PQ top-k and near-dup pairs. The
+# parameters are literals that mirror plans/training_data.py.
+# ---------------------------------------------------------------------------
 
-    for sf in sys.argv[1:] or ["sf0.001", "sf0.01", "sf0.1"]:
-        path = ensure_fixtures(sf)
-        print(sf, "->", path)
+_TOPK_SCHEMA = pa.schema(
+    {"query_id": pa.int64(), "neighbor_id": pa.int64(), "cosine": pa.float64(), "rank": pa.int32()}
+)
+_ANN_SEED = 42
+_MAX_QUERY_ID = 20  # queries: vec_id < 20
+
+
+def _embeddings(path: str) -> tuple[np.ndarray, np.ndarray]:
+    """(vec_id int64[n], embedding float32[n, dim])."""
+    t = pq.read_table(path, columns=["vec_id", "embedding"])
+    ids = np.asarray(t.column("vec_id").to_pylist(), dtype=np.int64)
+    return ids, np.asarray(t.column("embedding").to_pylist(), dtype=np.float32)
+
+
+def _embedding_golden(
+    sf_dir: str,
+    root: str,
+    name: str,
+    build: Callable[[np.ndarray, np.ndarray], pa.Table],
+    emb_path: str | None = None,
+) -> str | None:
+    """``build(ids, vecs)`` over ``emb_path`` (default: the sf dir's
+    embeddings.parquet); None when that input table is missing."""
+    emb_path = emb_path or os.path.join(sf_dir, "embeddings.parquet")
+    if not os.path.exists(emb_path):
+        return None
+    return _cached(sf_dir, root, name, lambda: build(*_embeddings(emb_path)))
+
+
+def _ranked(scored: list[tuple]) -> list[tuple]:
+    """(neighbor id, cosine, ...) tuples in the Spark queries' order:
+    rounded cosine descending, then neighbor id."""
+    return sorted(scored, key=lambda x: (-x[1], x[0]))
+
+
+def _topk_rows(qid: int, scored: list[tuple[int, float]], k: int = 5) -> list[tuple]:
+    """(query_id, neighbor_id, cosine, rank) rows of the k best neighbors."""
+    return [(int(qid), nid, cos, rank) for rank, (nid, cos) in enumerate(_ranked(scored)[:k], 1)]
+
+
+def _pairs_at_least(ids: list, v: np.ndarray, threshold: float) -> list[tuple]:
+    """(id_a, id_b, cosine) with id_a < id_b for every pair of float64 rows
+    whose fold-order cosine is >= ``threshold``. One matmul screens all
+    pairs (order difference ~1e-15, far inside the 1e-3 screen margin);
+    only the pairs near or above the threshold are re-scored with the
+    exact sequential fold, so the compared values are bit-for-bit Spark's
+    at O(N^2) cost only in the cheap matmul."""
+    norms = np.linalg.norm(v, axis=1)
+    norms[norms == 0] = 1.0
+    approx = (v @ v.T) / np.outer(norms, norms)
+    rows = []
+    for a, b in zip(*np.where(np.triu(approx >= threshold - 1e-3, k=1))):
+        cos = _fold_cos(v[a], v[b])
+        if cos >= threshold:
+            rows.append((*sorted((ids[a], ids[b])), cos))
+    return rows
+
+
+def _ivf_cells(vecs: np.ndarray, n_probe: int = 8) -> tuple[np.ndarray, np.ndarray]:
+    """(corpus cell, probed cells) per row: argmax / top-``n_probe``
+    cosine against the 64 seeded independent.ivf_centroids."""
+    cents = independent.ivf_centroids(vecs.shape[1], 64, _ANN_SEED)
+    v = vecs.astype(np.float64)
+    norms = np.linalg.norm(v, axis=1, keepdims=True)
+    norms[norms == 0] = 1.0
+    sims = (v / norms) @ cents.T
+    return sims.argmax(axis=1), np.argsort(-sims, axis=1)[:, :n_probe]
+
+
+def _probed(qi: int, cells: np.ndarray, probe: np.ndarray) -> np.ndarray:
+    """Candidate rows of query row ``qi``: every other row in a probed cell."""
+    cand = np.isin(cells, probe[qi])
+    cand[qi] = False
+    return np.where(cand)[0]
+
+
+def _lsh_topk(ids: np.ndarray, vecs: np.ndarray) -> pa.Table:
+    n_planes, n_tables = 6, 24
+    planes = independent.all_planes(vecs.shape[1], n_planes, n_tables, _ANN_SEED)
+    weights = 1 << np.arange(n_planes, dtype=np.int64)
+    bits = (vecs.astype(np.float64) @ planes.T) > 0
+    buckets = bits.reshape(len(ids), n_tables, n_planes).astype(np.int64) @ weights
+    rows = []
+    for qi in np.where(ids < _MAX_QUERY_ID)[0]:
+        cand = (buckets == buckets[qi]).any(axis=1)  # shares a bucket in any table
+        cand[qi] = False
+        qv = vecs[qi].astype(np.float64)
+        scored = [
+            (int(ids[ci]), _fold_cos(qv, vecs[ci].astype(np.float64)))
+            for ci in np.where(cand)[0]
+        ]
+        rows += _topk_rows(ids[qi], scored)
+    return _table(_TOPK_SCHEMA, rows)
 
 
 def ensure_golden_lsh_topk(
     sf_dir: str,
     root: str = DEFAULT_FIXTURES_ROOT,
-    k: int = 5,
-    n_planes: int = 6,
-    n_tables: int = 24,
-    seed: int = 42,
-    max_query_id: int = 20,
     emb_path: str | None = None,
     out_name: str = "golden_lsh_topk.parquet",
 ) -> str | None:
-    """Numpy-computed expected output of similarity.lsh_topk over the
-    driver's embeddings table — an independent implementation of the SAME
+    """Numpy-computed expected output of similarity.lsh_topk (k=5, 6
+    planes x 24 tables, seed 42, queries vec_id < 20) over the driver's
+    embeddings table — an independent implementation of the SAME
     deterministic algorithm (seeded hyperplanes make LSH reproducible), so
     the driver gate can hash-verify the ANN path instead of rows-only.
-
-    Cosines use cumsum (sequential accumulation) to match Spark's
-    aggregate-fold bit-for-bit; ranking uses the ROUNDED cosine with
+    Cosines use the fold order; ranking uses the ROUNDED cosine with
     neighbor-id tie-breaks, exactly like the Spark query.
 
-    ``emb_path``/``out_name`` parameterize the input table (round-3: the
-    dim-256 fixture embeddings reuse this golden with their own file).
+    ``emb_path``/``out_name`` parameterize the input table (the dim-256
+    fixture embeddings reuse this golden with their own file).
     """
-    emb_path = emb_path or os.path.join(sf_dir, "embeddings.parquet")
-    if not os.path.exists(emb_path):
-        return None
-    out_dir = fixtures_dir_for(sf_dir, root)
-    os.makedirs(out_dir, exist_ok=True)
-    path = os.path.join(out_dir, out_name)
-    if os.path.exists(path):
-        return path
+    return _embedding_golden(sf_dir, root, out_name, _lsh_topk, emb_path)
 
-    t = pq.read_table(emb_path, columns=["vec_id", "embedding"])
-    ids = np.asarray(t.column("vec_id").to_pylist(), dtype=np.int64)
-    vecs = np.asarray(t.column("embedding").to_pylist(), dtype=np.float32)
-    dim = vecs.shape[1]
-    planes = independent.all_planes(dim, n_planes, n_tables, seed)
-    weights = 1 << np.arange(n_planes, dtype=np.int64)
-    bits = (vecs.astype(np.float64) @ planes.T) > 0
-    buckets = bits.reshape(len(ids), n_tables, n_planes).astype(np.int64) @ weights
 
-    q_mask = ids < max_query_id
+def _ivf_topk(ids: np.ndarray, vecs: np.ndarray) -> pa.Table:
+    cells, probe = _ivf_cells(vecs)
     rows = []
-    for qi in np.where(q_mask)[0]:
-        cand = np.zeros(len(ids), dtype=bool)
-        for tbl in range(n_tables):
-            cand |= buckets[:, tbl] == buckets[qi, tbl]
-        cand[qi] = False
-        scored = []
+    for qi in np.where(ids < _MAX_QUERY_ID)[0]:
         qv = vecs[qi].astype(np.float64)
-        for ci in np.where(cand)[0]:
-            cv = vecs[ci].astype(np.float64)
-            dot = np.cumsum(qv * cv)[-1]
-            na = np.sqrt(np.cumsum(qv * qv)[-1])
-            nb = np.sqrt(np.cumsum(cv * cv)[-1])
-            scored.append((int(ids[ci]), _spark_round6(dot / (na * nb))))
-        scored.sort(key=lambda x: (-x[1], x[0]))
-        for rank, (nid, cos) in enumerate(scored[:k], start=1):
-            rows.append(
-                {"query_id": int(ids[qi]), "neighbor_id": nid, "cosine": cos, "rank": rank}
+        scored = [
+            (int(ids[ci]), _fold_cos(qv, vecs[ci].astype(np.float64)))
+            for ci in _probed(qi, cells, probe)
+        ]
+        rows += _topk_rows(ids[qi], scored)
+    return _table(_TOPK_SCHEMA, rows)
+
+
+def ensure_golden_ivf_topk(sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT) -> str | None:
+    """Numpy golden for similarity.ivf_topk (k=5, 64 cells, 8 probes, seed
+    42, queries vec_id < 20) over the driver's embeddings table.
+    Deterministic seeded centroids make IVF as reproducible as the LSH
+    golden: corpus cell = argmax cosine vs independent.ivf_centroids,
+    query probes = argsort top n_probe, candidates re-ranked with the same
+    fold-order cosine and (rounded cosine, neighbor id) order the Spark
+    query uses.
+    """
+    return _embedding_golden(sf_dir, root, "golden_ivf_topk.parquet", _ivf_topk)
+
+
+def _ivfpq_topk(ids: np.ndarray, vecs: np.ndarray) -> pa.Table:
+    m_sub, k_codes, refine = 8, 32, 50
+    dsub = vecs.shape[1] // m_sub
+    # training sample per the engine spec: the 256 lowest-vec_id vectors
+    sample = vecs[np.argsort(ids, kind="stable")[:256]].astype(np.float64)
+    books = independent.pq_train_codebooks(sample, m_sub, k_codes, _ANN_SEED)
+    cells, probe = _ivf_cells(vecs)
+    vs = vecs.astype(np.float64).reshape(len(ids), m_sub, dsub)
+    codes = np.empty((len(ids), m_sub), dtype=np.int64)
+    for s in range(m_sub):
+        d2 = ((vs[:, s, None, :] - books[s][None, :, :]) ** 2).sum(axis=2)
+        codes[:, s] = d2.argmin(axis=1)
+    subs = np.arange(m_sub)
+    # codeword norm² LUT: fold-ordered per the ADC spec
+    lut_nrm = np.array([[_fold(w * w) for w in books[s]] for s in range(m_sub)])
+
+    rows = []
+    for qi in np.where(ids < _MAX_QUERY_ID)[0]:
+        qv = vecs[qi].astype(np.float64)
+        qs = qv.reshape(m_sub, dsub)
+        q_norm = np.sqrt(_fold(qv * qv))
+        lut_dot = np.array([[_fold(qs[s] * w) for w in books[s]] for s in range(m_sub)])
+        scored = [
+            (
+                int(ids[ci]),
+                _spark_round6(
+                    _fold(lut_dot[subs, codes[ci]])
+                    / (q_norm * np.sqrt(_fold(lut_nrm[subs, codes[ci]])))
+                ),
+                ci,
             )
-    tbl_out = pa.Table.from_pydict(
-        {
-            "query_id": pa.array([r["query_id"] for r in rows], type=pa.int64()),
-            "neighbor_id": pa.array([r["neighbor_id"] for r in rows], type=pa.int64()),
-            "cosine": pa.array([r["cosine"] for r in rows], type=pa.float64()),
-            "rank": pa.array([r["rank"] for r in rows], type=pa.int32()),
-        }
-    )
-    _write_table_atomic(tbl_out, path, compression="zstd")
-    return path
+            for ci in _probed(qi, cells, probe)
+        ]
+        exact = [
+            (nid, _fold_cos(qv, vecs[ci].astype(np.float64)))
+            for nid, _, ci in _ranked(scored)[:refine]
+        ]
+        rows += _topk_rows(ids[qi], exact)
+    return _table(_TOPK_SCHEMA, rows)
 
 
-# ---------------------------------------------------------------------------
-# Round-3: realistic-dimensionality embeddings + IVF golden
-# ---------------------------------------------------------------------------
+def ensure_golden_ivfpq_topk(sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT) -> str | None:
+    """Numpy golden for similarity.ivfpq_topk (k=5, 64 cells, 8 probes, 8
+    subspaces x 32 codes, refine 50, seed 42, queries vec_id < 20): IVF
+    cell probing + ADC lookup-table candidate scoring + exact refine, all
+    deterministic (seeded centroids + codebooks), mirrored independently
+    step for step.
+
+    Candidate scoring is the documented ADC identity — per-query LUT
+    entries are fold-ordered dot products of query subvectors vs
+    codewords, the candidate score is the fold-ordered sum of its 8 LUT
+    entries over ``q_norm * sqrt(fold-sum of codeword norm² entries)``,
+    rounded HALF-UP to 6 places — matching operators/similarity's ADC
+    kernel bit-for-bit without ever reconstructing a dim-float vector.
+    Shortlist = top 50 by (approx desc, neighbor id); exact fold-order
+    cosines rank the final top-k."""
+    return _embedding_golden(sf_dir, root, "golden_ivfpq_topk_v2.parquet", _ivfpq_topk)
+
+
+def ensure_golden_near_dups(
+    sf_dir: str,
+    root: str = DEFAULT_FIXTURES_ROOT,
+    threshold: float = 0.45,
+    emb_path: str | None = None,
+    out_name: str = "golden_near_dups.parquet",
+) -> str | None:
+    """Numpy golden for the embedding near-dup queries: ALL-pairs exact
+    cosine >= threshold with the SAME sequential (fold) accumulation
+    Spark's aggregate uses (the DuckDB ``list_cosine_similarity`` oracle
+    accumulates in a different order, so a cosine sitting within ~1e-15
+    of a 1e-6 rounding boundary could round differently in the two
+    engines and flip the hash gate)."""
+    schema = pa.schema({"id_a": pa.int64(), "id_b": pa.int64(), "cosine": pa.float64()})
+
+    def build(ids: np.ndarray, vecs: np.ndarray) -> pa.Table:
+        return _table(schema, _pairs_at_least(ids.tolist(), vecs.astype(np.float64), threshold))
+
+    return _embedding_golden(sf_dir, root, out_name, build, emb_path)
+
 
 EMB_HD_DIM = 256
 EMB_HD_ROWS_PER_SF = 20_000  # sf0.01 -> 500, sf0.1 -> 2000 (mirrors testdata)
@@ -566,166 +742,30 @@ def ensure_embeddings_hd(
     """Idempotent fixtures/<sf>/embeddings_d{dim}.parquet: (vec_id long,
     embedding array<float{dim}>).
 
-    The driver's testdata embeddings are dim=64; round-2 VERDICT #6 asked
-    for an ANN gate at dim>=256 so sketch/probe costs are exercised at
-    realistic width. Deterministic seeded gaussians; ~4% of rows are
-    planted near-duplicates of their predecessor (v + 0.05*noise, cosine
-    ~0.9988) so the near-dup query has planted positives; everything else
-    is near-orthogonal at this dim (|cos| ~ 1/sqrt(dim) ~ 0.06).
+    The driver's testdata embeddings are dim=64; this table exercises the
+    ANN gate at dim>=256, so sketch/probe costs run at realistic width.
+    Deterministic seeded gaussians; ~4% of rows are planted
+    near-duplicates of their predecessor (v + 0.05*noise, cosine ~0.9988)
+    so the near-dup query has planted positives; everything else is
+    near-orthogonal at this dim (|cos| ~ 1/sqrt(dim) ~ 0.06).
     """
-    out_dir = fixtures_dir_for(sf_dir, root)
-    os.makedirs(out_dir, exist_ok=True)
-    path = os.path.join(out_dir, f"embeddings_d{dim}.parquet")
-    if os.path.exists(path):
-        return path
-    n = max(500, int(EMB_HD_ROWS_PER_SF * sf_from_dir(sf_dir)))
-    rng = np.random.default_rng([SEED, 5_000_000, dim])
-    vecs = rng.standard_normal((n, dim)).astype(np.float32)
-    for i in range(1, n):
-        if i % 25 == 7:  # planted near-dup of the previous row
-            vecs[i] = vecs[i - 1] + 0.05 * rng.standard_normal(dim).astype(np.float32)
-    tbl = pa.Table.from_pydict(
-        {
-            "vec_id": pa.array(np.arange(n, dtype=np.int64)),
-            "embedding": pa.array([v for v in vecs.tolist()], type=pa.list_(pa.float32())),
-        }
-    )
-    _write_table_atomic(tbl, path, compression="zstd")
-    return path
 
+    def build() -> pa.Table:
+        n = max(500, int(EMB_HD_ROWS_PER_SF * sf_from_dir(sf_dir)))
+        rng = np.random.default_rng([SEED, 5_000_000, dim])
+        vecs = rng.standard_normal((n, dim)).astype(np.float32)
+        for i in range(1, n):
+            if i % 25 == 7:  # planted near-dup of the previous row
+                vecs[i] = vecs[i - 1] + 0.05 * rng.standard_normal(dim).astype(np.float32)
+        schema = pa.schema({"vec_id": pa.int64(), "embedding": pa.list_(pa.float32())})
+        return _table(schema, list(zip(range(n), vecs.tolist())))
 
-def ensure_golden_near_dups(
-    sf_dir: str,
-    root: str = DEFAULT_FIXTURES_ROOT,
-    threshold: float = 0.45,
-    emb_path: str | None = None,
-    out_name: str = "golden_near_dups.parquet",
-) -> str | None:
-    """Numpy golden for the embedding near-dup queries: ALL-pairs exact
-    cosine >= threshold, with the SAME sequential (cumsum) accumulation
-    Spark's aggregate-fold uses (round-4 ADVICE fix: the DuckDB
-    ``list_cosine_similarity`` oracle accumulates in a different order, so
-    a cosine sitting within ~1e-15 of a 1e-6 rounding boundary could round
-    differently in the two engines and flip the hash gate).
-
-    Pairs are screened with one matmul (order-difference ~1e-15, far
-    inside the 1e-3 screen margin), then every pair near or above the
-    threshold is re-scored with the exact sequential fold before the
-    rounded comparison — bit-for-bit the Spark value on the pairs that
-    matter, O(N^2) only in the cheap matmul.
-    """
-    emb_path = emb_path or os.path.join(sf_dir, "embeddings.parquet")
-    if not os.path.exists(emb_path):
-        return None
-    out_dir = fixtures_dir_for(sf_dir, root)
-    os.makedirs(out_dir, exist_ok=True)
-    path = os.path.join(out_dir, out_name)
-    if os.path.exists(path):
-        return path
-
-    t = pq.read_table(emb_path, columns=["vec_id", "embedding"])
-    ids = np.asarray(t.column("vec_id").to_pylist(), dtype=np.int64)
-    vecs = np.asarray(t.column("embedding").to_pylist(), dtype=np.float32)
-    v = vecs.astype(np.float64)
-    norms = np.linalg.norm(v, axis=1)
-    norms[norms == 0] = 1.0
-    approx = (v @ v.T) / np.outer(norms, norms)
-    ii, jj = np.where(np.triu(approx >= threshold - 1e-3, k=1))
-
-    rows = []
-    for a, b in zip(ii.tolist(), jj.tolist()):
-        va, vb = v[a], v[b]
-        dot = np.cumsum(va * vb)[-1]
-        na = np.sqrt(np.cumsum(va * va)[-1])
-        nb = np.sqrt(np.cumsum(vb * vb)[-1])
-        cos = _spark_round6(dot / (na * nb))
-        if cos >= threshold:
-            id_a, id_b = int(ids[a]), int(ids[b])
-            if id_a > id_b:
-                id_a, id_b = id_b, id_a
-            rows.append({"id_a": id_a, "id_b": id_b, "cosine": cos})
-    tbl_out = pa.Table.from_pydict(
-        {
-            "id_a": pa.array([r["id_a"] for r in rows], type=pa.int64()),
-            "id_b": pa.array([r["id_b"] for r in rows], type=pa.int64()),
-            "cosine": pa.array([r["cosine"] for r in rows], type=pa.float64()),
-        }
-    )
-    _write_table_atomic(tbl_out, path, compression="zstd")
-    return path
-
-
-def ensure_golden_ivf_topk(
-    sf_dir: str,
-    root: str = DEFAULT_FIXTURES_ROOT,
-    k: int = 5,
-    n_cells: int = 64,
-    n_probe: int = 8,
-    seed: int = 42,
-    max_query_id: int = 20,
-) -> str | None:
-    """Numpy golden for similarity.ivf_topk over the driver's embeddings
-    table (round-2 VERDICT #5: promote IVF to the hash-gated driver
-    contract). Deterministic seeded centroids make IVF as reproducible as
-    the LSH golden: corpus cell = argmax cosine vs independent.ivf_centroids,
-    query probes = argsort top n_probe, candidates re-ranked with the same
-    sequential-accumulation cosine and (rounded cosine, neighbor id) order
-    the Spark query uses.
-    """
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    if not os.path.exists(emb_path):
-        return None
-    out_dir = fixtures_dir_for(sf_dir, root)
-    os.makedirs(out_dir, exist_ok=True)
-    path = os.path.join(out_dir, "golden_ivf_topk.parquet")
-    if os.path.exists(path):
-        return path
-
-    t = pq.read_table(emb_path, columns=["vec_id", "embedding"])
-    ids = np.asarray(t.column("vec_id").to_pylist(), dtype=np.int64)
-    vecs = np.asarray(t.column("embedding").to_pylist(), dtype=np.float32)
-    dim = vecs.shape[1]
-    cents = independent.ivf_centroids(dim, n_cells, seed)
-    v = vecs.astype(np.float64)
-    norms = np.linalg.norm(v, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    sims = (v / norms) @ cents.T
-    corpus_cell = sims.argmax(axis=1)
-    probe = np.argsort(-sims, axis=1)[:, :n_probe]
-
-    rows = []
-    for qi in np.where(ids < max_query_id)[0]:
-        probed = set(probe[qi].tolist())
-        scored = []
-        qv = vecs[qi].astype(np.float64)
-        for ci in range(len(ids)):
-            if ci == qi or corpus_cell[ci] not in probed:
-                continue
-            cv = vecs[ci].astype(np.float64)
-            dot = np.cumsum(qv * cv)[-1]
-            na = np.sqrt(np.cumsum(qv * qv)[-1])
-            nb = np.sqrt(np.cumsum(cv * cv)[-1])
-            scored.append((int(ids[ci]), _spark_round6(dot / (na * nb))))
-        scored.sort(key=lambda x: (-x[1], x[0]))
-        for rank, (nid, cos) in enumerate(scored[:k], start=1):
-            rows.append(
-                {"query_id": int(ids[qi]), "neighbor_id": nid, "cosine": cos, "rank": rank}
-            )
-    tbl_out = pa.Table.from_pydict(
-        {
-            "query_id": pa.array([r["query_id"] for r in rows], type=pa.int64()),
-            "neighbor_id": pa.array([r["neighbor_id"] for r in rows], type=pa.int64()),
-            "cosine": pa.array([r["cosine"] for r in rows], type=pa.float64()),
-            "rank": pa.array([r["rank"] for r in rows], type=pa.int32()),
-        }
-    )
-    _write_table_atomic(tbl_out, path, compression="zstd")
-    return path
+    return _cached(sf_dir, root, f"embeddings_d{dim}.parquet", build)
 
 
 # ---------------------------------------------------------------------------
-# Round-4: image fixture + thumbnail golden (the first REAL multimodal
-# kernel — PPM/BMP decoded from spec, no imaging library)
+# Image fixture + thumbnail / near-dup goldens (every container decoded from
+# its spec, no imaging library)
 # ---------------------------------------------------------------------------
 
 IMG_ROWS_PER_SF = 6400  # sf0.01 -> 64, sf0.1 -> 640
@@ -783,40 +823,8 @@ def _encode_image(
     return independent.pgm_bytes(img)
 
 
-def ensure_images(sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT) -> str:
-    """Idempotent fixtures/<sf>/images.parquet: (img_id string, bytes
-    binary, fmt string, width int32, height int32).
-
-    Deterministic noise RGB images cycling PPM (P6, with a header
-    comment), 24bpp BMP, P5 PGM, 8-bit PNG and (round 5) baseline JPEG
-    containers. PNGs cycle color types RGB / opaque-RGBA / grayscale and
-    ALL five scanline filters, so every unfilter path decodes for real;
-    JPEGs cycle 4:4:4 / 4:2:0 / grayscale / restart-interval variants so
-    every entropy + upsample path decodes for real; GIFs draw pixels from
-    a fixed 64-color palette (indexed color is the container's model) and
-    alternate interlaced / sequential so both row orders decode for real;
-    TIFFs (v5 — the REFERENCE's raster container, from spec instead of
-    rasterio) cycle PackBits on/off x little/big-endian.
-    Grayscale rows keep identical channels; JPEG rows are lossy by design
-    — goldens always derive from the independent decode of the stored
-    bytes, never from the pre-encode pixels. All encoded by the
-    INDEPENDENT from-spec writers in fixtures.independent (the engine's
-    decoders in functions/imaging.py never touch these bytes at
-    generation time). Planted content: every i%9==4 image is a
-    near-duplicate of image i-1 (same dims, same container+variant;
-    pixels +-2 pre-encode, except GIF dups flip ~3% of pixels to other
-    palette colors — a +-2 perturbation would leave the 64-color table)
-    for the image near-dup query. ~8% of payloads are truncated
-    mid-raster: decode-failure rows the engine must surface as NULL
-    thumbnails / drop from embeddings (F1/make_valid semantics).
-    """
-    out_dir = fixtures_dir_for(sf_dir, root)
-    os.makedirs(out_dir, exist_ok=True)
-    path = os.path.join(out_dir, "images_v5.parquet")
-    if os.path.exists(path):
-        return path
-    n = max(64, int(IMG_ROWS_PER_SF * sf_from_dir(sf_dir)))
-    ids, bufs, fmts, ws, hs = [], [], [], [], []
+def _image_rows(n: int) -> list[tuple]:
+    rows = []
     prev_img, prev_fmt, prev_ct = None, None, 2
     prev_jpgv = _JPG_VARIANTS[0]
     prev_gif_inter = False
@@ -864,254 +872,115 @@ def ensure_images(sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT) -> str:
         prev_jpgv, prev_gif_inter, prev_tiffv = jpg_var, gif_inter, tiff_var
         if i % 13 == 5:  # truncate mid-raster; magic bytes survive
             buf = buf[: max(8, int(len(buf) * 0.6))]
-        ids.append(f"img{i:06d}")
-        bufs.append(buf)
-        fmts.append(fmt)
-        ws.append(int(img.shape[1]))
-        hs.append(int(img.shape[0]))
-    tbl = pa.Table.from_pydict(
-        {
-            "img_id": pa.array(ids),
-            "bytes": pa.array(bufs, type=pa.binary()),
-            "fmt": pa.array(fmts),
-            "width": pa.array(ws, type=pa.int32()),
-            "height": pa.array(hs, type=pa.int32()),
-        }
-    )
-    _write_table_atomic(tbl, path, compression="zstd")
-    return path
+        rows.append((f"img{i:06d}", buf, fmt, int(img.shape[1]), int(img.shape[0])))
+    return rows
 
 
-def ensure_golden_thumbnails(
-    sf_dir: str,
-    root: str = DEFAULT_FIXTURES_ROOT,
-    width: int = THUMB_W,
-    height: int = THUMB_H,
-) -> str:
-    """Golden for the image_thumbnails driver query: per image, the
-    container type, md5 + length of the expected thumbnail bytes (NULL for
-    truncated payloads). Decode/resize via the independent kernels
-    (regex-parse PPM, per-row-loop BMP, per-pixel NN resize); the output
-    PPM header is written from the documented contract
-    ("P6\\n{w} {h}\\n255\\n" + raw RGB) — the engine's encode_ppm never
-    runs here.
+def ensure_images(sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT) -> str:
+    """Idempotent fixtures/<sf>/images_v5.parquet: (img_id string, bytes
+    binary, fmt string, width int32, height int32).
+
+    Deterministic noise RGB images cycling PPM (P6, with a header
+    comment), 24bpp BMP, P5 PGM, 8-bit PNG, baseline JPEG, GIF and TIFF
+    containers. PNGs cycle color types RGB / opaque-RGBA / grayscale and
+    ALL five scanline filters, so every unfilter path decodes for real;
+    JPEGs cycle 4:4:4 / 4:2:0 / grayscale / restart-interval variants so
+    every entropy + upsample path decodes for real; GIFs draw pixels from
+    a fixed 64-color palette (indexed color is the container's model) and
+    alternate interlaced / sequential so both row orders decode for real;
+    TIFFs (the REFERENCE's raster container, from spec instead of
+    rasterio) cycle PackBits on/off x little/big-endian.
+    Grayscale rows keep identical channels; JPEG rows are lossy by design
+    — goldens always derive from the independent decode of the stored
+    bytes, never from the pre-encode pixels. All encoded by the
+    INDEPENDENT from-spec writers in fixtures.independent (the engine's
+    decoders in functions/imaging.py never touch these bytes at
+    generation time). Planted content: every i%9==4 image is a
+    near-duplicate of image i-1 (same dims, same container+variant;
+    pixels +-2 pre-encode, except GIF dups flip ~3% of pixels to other
+    palette colors — a +-2 perturbation would leave the 64-color table)
+    for the image near-dup query. ~8% of payloads are truncated
+    mid-raster: decode-failure rows the engine must surface as NULL
+    thumbnails / drop from embeddings (F1/make_valid semantics).
     """
-    import hashlib
-
-    images_path = ensure_images(sf_dir, root)
-    out_dir = fixtures_dir_for(sf_dir, root)
-    path = os.path.join(out_dir, "golden_thumbnails_v5.parquet")
-    if os.path.exists(path):
-        return path
-    t = pq.read_table(images_path)
-    ids = t.column("img_id").to_pylist()
-    bufs = t.column("bytes").to_pylist()
-    fmts = t.column("fmt").to_pylist()
-    md5s, lens = [], []
-    for buf, fmt in zip(bufs, fmts):
-        try:
-            img = independent.decode_any_image(buf)
-            small = independent.nn_resize(img, width, height)
-            thumb = f"P6\n{width} {height}\n255\n".encode() + small.tobytes()
-            md5s.append(hashlib.md5(thumb).hexdigest())
-            lens.append(len(thumb))
-        except ValueError:
-            md5s.append(None)
-            lens.append(None)
-    tbl = pa.Table.from_pydict(
+    schema = pa.schema(
         {
-            "img_id": pa.array(ids),
-            "container": pa.array(fmts),
-            "thumb_md5": pa.array(md5s),
-            "thumb_len": pa.array(lens, type=pa.int64()),
+            "img_id": pa.string(),
+            "bytes": pa.binary(),
+            "fmt": pa.string(),
+            "width": pa.int32(),
+            "height": pa.int32(),
         }
     )
-    _write_table_atomic(tbl, path, compression="zstd")
-    return path
+    n = max(64, int(IMG_ROWS_PER_SF * sf_from_dir(sf_dir)))
+    return _cached(sf_dir, root, "images_v5.parquet", lambda: _table(schema, _image_rows(n)))
+
+
+def _thumbnail(img_id: str, buf: bytes, fmt: str) -> tuple:
+    try:
+        small = independent.nn_resize(independent.decode_any_image(buf), THUMB_W, THUMB_H)
+    except ValueError:
+        return img_id, fmt, None, None  # truncated payload: NULL thumbnail
+    thumb = f"P6\n{THUMB_W} {THUMB_H}\n255\n".encode() + small.tobytes()
+    return img_id, fmt, _md5(thumb), len(thumb)
+
+
+def ensure_golden_thumbnails(sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT) -> str:
+    """Golden for the image_thumbnails driver query (THUMB_W x THUMB_H):
+    per image, the container type, md5 + length of the expected thumbnail
+    bytes (NULL for truncated payloads). Decode/resize via the independent
+    kernels (per-pixel NN resize); the output PPM header is written from
+    the documented contract ("P6\\n{w} {h}\\n255\\n" + raw RGB) — the
+    engine's encode_ppm never runs here.
+    """
+    schema = pa.schema(
+        {
+            "img_id": pa.string(),
+            "container": pa.string(),
+            "thumb_md5": pa.string(),
+            "thumb_len": pa.int64(),
+        }
+    )
+
+    def build() -> pa.Table:
+        t = pq.read_table(ensure_images(sf_dir, root), columns=["img_id", "bytes", "fmt"])
+        return _table(schema, [_thumbnail(*r.values()) for r in t.to_pylist()])
+
+    return _cached(sf_dir, root, "golden_thumbnails_v5.parquet", build)
 
 
 EMB_IMG_W, EMB_IMG_H = 8, 6  # pixel-embedding dims: 8*6*3 = 144 floats
 
 
-def ensure_golden_image_near_dups(
-    sf_dir: str,
-    root: str = DEFAULT_FIXTURES_ROOT,
-    threshold: float = 0.9,
-) -> str:
+def ensure_golden_image_near_dups(sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT) -> str:
     """Golden for the image_near_dups driver query: ALL-pairs exact cosine
-    >= threshold over the independent pixel embeddings of every DECODABLE
+    >= 0.9 over the independent pixel embeddings of every DECODABLE
     fixture image (truncated payloads excluded on both sides, per the
     operator's drop-invalid contract).
 
     Embeddings come from fixtures.independent.pixel_embedding_independent
-    (regex/per-pixel-loop decode+resize, mean-centered float32); cosines
-    use Spark's sequential fold accumulation on the float32 values (same
-    screen-then-exact-recompute scheme as ensure_golden_near_dups).
+    (per-pixel-loop decode+resize, mean-centered float32); cosines use
+    Spark's sequential fold accumulation on the float32 values
+    (``_pairs_at_least``, as in ensure_golden_near_dups).
     """
-    import hashlib  # noqa: F401  (parity with thumbnails golden imports)
+    schema = pa.schema({"id_a": pa.string(), "id_b": pa.string(), "cosine": pa.float64()})
 
-    images_path = ensure_images(sf_dir, root)
-    out_dir = fixtures_dir_for(sf_dir, root)
-    path = os.path.join(out_dir, "golden_image_near_dups_v5.parquet")
-    if os.path.exists(path):
-        return path
-    t = pq.read_table(images_path, columns=["img_id", "bytes"])
-    ids, vecs = [], []
-    for img_id, buf in zip(t.column("img_id").to_pylist(), t.column("bytes").to_pylist()):
-        try:
-            vecs.append(
-                independent.pixel_embedding_independent(buf, EMB_IMG_W, EMB_IMG_H)
-            )
+    def build() -> pa.Table:
+        t = pq.read_table(ensure_images(sf_dir, root), columns=["img_id", "bytes"])
+        ids, vecs = [], []
+        for img_id, buf in zip(t.column("img_id").to_pylist(), t.column("bytes").to_pylist()):
+            try:
+                vecs.append(independent.pixel_embedding_independent(buf, EMB_IMG_W, EMB_IMG_H))
+            except ValueError:
+                continue  # truncated payload: dropped, both sides
             ids.append(img_id)
-        except ValueError:
-            continue  # truncated payload: dropped, both sides
-    v32 = np.stack(vecs)
-    v = v32.astype(np.float64)
-    norms = np.linalg.norm(v, axis=1)
-    norms[norms == 0] = 1.0
-    approx = (v @ v.T) / np.outer(norms, norms)
-    ii, jj = np.where(np.triu(approx >= threshold - 1e-3, k=1))
-    rows = []
-    for a, b in zip(ii.tolist(), jj.tolist()):
-        va, vb = v[a], v[b]
-        dot = np.cumsum(va * vb)[-1]
-        na = np.sqrt(np.cumsum(va * va)[-1])
-        nb = np.sqrt(np.cumsum(vb * vb)[-1])
-        cos = _spark_round6(dot / (na * nb))
-        if cos >= threshold:
-            id_a, id_b = sorted((ids[a], ids[b]))
-            rows.append({"id_a": id_a, "id_b": id_b, "cosine": cos})
-    tbl = pa.Table.from_pydict(
-        {
-            "id_a": pa.array([r["id_a"] for r in rows]),
-            "id_b": pa.array([r["id_b"] for r in rows]),
-            "cosine": pa.array([r["cosine"] for r in rows], type=pa.float64()),
-        }
-    )
-    _write_table_atomic(tbl, path, compression="zstd")
-    return path
+        return _table(schema, _pairs_at_least(ids, np.stack(vecs).astype(np.float64), 0.9))
 
-
-def ensure_golden_ivfpq_topk(
-    sf_dir: str,
-    root: str = DEFAULT_FIXTURES_ROOT,
-    k: int = 5,
-    n_cells: int = 64,
-    n_probe: int = 8,
-    m_sub: int = 8,
-    k_codes: int = 32,
-    refine: int = 50,
-    seed: int = 42,
-    max_query_id: int = 20,
-) -> str | None:
-    """Numpy golden for similarity.ivfpq_topk: IVF cell probing + ADC
-    lookup-table candidate scoring + exact refine, all deterministic
-    (seeded centroids + codebooks), mirrored independently step-for-step.
-
-    Round-5 spec change (filename bumped to _v2): candidate scoring is the
-    documented ADC identity — per-query LUT entries are fold-ordered
-    (cumsum) dot products of query subvectors vs codewords, the candidate
-    score is the fold-ordered sum of its ``m_sub`` LUT entries over
-    ``q_norm * sqrt(fold-sum of codeword norm² entries)``, rounded HALF-UP
-    to 6 places — matching operators/similarity.pq_adc_luts /
-    _adc_cosine bit-for-bit without ever reconstructing a dim-float
-    vector. Shortlist = top ``refine`` by (approx desc, neighbor id);
-    exact fold-order cosines rank the final top-k."""
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    if not os.path.exists(emb_path):
-        return None
-    out_dir = fixtures_dir_for(sf_dir, root)
-    os.makedirs(out_dir, exist_ok=True)
-    path = os.path.join(out_dir, "golden_ivfpq_topk_v2.parquet")
-    if os.path.exists(path):
-        return path
-
-    t = pq.read_table(emb_path, columns=["vec_id", "embedding"])
-    ids = np.asarray(t.column("vec_id").to_pylist(), dtype=np.int64)
-    vecs = np.asarray(t.column("embedding").to_pylist(), dtype=np.float32)
-    dim = vecs.shape[1]
-    dsub = dim // m_sub
-    cents = independent.ivf_centroids(dim, n_cells, seed)
-    # training sample per the engine spec: the 256 lowest-vec_id vectors
-    order = np.argsort(ids, kind="stable")[:256]
-    sample = vecs[order].astype(np.float64)
-    books = independent.pq_train_codebooks(sample, m_sub, k_codes, seed)
-
-    v = vecs.astype(np.float64)
-    norms = np.linalg.norm(v, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    sims = (v / norms) @ cents.T
-    corpus_cell = sims.argmax(axis=1)
-    probe = np.argsort(-sims, axis=1)[:, :n_probe]
-
-    vs = v.reshape(len(ids), m_sub, dsub)
-    codes = np.empty((len(ids), m_sub), dtype=np.int64)
-    for s in range(m_sub):
-        d2 = ((vs[:, s, None, :] - books[s][None, :, :]) ** 2).sum(axis=2)
-        codes[:, s] = d2.argmin(axis=1)
-
-    def fold_cos(a64: np.ndarray, b64: np.ndarray) -> float:
-        dot = np.cumsum(a64 * b64)[-1]
-        na = np.sqrt(np.cumsum(a64 * a64)[-1])
-        nb = np.sqrt(np.cumsum(b64 * b64)[-1])
-        return _spark_round6(dot / (na * nb))
-
-    # codeword norm² LUT: fold-ordered per the round-5 ADC spec
-    lut_nrm = np.empty((m_sub, books.shape[1]))
-    for s in range(m_sub):
-        for j in range(books.shape[1]):
-            lut_nrm[s, j] = np.cumsum(books[s, j] * books[s, j])[-1]
-
-    rows = []
-    for qi in np.where(ids < max_query_id)[0]:
-        probed = set(probe[qi].tolist())
-        qv = vecs[qi].astype(np.float64)
-        qs = qv.reshape(m_sub, dsub)
-        q_norm = np.sqrt(np.cumsum(qv * qv)[-1])
-        lut_dot = np.empty((m_sub, books.shape[1]))
-        for s in range(m_sub):
-            for j in range(books.shape[1]):
-                lut_dot[s, j] = np.cumsum(qs[s] * books[s, j])[-1]
-
-        def adc_cos(code_row: np.ndarray) -> float:
-            dot = np.cumsum(lut_dot[np.arange(m_sub), code_row])[-1]
-            nrm = np.cumsum(lut_nrm[np.arange(m_sub), code_row])[-1]
-            return _spark_round6(dot / (q_norm * np.sqrt(nrm)))
-
-        cand = [
-            ci
-            for ci in range(len(ids))
-            if ci != qi and corpus_cell[ci] in probed
-        ]
-        scored = [
-            (int(ids[ci]), adc_cos(codes[ci]), ci)
-            for ci in cand
-        ]
-        scored.sort(key=lambda x: (-x[1], x[0]))
-        shortlist = scored[:refine]
-        exact = [
-            (nid, fold_cos(qv, vecs[ci].astype(np.float64)))
-            for nid, _, ci in shortlist
-        ]
-        exact.sort(key=lambda x: (-x[1], x[0]))
-        for rank, (nid, cos) in enumerate(exact[:k], start=1):
-            rows.append(
-                {"query_id": int(ids[qi]), "neighbor_id": nid, "cosine": cos, "rank": rank}
-            )
-    tbl = pa.Table.from_pydict(
-        {
-            "query_id": pa.array([r["query_id"] for r in rows], type=pa.int64()),
-            "neighbor_id": pa.array([r["neighbor_id"] for r in rows], type=pa.int64()),
-            "cosine": pa.array([r["cosine"] for r in rows], type=pa.float64()),
-            "rank": pa.array([r["rank"] for r in rows], type=pa.int32()),
-        }
-    )
-    _write_table_atomic(tbl, path, compression="zstd")
-    return path
+    return _cached(sf_dir, root, "golden_image_near_dups_v5.parquet", build)
 
 
 # ---------------------------------------------------------------------------
-# audio near-dup fixtures (round 5): planted duplicate clips + BER golden
+# audio near-dup fixtures: planted duplicate clips + BER golden
 # ---------------------------------------------------------------------------
 
 AUDIO_DUP_ROWS_PER_SF = 4800  # sf0.01 -> 48, sf0.1 -> 480
@@ -1137,43 +1006,36 @@ def ensure_audio_dupes(
     * ``i%17==11``: truncated payload (decode failure => dropped row).
 
     Payloads are encoded by fixtures.independent (the engine's codecs
-    module never touches these bytes at generation time).
+    module never touches these bytes at generation time). Bench-scale
+    corpora (``n > 2000``) stream parallel 1000-row blocks into the one
+    crash-safe write (the variant chain resets at block starts — fine for
+    scale corpora; gate-scale corpora keep the single serial chain so
+    goldens are stable).
     """
-    out_dir = fixtures_dir_for(sf_dir, root)
-    os.makedirs(out_dir, exist_ok=True)
-    path = os.path.join(out_dir, "audio_dupes.parquet")
-    if os.path.exists(path):
-        return path
     n = n_override or max(48, int(AUDIO_DUP_ROWS_PER_SF * sf_from_dir(sf_dir)))
-    if n > 2000:
-        # bench-scale corpora generate in parallel 1000-row blocks (the
-        # variant chain resets at block starts — fine for scale corpora;
-        # gate-scale corpora keep the single serial chain so goldens are
-        # stable)
-        from concurrent.futures import ProcessPoolExecutor
 
-        spans = [(lo, min(lo + 1000, n)) for lo in range(0, n, 1000)]
-        writer = None
-        with ProcessPoolExecutor(max_workers=8) as pool:
-            for tbl in pool.map(_audio_dupe_block, spans):
-                if writer is None:
-                    writer = pq.ParquetWriter(
-                        path, tbl.schema, compression="zstd"
-                    )
-                writer.write_table(tbl, row_group_size=256)
-        if writer is not None:
-            writer.close()
-        return path
-    _write_table_atomic(
-        _audio_dupe_block((0, n)), path, compression="zstd", row_group_size=256
-    )
-    return path
+    def build() -> pa.Table | Iterator[pa.Table]:
+        if n <= 2000:
+            return _audio_dupe_block((0, n))
+        return _audio_dupe_blocks([(lo, min(lo + 1000, n)) for lo in range(0, n, 1000)])
+
+    # 256-row groups like every binary-payload fixture: one giant row
+    # group makes the whole file ONE Spark split and serializes the scan
+    # (measured: the 30k-clip bench ran local[2] == local[8] == 81 s)
+    return _cached(sf_dir, root, "audio_dupes.parquet", build, row_group_size=256)
+
+
+def _audio_dupe_blocks(spans: list[tuple[int, int]]) -> Iterator[pa.Table]:
+    from concurrent.futures import ProcessPoolExecutor
+
+    with ProcessPoolExecutor(max_workers=8) as pool:
+        yield from pool.map(_audio_dupe_block, spans)
 
 
 def _audio_dupe_block(span: tuple[int, int]) -> pa.Table:
     lo_i, hi_i = span
     prev: list[tuple[np.ndarray, int, int, str]] = []  # (pcm, sr, dur, codec)
-    ids, bufs, srs, durs, codecs_out = [], [], [], [], []
+    rows = []
     for i in range(lo_i, hi_i):
         rng = np.random.default_rng([SEED, 11_000_000 + i])
         if i % 7 == 3 and len(prev) >= 1:
@@ -1183,17 +1045,11 @@ def _audio_dupe_block(span: tuple[int, int]) -> pa.Table:
             pcm0, sr, dur, codec0 = prev[-2]
             pcm = pcm0
             codec = "mp3" if codec0 != "mp3" else "wav"
-        elif i % 11 == 7 and len(prev) >= 1:
+        elif (i % 11 == 7 or i % 13 == 9) and len(prev) >= 1:
             pcm0, sr, dur, codec = prev[-1]
+            snr_db = 35.0 if i % 11 == 7 else 20.0
             rms = float(np.sqrt(np.mean(pcm0.astype(np.float64) ** 2)))
-            nstd = rms * 10.0 ** (-35.0 / 20.0)
-            pcm = np.clip(
-                pcm0 + nstd * rng.standard_normal(pcm0.shape), -1.0, 1.0
-            ).astype(np.float32)
-        elif i % 13 == 9 and len(prev) >= 1:
-            pcm0, sr, dur, codec = prev[-1]
-            rms = float(np.sqrt(np.mean(pcm0.astype(np.float64) ** 2)))
-            nstd = rms * 10.0 ** (-20.0 / 20.0)
+            nstd = rms * 10.0 ** (-snr_db / 20.0)
             pcm = np.clip(
                 pcm0 + nstd * rng.standard_normal(pcm0.shape), -1.0, 1.0
             ).astype(np.float32)
@@ -1206,32 +1062,24 @@ def _audio_dupe_block(span: tuple[int, int]) -> pa.Table:
         if i % 17 == 11:
             buf = buf[: max(8, len(buf) // 3)]
         prev = (prev + [(pcm, sr, dur, codec)])[-2:]
-        ids.append(f"ad{i:06d}")
-        bufs.append(buf)
-        srs.append(sr)
-        durs.append(dur)
-        codecs_out.append(codec)
-    # 256-row groups like every binary-payload fixture: one giant row
-    # group makes the whole file ONE Spark split and serializes the scan
-    # (measured: the 30k-clip bench ran local[2] == local[8] == 81 s)
-    return pa.Table.from_pydict(
+        rows.append((f"ad{i:06d}", buf, sr, dur, codec))
+    schema = pa.schema(
         {
-            "clip_id": pa.array(ids),
-            "bytes": pa.array(bufs, type=pa.binary()),
-            "sr_hz": pa.array(srs, type=pa.int32()),
-            "dur_ms": pa.array(durs, type=pa.int32()),
-            "codec": pa.array(codecs_out),
+            "clip_id": pa.string(),
+            "bytes": pa.binary(),
+            "sr_hz": pa.int32(),
+            "dur_ms": pa.int32(),
+            "codec": pa.string(),
         }
     )
+    return _table(schema, rows)
 
 
-def ensure_golden_audio_near_dups(
-    sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT, max_ber: float = AUDIO_DUP_MAX_BER
-) -> str:
+def ensure_golden_audio_near_dups(sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT) -> str:
     """Golden for the audio_near_dups driver query: ALL-pairs exact
     bit-error rate over the independent fingerprints of every DECODABLE
     fixture clip (equal token counts only — the duration-preserving
-    transform contract), pairs with BER <= ``max_ber``.
+    transform contract), pairs with BER <= AUDIO_DUP_MAX_BER.
 
     Fingerprints come from fixtures.independent.audio_fingerprint (the
     per-frame-loop mirror of the engine kernel); BER uses the same
@@ -1244,182 +1092,120 @@ def ensure_golden_audio_near_dups(
     — a planted pair failing this is a fixture bug and raises here
     rather than surfacing as a driver-gate mismatch.
     """
-    dupes_path = ensure_audio_dupes(sf_dir, root)
-    out_dir = fixtures_dir_for(sf_dir, root)
-    path = os.path.join(out_dir, "golden_audio_near_dups.parquet")
-    if os.path.exists(path):
-        return path
-    t = pq.read_table(dupes_path)
-    ids, fps = [], []
-    for cid, buf, codec, sr in zip(
-        t.column("clip_id").to_pylist(),
-        t.column("bytes").to_pylist(),
-        t.column("codec").to_pylist(),
-        t.column("sr_hz").to_pylist(),
-    ):
-        try:
-            pcm, _sr = independent.decode(buf, codec)
-        except Exception:  # noqa: BLE001 - any decode failure => dropped row
-            continue
-        toks = independent.audio_fingerprint(pcm, sr or _sr)
-        if toks:
-            ids.append(cid)
-            fps.append(toks)
-    rows = []
-    for a in range(len(ids)):
-        for b in range(a + 1, len(ids)):
-            fa, fb = fps[a], fps[b]
-            if len(fa) != len(fb):
-                continue
-            mism = sum(bin(x ^ y).count("1") for x, y in zip(fa, fb))
-            ber = mism / (16.0 * len(fa))
-            if ber <= max_ber:
-                if not any(x == y for x, y in zip(fa, fb)):
-                    raise AssertionError(
-                        f"golden pair ({ids[a]}, {ids[b]}) shares no exact token: "
-                        "unreachable by the candidate stage"
-                    )
-                id_a, id_b = sorted((ids[a], ids[b]))
-                rows.append({"id_a": id_a, "id_b": id_b, "ber": _spark_round6(ber)})
-    rows.sort(key=lambda r: (r["id_a"], r["id_b"]))
-    tbl = pa.Table.from_pydict(
-        {
-            "id_a": pa.array([r["id_a"] for r in rows]),
-            "id_b": pa.array([r["id_b"] for r in rows]),
-            "ber": pa.array([r["ber"] for r in rows], type=pa.float64()),
-        }
-    )
-    _write_table_atomic(tbl, path, compression="zstd")
-    return path
+    schema = pa.schema({"id_a": pa.string(), "id_b": pa.string(), "ber": pa.float64()})
 
+    def build() -> pa.Table:
+        fps = [
+            (row["clip_id"], toks)
+            for row, pcm, sr in _decoded_clips(ensure_audio_dupes(sf_dir, root))
+            if (toks := independent.audio_fingerprint(pcm, sr))
+        ]
+        rows = []
+        for a, (id_a, fa) in enumerate(fps):
+            for id_b, fb in fps[a + 1 :]:
+                if len(fa) != len(fb):
+                    continue
+                ber = sum(bin(x ^ y).count("1") for x, y in zip(fa, fb)) / (16.0 * len(fa))
+                if ber <= AUDIO_DUP_MAX_BER:
+                    if not any(x == y for x, y in zip(fa, fb)):
+                        raise AssertionError(
+                            f"golden pair ({id_a}, {id_b}) shares no exact token: "
+                            "unreachable by the candidate stage"
+                        )
+                    rows.append((*sorted((id_a, id_b)), _spark_round6(ber)))
+        return _table(schema, sorted(rows))
+
+    return _cached(sf_dir, root, "golden_audio_near_dups.parquet", build)
+
+
+# ---------------------------------------------------------------------------
+# Per-clip audio goldens over clips.parquet (one _per_clip_golden kernel each)
+# ---------------------------------------------------------------------------
 
 RESAMPLE_TARGET_SR = 16000
 
 
-def ensure_golden_resample(
-    sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT, target_sr: int = RESAMPLE_TARGET_SR
-) -> str:
+def _resample_kernel(row: dict, pcm: np.ndarray, sr: int) -> list[tuple]:
+    q = _requantize16(independent.resample_linear(pcm, sr, RESAMPLE_TARGET_SR))
+    return [(row["clip_id"], int(q.size), _md5(q.tobytes()))]
+
+
+def ensure_golden_resample(sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT) -> str:
     """Golden for the audio_resample_16k driver query: per DECODABLE clip,
     the md5 + length of the linear-resampled, int16-requantized PCM at
-    ``target_sr``. Decode and resample both come from fixtures.independent
-    (per-sample-loop mirror of the engine's vectorized kernel; identical
-    explicit interpolation formula, so md5s are bit-exact)."""
-    import hashlib
+    RESAMPLE_TARGET_SR. Decode and resample both come from
+    fixtures.independent (per-sample-loop mirror of the engine's
+    vectorized kernel; identical explicit interpolation formula, so md5s
+    are bit-exact)."""
+    schema = pa.schema({"clip_id": pa.string(), "n_samples": pa.int32(), "pcm16_md5": pa.string()})
+    return _per_clip_golden(
+        ensure_fixtures(sf_dir, root), root, "golden_resample.parquet", _resample_kernel, schema
+    )
 
-    out_dir = fixtures_dir_for(sf_dir, root)
-    path = os.path.join(out_dir, "golden_resample.parquet")
-    if os.path.exists(path):
-        return path
-    clips = pq.read_table(
-        os.path.join(ensure_fixtures(sf_dir, root), "clips.parquet"),
-        columns=["clip_id", "bytes", "codec", "sr_hz"],
-    )
-    ids, md5s, lens = [], [], []
-    for cid, buf, codec, sr in zip(
-        clips.column("clip_id").to_pylist(),
-        clips.column("bytes").to_pylist(),
-        clips.column("codec").to_pylist(),
-        clips.column("sr_hz").to_pylist(),
-    ):
-        try:
-            pcm, _sr = independent.decode(buf, codec)
-        except Exception:  # noqa: BLE001 - decode failure => dropped row
-            continue
-        y = independent.resample_linear(pcm, sr or _sr, target_sr)
-        q = np.round(np.clip(y, -1.0, 1.0) * 32767.0).astype("<i2")
-        ids.append(cid)
-        md5s.append(hashlib.md5(q.tobytes()).hexdigest())
-        lens.append(int(q.size))
-    tbl = pa.Table.from_pydict(
-        {
-            "clip_id": pa.array(ids),
-            "n_samples": pa.array(lens, type=pa.int32()),
-            "pcm16_md5": pa.array(md5s),
-        }
-    )
-    _write_table_atomic(tbl, path, compression="zstd")
-    return path
+
+def _vector_golden(
+    sf_dir: str, root: str, name: str, column: str, fn: Callable[[np.ndarray, int], object]
+) -> str:
+    """A clip -> float-vector golden: ``fn(pcm, sr)`` with each element
+    rounded by the engine's shared floor(x*1e6+0.5)/1e6 expression; a None
+    vector (no full analysis frame after 16 kHz resampling) drops the clip."""
+
+    def kernel(row: dict, pcm: np.ndarray, sr: int) -> list[tuple]:
+        v = fn(pcm, sr)
+        return [] if v is None else [(row["clip_id"], (np.floor(v * 1e6 + 0.5) / 1e6).tolist())]
+
+    schema = pa.schema({"clip_id": pa.string(), column: pa.list_(pa.float64())})
+    return _per_clip_golden(ensure_fixtures(sf_dir, root), root, name, kernel, schema)
 
 
 def ensure_golden_mel(sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT) -> str:
-    """Golden for the audio_mel_features driver query: per DECODABLE
-    clip with at least one full 25 ms frame after 16 kHz resampling, the
-    16-element mean log-mel vector (independent.mel_mean — per-frame
-    loop mirror), each element rounded with the engine's shared
-    floor(x*1e6+0.5)/1e6 expression."""
-    out_dir = fixtures_dir_for(sf_dir, root)
-    os.makedirs(out_dir, exist_ok=True)
-    path = os.path.join(out_dir, "golden_mel.parquet")
-    if os.path.exists(path):
-        return path
-    clips = pq.read_table(
-        os.path.join(ensure_fixtures(sf_dir, root), "clips.parquet"),
-        columns=["clip_id", "bytes", "codec", "sr_hz"],
-    )
-    ids, vecs = [], []
-    for cid, buf, codec, sr in zip(
-        clips.column("clip_id").to_pylist(),
-        clips.column("bytes").to_pylist(),
-        clips.column("codec").to_pylist(),
-        clips.column("sr_hz").to_pylist(),
-    ):
-        try:
-            pcm, _sr = independent.decode(buf, codec)
-        except Exception:  # noqa: BLE001 - decode failure => dropped row
-            continue
-        v = independent.mel_mean(pcm, sr or _sr)
-        if v is None:
-            continue
-        ids.append(cid)
-        vecs.append((np.floor(v * 1e6 + 0.5) / 1e6).tolist())
-    tbl = pa.Table.from_pydict(
-        {
-            "clip_id": pa.array(ids),
-            "mel_mean": pa.array(vecs, type=pa.list_(pa.float64())),
-        }
-    )
-    _write_table_atomic(tbl, path, compression="zstd")
-    return path
+    """Golden for the audio_mel_features driver query: per decodable clip,
+    the 16-element mean log-mel vector (independent.mel_mean — per-frame
+    loop mirror)."""
+    return _vector_golden(sf_dir, root, "golden_mel.parquet", "mel_mean", independent.mel_mean)
 
 
 def ensure_golden_mfcc(sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT) -> str:
-    """Golden for the audio_mfcc driver query: per DECODABLE clip with
-    at least one full 25 ms frame after 16 kHz resampling, the
+    """Golden for the audio_mfcc driver query: per decodable clip, the
     13-element mean MFCC vector (independent.mfcc_mean — per-frame
-    scalar-loop DCT-II mirror), round-6 like the engine."""
-    out_dir = fixtures_dir_for(sf_dir, root)
-    os.makedirs(out_dir, exist_ok=True)
-    path = os.path.join(out_dir, "golden_mfcc.parquet")
-    if os.path.exists(path):
-        return path
-    clips = pq.read_table(
-        os.path.join(ensure_fixtures(sf_dir, root), "clips.parquet"),
-        columns=["clip_id", "bytes", "codec", "sr_hz"],
+    scalar-loop DCT-II mirror)."""
+    return _vector_golden(sf_dir, root, "golden_mfcc.parquet", "mfcc_mean", independent.mfcc_mean)
+
+
+def ensure_golden_pitch(sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT) -> str:
+    """Golden for the audio_pitch driver query: per decodable clip with at
+    least one full 640-sample analysis segment after 16 kHz resampling,
+    [f0_mean_hz, voiced_ratio] via independent.pitch_stats (per-frame
+    scalar-walk peak picking vs the engine's vectorized mask)."""
+    return _vector_golden(
+        sf_dir, root, "golden_pitch.parquet", "pitch_stats", independent.pitch_stats
     )
-    ids, vecs = [], []
-    for cid, buf, codec, sr in zip(
-        clips.column("clip_id").to_pylist(),
-        clips.column("bytes").to_pylist(),
-        clips.column("codec").to_pylist(),
-        clips.column("sr_hz").to_pylist(),
-    ):
-        try:
-            pcm, _sr = independent.decode(buf, codec)
-        except Exception:  # noqa: BLE001 - decode failure => dropped row
-            continue
-        v = independent.mfcc_mean(pcm, sr or _sr)
-        if v is None:
-            continue
-        ids.append(cid)
-        vecs.append((np.floor(v * 1e6 + 0.5) / 1e6).tolist())
-    tbl = pa.Table.from_pydict(
-        {
-            "clip_id": pa.array(ids),
-            "mfcc_mean": pa.array(vecs, type=pa.list_(pa.float64())),
-        }
-    )
-    _write_table_atomic(tbl, path, compression="zstd")
-    return path
+
+
+def _segments_kernel(row: dict, pcm: np.ndarray, sr: int) -> list[tuple]:
+    frame, hop, rms = _frame_rms(pcm, sr)
+    if not rms:
+        return []
+    thr = max(0.1 * max(rms), 1e-4)
+    out, i = [], 0
+    while i < len(rms):
+        if rms[i] > thr:
+            a = i
+            while i + 1 < len(rms) and rms[i + 1] > thr:
+                i += 1
+            payload = independent.encode(pcm[a * hop : i * hop + frame], sr, "wav")
+            out.append(
+                (
+                    row["clip_id"],
+                    len(out) + 1,
+                    a * HOP_MS,
+                    i * HOP_MS + FRAME_MS,
+                    len(payload),
+                    _md5(payload),
+                )
+            )
+        i += 1
+    return out
 
 
 def ensure_golden_segments(sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT) -> str:
@@ -1433,109 +1219,42 @@ def ensure_golden_segments(sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT) -> st
     formula (the golden_frames spec), a scalar island scan, and
     independent.encode — the engine's codecs module never touches these
     bytes."""
-    import hashlib
-
-    out_dir = fixtures_dir_for(sf_dir, root)
-    os.makedirs(out_dir, exist_ok=True)
-    path = os.path.join(out_dir, "golden_segments.parquet")
-    if os.path.exists(path):
-        return path
-    clips = pq.read_table(
-        os.path.join(ensure_fixtures(sf_dir, root), "clips.parquet"),
-        columns=["clip_id", "bytes", "codec", "sr_hz"],
-    )
-    ids, segs, starts, ends, nbytes, md5s = [], [], [], [], [], []
-    for cid, buf, codec, sr in zip(
-        clips.column("clip_id").to_pylist(),
-        clips.column("bytes").to_pylist(),
-        clips.column("codec").to_pylist(),
-        clips.column("sr_hz").to_pylist(),
-    ):
-        try:
-            pcm, _sr = independent.decode(buf, codec)
-        except Exception:  # noqa: BLE001 - decode failure => no rows
-            continue
-        sr = sr or _sr
-        frame = max(1, int(sr * FRAME_MS / 1000))
-        hop = max(1, int(sr * HOP_MS / 1000))
-        n = pcm.shape[0]
-        if n < frame:
-            continue
-        n_frames = (n - frame) // hop + 1
-        sq = pcm.astype(np.float64) ** 2
-        idx = np.arange(n_frames)[:, None] * hop + np.arange(frame)[None, :]
-        rms = np.sqrt(np.cumsum(sq[idx], axis=1)[:, -1] / float(frame))
-        rms = [_spark_round6(float(v)) for v in rms]
-        thr = max(0.1 * max(rms), 1e-4)
-        k, i = 0, 0
-        while i < n_frames:
-            if rms[i] > thr:
-                a = i
-                while i + 1 < n_frames and rms[i + 1] > thr:
-                    i += 1
-                b = i
-                k += 1
-                payload = independent.encode(pcm[a * hop : b * hop + frame], sr, "wav")
-                ids.append(cid)
-                segs.append(k)
-                starts.append(a * HOP_MS)
-                ends.append(b * HOP_MS + FRAME_MS)
-                nbytes.append(len(payload))
-                md5s.append(hashlib.md5(payload).hexdigest())
-            i += 1
-    tbl = pa.Table.from_pydict(
+    schema = pa.schema(
         {
-            "clip_id": pa.array(ids),
-            "seg_idx": pa.array(segs, type=pa.int64()),
-            "start_ms": pa.array(starts, type=pa.int64()),
-            "end_ms": pa.array(ends, type=pa.int64()),
-            "n_bytes": pa.array(nbytes, type=pa.int64()),
-            "seg_md5": pa.array(md5s),
+            "clip_id": pa.string(),
+            "seg_idx": pa.int64(),
+            "start_ms": pa.int64(),
+            "end_ms": pa.int64(),
+            "n_bytes": pa.int64(),
+            "seg_md5": pa.string(),
         }
     )
-    _write_table_atomic(tbl, path, compression="zstd")
-    return path
+    return _per_clip_golden(
+        ensure_fixtures(sf_dir, root), root, "golden_segments.parquet", _segments_kernel, schema
+    )
 
 
-def ensure_golden_pitch(sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT) -> str:
-    """Golden for the audio_pitch driver query: per DECODABLE clip with
-    at least one full 640-sample analysis segment after 16 kHz
-    resampling, [f0_mean_hz, voiced_ratio] via independent.pitch_stats
-    (per-frame scalar-walk peak picking vs the engine's vectorized
-    mask), round-6 like the engine."""
-    out_dir = fixtures_dir_for(sf_dir, root)
-    os.makedirs(out_dir, exist_ok=True)
-    path = os.path.join(out_dir, "golden_pitch.parquet")
-    if os.path.exists(path):
-        return path
-    clips = pq.read_table(
-        os.path.join(ensure_fixtures(sf_dir, root), "clips.parquet"),
-        columns=["clip_id", "bytes", "codec", "sr_hz"],
-    )
-    ids, vecs = [], []
-    for cid, buf, codec, sr in zip(
-        clips.column("clip_id").to_pylist(),
-        clips.column("bytes").to_pylist(),
-        clips.column("codec").to_pylist(),
-        clips.column("sr_hz").to_pylist(),
-    ):
-        try:
-            pcm, _sr = independent.decode(buf, codec)
-        except Exception:  # noqa: BLE001 - decode failure => dropped row
-            continue
-        v = independent.pitch_stats(pcm, sr or _sr)
-        if v is None:
-            continue
-        ids.append(cid)
-        vecs.append((np.floor(v * 1e6 + 0.5) / 1e6).tolist())
-    tbl = pa.Table.from_pydict(
-        {
-            "clip_id": pa.array(ids),
-            "pitch_stats": pa.array(vecs, type=pa.list_(pa.float64())),
-        }
-    )
-    _write_table_atomic(tbl, path, compression="zstd")
-    return path
+def _fp_query_kernel(row: dict, pcm: np.ndarray, sr: int) -> list[tuple]:
+    i = int(row["clip_id"][2:])
+    if i % 7 != 1:
+        return []
+    frame = int(round(sr * 0.064))
+    hop = frame // 2
+    snip_len = int(round(sr * 1.2))
+    start = 2 * ((i // 7) % 4) * hop  # even-hop boundary => aligned frames
+    if hop <= 0 or start + snip_len > pcm.shape[0]:
+        return []
+    gain = np.float32(1.0) if (i // 7) % 2 == 0 else np.float32(0.5)
+    snippet = pcm[start : start + snip_len] * gain
+    return [
+        (
+            f"q{i:012d}",
+            independent.encode(snippet, sr, "wav"),
+            sr,
+            "wav",
+            row["ts"] + timedelta(milliseconds=50),
+        )
+    ]
 
 
 def ensure_fp_queries(sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT) -> str:
@@ -1550,62 +1269,28 @@ def ensure_fp_queries(sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT) -> str:
     Schema: (query_id string, bytes binary, sr_hz int32, codec string,
     ts timestamp) — the snippet table a retrieval service would ingest.
     All slicing uses the INDEPENDENT decoder so the fixture never touches
-    engine kernels.
+    engine kernels. 256-row groups keep the scan splittable: a
+    single-row-group file gives Spark one effective scan split however
+    many byte ranges the planner cuts, which serialized the snippet
+    fingerprint pass on one task.
     """
-    out_dir = fixtures_dir_for(sf_dir, root)
-    os.makedirs(out_dir, exist_ok=True)
-    path = os.path.join(out_dir, "fp_queries.parquet")
-    if os.path.exists(path):
-        return path
-    clips = pq.read_table(
-        os.path.join(ensure_fixtures(sf_dir, root), "clips.parquet"),
-        columns=["clip_id", "bytes", "codec", "sr_hz", "ts"],
-    )
-    qids, bufs, srs, tss = [], [], [], []
-    for cid, buf, codec, sr, ts in zip(
-        clips.column("clip_id").to_pylist(),
-        clips.column("bytes").to_pylist(),
-        clips.column("codec").to_pylist(),
-        clips.column("sr_hz").to_pylist(),
-        clips.column("ts").to_pylist(),
-    ):
-        i = int(cid[2:])
-        if i % 7 != 1:
-            continue
-        try:
-            pcm, _sr = independent.decode(buf, codec)
-        except Exception:  # noqa: BLE001 - undecodable donor => no snippet
-            continue
-        sr = sr or _sr
-        frame = int(round(sr * 0.064))
-        hop = frame // 2
-        snip_len = int(round(sr * 1.2))
-        start = 2 * ((i // 7) % 4) * hop  # even-hop boundary => aligned frames
-        if hop <= 0 or start + snip_len > pcm.shape[0]:
-            continue
-        gain = np.float32(1.0) if (i // 7) % 2 == 0 else np.float32(0.5)
-        snippet = pcm[start : start + snip_len] * gain
-        qids.append(f"q{i:012d}")
-        bufs.append(independent.encode(snippet, sr, "wav"))
-        srs.append(sr)
-        tss.append(ts + timedelta(milliseconds=50))
-    tbl = pa.Table.from_pydict(
+    schema = pa.schema(
         {
-            "query_id": pa.array(qids),
-            "bytes": pa.array(bufs, type=pa.binary()),
-            "sr_hz": pa.array(srs, type=pa.int32()),
-            "codec": pa.array(["wav"] * len(qids)),
-            "ts": pa.array(tss, type=pa.timestamp("us")),
+            "query_id": pa.string(),
+            "bytes": pa.binary(),
+            "sr_hz": pa.int32(),
+            "codec": pa.string(),
+            "ts": pa.timestamp("us"),
         }
     )
-    # round-6: bounded row groups. A single-row-group file gives Spark one
-    # EFFECTIVE scan split no matter how many byte ranges the planner cuts
-    # (only the range holding the row-group midpoint gets rows), which
-    # serialized the snippet fingerprint pass on one task. 256 rows/group
-    # (~12 MB at ~50 KB payloads) keeps the scan splittable; content is
-    # unchanged — goldens derive from the table values, not the layout.
-    _write_table_atomic(tbl, path, compression="zstd", row_group_size=256)
-    return path
+    return _per_clip_golden(
+        ensure_fixtures(sf_dir, root),
+        root,
+        "fp_queries.parquet",
+        _fp_query_kernel,
+        schema,
+        row_group_size=256,
+    )
 
 
 def ensure_golden_fp_match(sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT) -> str:
@@ -1614,112 +1299,105 @@ def ensure_golden_fp_match(sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT) -> st
     independent.decode + independent.audio_fingerprint on BOTH sides, a full
     corpus inverted index (no capping, no sampling), top-1 per query with
     the (votes desc, clip_id asc, offset asc) tiebreak, min 4 votes."""
-    out_dir = fixtures_dir_for(sf_dir, root)
-    os.makedirs(out_dir, exist_ok=True)
-    path = os.path.join(out_dir, "golden_fp_match.parquet")
-    if os.path.exists(path):
-        return path
-    clips = pq.read_table(
-        os.path.join(ensure_fixtures(sf_dir, root), "clips.parquet"),
-        columns=["clip_id", "bytes", "codec", "sr_hz"],
-    )
-    index: dict[int, list[tuple[str, int]]] = {}
-    for cid, buf, codec, sr in zip(
-        clips.column("clip_id").to_pylist(),
-        clips.column("bytes").to_pylist(),
-        clips.column("codec").to_pylist(),
-        clips.column("sr_hz").to_pylist(),
-    ):
-        try:
-            pcm, _sr = independent.decode(buf, codec)
-        except Exception:  # noqa: BLE001 - engine nulls these too
-            continue
-        toks = independent.audio_fingerprint(pcm, sr or _sr)
-        for t in range(len(toks) - 1):
-            index.setdefault((toks[t] << 16) | toks[t + 1], []).append((cid, t))
-    queries = pq.read_table(ensure_fp_queries(sf_dir, root))
-    qids, cids, offs, votes_out = [], [], [], []
-    for qid, buf, sr in zip(
-        queries.column("query_id").to_pylist(),
-        queries.column("bytes").to_pylist(),
-        queries.column("sr_hz").to_pylist(),
-    ):
-        pcm, _sr = independent.decode(buf, "wav")
-        toks = independent.audio_fingerprint(pcm, sr or _sr)
-        votes: dict[tuple[str, int], int] = {}
-        for qt in range(len(toks) - 1):
-            for cid, t in index.get((toks[qt] << 16) | toks[qt + 1], ()):
-                pair = (cid, t - qt)
-                votes[pair] = votes.get(pair, 0) + 1
-        if not votes:
-            continue
-        (cid, off), n = min(
-            votes.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
-        )
-        if n < 4:
-            continue
-        qids.append(qid)
-        cids.append(cid)
-        offs.append(off)
-        votes_out.append(n)
-    tbl = pa.Table.from_pydict(
+    schema = pa.schema(
         {
-            "query_id": pa.array(qids),
-            "clip_id": pa.array(cids),
-            "offset_frames": pa.array(offs, type=pa.int64()),
-            "votes": pa.array(votes_out, type=pa.int64()),
+            "query_id": pa.string(),
+            "clip_id": pa.string(),
+            "offset_frames": pa.int64(),
+            "votes": pa.int64(),
         }
     )
-    _write_table_atomic(tbl, path, compression="zstd")
-    return path
+
+    def build() -> pa.Table:
+        index: dict[int, list[tuple[str, int]]] = {}
+        clips = os.path.join(ensure_fixtures(sf_dir, root), "clips.parquet")
+        for row, pcm, sr in _decoded_clips(clips):
+            toks = independent.audio_fingerprint(pcm, sr)
+            for t in range(len(toks) - 1):
+                index.setdefault((toks[t] << 16) | toks[t + 1], []).append((row["clip_id"], t))
+        rows = []
+        for q in pq.read_table(ensure_fp_queries(sf_dir, root)).to_pylist():
+            pcm, _sr = independent.decode(q["bytes"], "wav")
+            toks = independent.audio_fingerprint(pcm, q["sr_hz"] or _sr)
+            votes: dict[tuple[str, int], int] = {}
+            for qt in range(len(toks) - 1):
+                for cid, t in index.get((toks[qt] << 16) | toks[qt + 1], ()):
+                    votes[(cid, t - qt)] = votes.get((cid, t - qt), 0) + 1
+            if not votes:
+                continue
+            (cid, off), n = min(votes.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1]))
+            if n >= 4:
+                rows.append((q["query_id"], cid, off, n))
+        return _table(schema, rows)
+
+    return _cached(sf_dir, root, "golden_fp_match.parquet", build)
+
+
+def _wav_golden(
+    sf_dir: str,
+    root: str,
+    name: str,
+    column: str,
+    transform: Callable[[dict, np.ndarray, int], np.ndarray],
+) -> str:
+    """A clip -> re-encoded audio golden: (clip_id, n_samples, md5 of the
+    RIFF/WAVE PCM16 re-encode of ``transform(row, pcm, sr)`` by the
+    independent encoder — the engine's codecs module never touches these
+    bytes)."""
+
+    def kernel(row: dict, pcm: np.ndarray, sr: int) -> list[tuple]:
+        y = transform(row, pcm, sr)
+        return [(row["clip_id"], y.shape[0], _md5(independent.encode(y, sr, "wav")))]
+
+    schema = pa.schema({"clip_id": pa.string(), "n_samples": pa.int64(), column: pa.string()})
+    return _per_clip_golden(ensure_fixtures(sf_dir, root), root, name, kernel, schema)
 
 
 def ensure_golden_augment(sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT) -> str:
     """Golden for the audio_augment_noise driver query: per decodable clip,
-    the md5 of the RIFF/WAVE PCM16 re-encode of the deterministically
-    noise-mixed signal (independent.decode + independent.augment_noise +
-    independent.encode — the engine's codecs module never touches these
-    bytes; the noise generator seed spec is shared, the arithmetic is
+    the deterministically noise-mixed signal (independent.augment_noise;
+    the noise generator seed spec is shared, the arithmetic is
     independently re-implemented scalar-wise)."""
-    import hashlib
-    import zlib as _zlib
+    return _wav_golden(
+        sf_dir,
+        root,
+        "golden_augment.parquet",
+        "aug_md5",
+        lambda row, pcm, sr: independent.augment_noise(pcm, sr, _clip_seed(row)),
+    )
 
-    out_dir = fixtures_dir_for(sf_dir, root)
-    os.makedirs(out_dir, exist_ok=True)
-    path = os.path.join(out_dir, "golden_augment.parquet")
-    if os.path.exists(path):
-        return path
-    clips = pq.read_table(
-        os.path.join(ensure_fixtures(sf_dir, root), "clips.parquet"),
-        columns=["clip_id", "bytes", "codec", "sr_hz"],
+
+def ensure_golden_loudnorm(sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT) -> str:
+    """Golden for the audio_normalize_loudness driver query: per decodable
+    clip, independent.normalize_loudness (scalar power/peak folds)."""
+    return _wav_golden(
+        sf_dir,
+        root,
+        "golden_loudnorm.parquet",
+        "norm_md5",
+        lambda row, pcm, sr: independent.normalize_loudness(pcm),
     )
-    ids, ns, md5s = [], [], []
-    for cid, buf, codec, sr in zip(
-        clips.column("clip_id").to_pylist(),
-        clips.column("bytes").to_pylist(),
-        clips.column("codec").to_pylist(),
-        clips.column("sr_hz").to_pylist(),
-    ):
-        try:
-            pcm, _sr = independent.decode(buf, codec)
-        except Exception:  # noqa: BLE001 - decode failure => no row
-            continue
-        mixed = independent.augment_noise(
-            pcm, sr or _sr, _zlib.crc32(cid.encode("utf-8"))
-        )
-        payload = independent.encode(mixed, sr or _sr, "wav")
-        ids.append(cid)
-        ns.append(mixed.shape[0])
-        md5s.append(hashlib.md5(payload).hexdigest())
-    tbl = pa.Table.from_pydict(
-        {
-            "clip_id": pa.array(ids),
-            "n_samples": pa.array(ns, type=pa.int64()),
-            "aug_md5": pa.array(md5s),
-        }
+
+
+def ensure_golden_reverb(sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT) -> str:
+    """Golden for the audio_augment_reverb driver query: per decodable
+    clip, independent.augment_reverb (independent RIR envelope loop +
+    scalar peak walks around the shared FFT core)."""
+    return _wav_golden(
+        sf_dir,
+        root,
+        "golden_reverb.parquet",
+        "rev_md5",
+        lambda row, pcm, sr: independent.augment_reverb(pcm, sr, _clip_seed(row)),
     )
-    _write_table_atomic(tbl, path, compression="zstd")
-    return path
+
+
+def _speed_kernel(row: dict, pcm: np.ndarray, sr: int) -> list[tuple]:
+    out = []
+    for s in (0.9, 1.1):
+        y = independent.resample_linear(pcm, round(sr * s), sr)
+        out.append((row["clip_id"], s, y.shape[0], _md5(independent.encode(y, sr, "wav"))))
+    return out
 
 
 def ensure_golden_speed(sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT) -> str:
@@ -1728,46 +1406,25 @@ def ensure_golden_speed(sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT) -> str:
     of independent.resample_linear(pcm, round(sr*speed), sr) — the
     independent per-sample-loop resampler composed with the independent
     encoder; the engine's codecs/audio modules never touch these bytes."""
-    import hashlib
-
-    out_dir = fixtures_dir_for(sf_dir, root)
-    os.makedirs(out_dir, exist_ok=True)
-    path = os.path.join(out_dir, "golden_speed.parquet")
-    if os.path.exists(path):
-        return path
-    clips = pq.read_table(
-        os.path.join(ensure_fixtures(sf_dir, root), "clips.parquet"),
-        columns=["clip_id", "bytes", "codec", "sr_hz"],
-    )
-    ids, sps, ns, md5s = [], [], [], []
-    for cid, buf, codec, sr in zip(
-        clips.column("clip_id").to_pylist(),
-        clips.column("bytes").to_pylist(),
-        clips.column("codec").to_pylist(),
-        clips.column("sr_hz").to_pylist(),
-    ):
-        try:
-            pcm, _sr = independent.decode(buf, codec)
-        except Exception:  # noqa: BLE001 - decode failure => no rows
-            continue
-        rate = sr or _sr
-        for s in (0.9, 1.1):
-            y = independent.resample_linear(pcm, round(rate * s), rate)
-            payload = independent.encode(y, rate, "wav")
-            ids.append(cid)
-            sps.append(s)
-            ns.append(y.shape[0])
-            md5s.append(hashlib.md5(payload).hexdigest())
-    tbl = pa.Table.from_pydict(
+    schema = pa.schema(
         {
-            "clip_id": pa.array(ids),
-            "speed": pa.array(sps, type=pa.float64()),
-            "n_samples": pa.array(ns, type=pa.int64()),
-            "aug_md5": pa.array(md5s),
+            "clip_id": pa.string(),
+            "speed": pa.float64(),
+            "n_samples": pa.int64(),
+            "aug_md5": pa.string(),
         }
     )
-    _write_table_atomic(tbl, path, compression="zstd")
-    return path
+    return _per_clip_golden(
+        ensure_fixtures(sf_dir, root), root, "golden_speed.parquet", _speed_kernel, schema
+    )
+
+
+def _specaugment_kernel(row: dict, pcm: np.ndarray, sr: int) -> list[tuple]:
+    res = independent.specaugment_means(pcm, sr, _clip_seed(row))
+    if res is None:
+        return []
+    *mask, mean = res
+    return [(row["clip_id"], *mask, *(round(float(m), 6) for m in mean))]
 
 
 def ensure_golden_specaugment(sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT) -> str:
@@ -1777,147 +1434,26 @@ def ensure_golden_specaugment(sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT) ->
     scalar-loop log-mel mirror, per-cell mask loop, left-to-right frame
     fold — the engine's audio module never touches these values; the
     RNG draw order is the shared spec)."""
-    out_dir = fixtures_dir_for(sf_dir, root)
-    os.makedirs(out_dir, exist_ok=True)
-    path = os.path.join(out_dir, "golden_specaugment.parquet")
-    if os.path.exists(path):
-        return path
-    import zlib as _zlib
-
-    clips = pq.read_table(
-        os.path.join(ensure_fixtures(sf_dir, root), "clips.parquet"),
-        columns=["clip_id", "bytes", "codec", "sr_hz"],
+    schema = pa.schema(
+        [(c, pa.int32()) for c in ("f0", "f_w", "t0", "t_w", "n_frames")]
+        + [(f"m{m:02d}", pa.float64()) for m in range(16)]
+    ).insert(0, pa.field("clip_id", pa.string()))
+    return _per_clip_golden(
+        ensure_fixtures(sf_dir, root),
+        root,
+        "golden_specaugment.parquet",
+        _specaugment_kernel,
+        schema,
     )
-    ids, f0s, fws, t0s, tws, nfs = [], [], [], [], [], []
-    mels = [[] for _ in range(16)]
-    for cid, buf, codec, sr in zip(
-        clips.column("clip_id").to_pylist(),
-        clips.column("bytes").to_pylist(),
-        clips.column("codec").to_pylist(),
-        clips.column("sr_hz").to_pylist(),
-    ):
-        try:
-            pcm, _sr = independent.decode(buf, codec)
-        except Exception:  # noqa: BLE001 - decode failure => no row
-            continue
-        res = independent.specaugment_means(
-            pcm, sr or _sr, _zlib.crc32(cid.encode("utf-8"))
-        )
-        if res is None:
-            continue
-        f0, f_w, t0, t_w, n_frames, mean = res
-        ids.append(cid)
-        f0s.append(f0), fws.append(f_w), t0s.append(t0), tws.append(t_w)
-        nfs.append(n_frames)
-        for m in range(16):
-            mels[m].append(round(float(mean[m]), 6))
-    cols = {
-        "clip_id": pa.array(ids),
-        "f0": pa.array(f0s, type=pa.int32()),
-        "f_w": pa.array(fws, type=pa.int32()),
-        "t0": pa.array(t0s, type=pa.int32()),
-        "t_w": pa.array(tws, type=pa.int32()),
-        "n_frames": pa.array(nfs, type=pa.int32()),
-    }
-    for m in range(16):
-        cols[f"m{m:02d}"] = pa.array(mels[m], type=pa.float64())
-    _write_table_atomic(pa.Table.from_pydict(cols), path, compression="zstd")
-    return path
-
-
-def ensure_golden_loudnorm(sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT) -> str:
-    """Golden for the audio_normalize_loudness driver query: per decodable
-    clip, the md5 of the RIFF/WAVE PCM16 re-encode of
-    independent.normalize_loudness (scalar power/peak folds, independent
-    decode and encoder)."""
-    import hashlib
-
-    out_dir = fixtures_dir_for(sf_dir, root)
-    os.makedirs(out_dir, exist_ok=True)
-    path = os.path.join(out_dir, "golden_loudnorm.parquet")
-    if os.path.exists(path):
-        return path
-    clips = pq.read_table(
-        os.path.join(ensure_fixtures(sf_dir, root), "clips.parquet"),
-        columns=["clip_id", "bytes", "codec", "sr_hz"],
-    )
-    ids, ns, md5s = [], [], []
-    for cid, buf, codec, sr in zip(
-        clips.column("clip_id").to_pylist(),
-        clips.column("bytes").to_pylist(),
-        clips.column("codec").to_pylist(),
-        clips.column("sr_hz").to_pylist(),
-    ):
-        try:
-            pcm, _sr = independent.decode(buf, codec)
-        except Exception:  # noqa: BLE001 - decode failure => no row
-            continue
-        y = independent.normalize_loudness(pcm)
-        ids.append(cid)
-        ns.append(y.shape[0])
-        md5s.append(hashlib.md5(independent.encode(y, sr or _sr, "wav")).hexdigest())
-    tbl = pa.Table.from_pydict(
-        {
-            "clip_id": pa.array(ids),
-            "n_samples": pa.array(ns, type=pa.int64()),
-            "norm_md5": pa.array(md5s),
-        }
-    )
-    _write_table_atomic(tbl, path, compression="zstd")
-    return path
-
-
-def ensure_golden_reverb(sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT) -> str:
-    """Golden for the audio_augment_reverb driver query: per decodable
-    clip, the md5 of the RIFF/WAVE PCM16 re-encode of
-    independent.augment_reverb (independent decode, independent RIR
-    envelope loop + scalar peak walks around the shared FFT core,
-    independent encoder)."""
-    import hashlib
-    import zlib as _zlib
-
-    out_dir = fixtures_dir_for(sf_dir, root)
-    os.makedirs(out_dir, exist_ok=True)
-    path = os.path.join(out_dir, "golden_reverb.parquet")
-    if os.path.exists(path):
-        return path
-    clips = pq.read_table(
-        os.path.join(ensure_fixtures(sf_dir, root), "clips.parquet"),
-        columns=["clip_id", "bytes", "codec", "sr_hz"],
-    )
-    ids, ns, md5s = [], [], []
-    for cid, buf, codec, sr in zip(
-        clips.column("clip_id").to_pylist(),
-        clips.column("bytes").to_pylist(),
-        clips.column("codec").to_pylist(),
-        clips.column("sr_hz").to_pylist(),
-    ):
-        try:
-            pcm, _sr = independent.decode(buf, codec)
-        except Exception:  # noqa: BLE001 - decode failure => no row
-            continue
-        y = independent.augment_reverb(pcm, sr or _sr, _zlib.crc32(cid.encode("utf-8")))
-        ids.append(cid)
-        ns.append(y.shape[0])
-        md5s.append(hashlib.md5(independent.encode(y, sr or _sr, "wav")).hexdigest())
-    tbl = pa.Table.from_pydict(
-        {
-            "clip_id": pa.array(ids),
-            "n_samples": pa.array(ns, type=pa.int64()),
-            "rev_md5": pa.array(md5s),
-        }
-    )
-    _write_table_atomic(tbl, path, compression="zstd")
-    return path
 
 
 # ---------------------------------------------------------------------------
-# Real-FLAC fixture table (round 5): clips encoded by the INDEPENDENT
-# from-spec FLAC writer (fixtures/independent.flac_bytes — frames, Rice
-# residuals, CRC-8/16); the engine's dataflow_geobeam_spark/flac decoder
-# never touches these bytes at generation time. Coexists with the
-# GBSFLAC1 stand-in cycle in clips.parquet (magic dispatch in
-# codecs.decode keeps golden continuity there).
+# Real-FLAC fixture table: clips encoded by the INDEPENDENT from-spec FLAC
+# writer (fixtures/independent.flac_bytes — frames, Rice residuals,
+# CRC-8/16); the engine's dataflow_geobeam_spark/flac decoder never touches
+# these bytes at generation time. Coexists with the GBSFLAC1 stand-in cycle
+# in clips.parquet (magic dispatch in codecs.decode keeps golden continuity
+# there).
 # ---------------------------------------------------------------------------
 
 FLAC_ROWS_PER_SF = 4800  # sf0.01 -> 48, sf0.1 -> 480
@@ -1939,101 +1475,87 @@ def _flac_clip_pcm16(i: int, sr_hz: int, n: int) -> np.ndarray:
     return np.round(np.clip(x, -1.0, 1.0) * 32767.0).astype(np.int16)
 
 
+def _flac_clip(i: int) -> tuple:
+    sr = (16000, 22050, 8000)[i % 3]
+    n = int(sr * (0.25 + ((i * 37) % 20) / 10.0))  # 0.25 - 2.25 s
+    pcm = _flac_clip_pcm16(i, sr, n)
+    blocksize = (192, 1000, 4096)[(i // 3) % 3]
+    p_order = (0, 2)[(i // 9) % 2]
+    if i % 7 == 2:  # stereo left-side pair; engine downmixes
+        right = np.round(pcm.astype(np.float64) * 0.7).astype(np.int16)
+        buf = independent.flac_bytes(
+            np.stack([pcm, right], axis=1), sr, blocksize=blocksize,
+            stereo_mode="leftside", partition_order=p_order,
+        )
+    else:
+        buf = independent.flac_bytes(pcm, sr, blocksize=blocksize, partition_order=p_order)
+    if i % 13 == 4:  # truncate mid-frame; magic + STREAMINFO survive
+        buf = buf[: max(50, int(len(buf) * 0.6))]
+    return f"fl{i:06d}", buf, sr
+
+
 def ensure_flac_clips(sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT) -> str:
     """fixtures/<sf>/flac_clips.parquet: (clip_id string, bytes binary,
     sr_hz int32). Cycles blocksize 192 / 1000 / 4096, Rice partition
     order 0 / 2, every 7th clip stereo (left-side decorrelation, engine
     downmixes), ~7% truncated mid-frame (decode-failure rows the engine
     must drop — F1 semantics)."""
-    out_dir = fixtures_dir_for(sf_dir, root)
-    os.makedirs(out_dir, exist_ok=True)
-    path = os.path.join(out_dir, "flac_clips.parquet")
-    if os.path.exists(path):
-        return path
+    schema = pa.schema({"clip_id": pa.string(), "bytes": pa.binary(), "sr_hz": pa.int32()})
     n_rows = max(48, int(FLAC_ROWS_PER_SF * sf_from_dir(sf_dir)))
-    ids, bufs, srs = [], [], []
-    for i in range(n_rows):
-        rng = np.random.default_rng([SEED, 12_500_000 + i])
-        sr = (16000, 22050, 8000)[i % 3]
-        n = int(sr * (0.25 + ((i * 37) % 20) / 10.0))  # 0.25 - 2.25 s
-        pcm = _flac_clip_pcm16(i, sr, n)
-        blocksize = (192, 1000, 4096)[(i // 3) % 3]
-        p_order = (0, 2)[(i // 9) % 2]
-        if i % 7 == 2:  # stereo left-side pair; engine downmixes
-            right = np.round(pcm.astype(np.float64) * 0.7).astype(np.int16)
-            samples = np.stack([pcm, right], axis=1)
-            buf = independent.flac_bytes(
-                samples, sr, blocksize=blocksize,
-                stereo_mode="leftside", partition_order=p_order,
-            )
-        else:
-            buf = independent.flac_bytes(
-                pcm, sr, blocksize=blocksize, partition_order=p_order
-            )
-        if i % 13 == 4:  # truncate mid-frame; magic + STREAMINFO survive
-            buf = buf[: max(50, int(len(buf) * 0.6))]
-        ids.append(f"fl{i:06d}")
-        bufs.append(buf)
-        srs.append(sr)
-    tbl = pa.Table.from_pydict(
-        {
-            "clip_id": pa.array(ids),
-            "bytes": pa.array(bufs, type=pa.binary()),
-            "sr_hz": pa.array(srs, type=pa.int32()),
-        }
-    )
     # bounded row groups: the row group is the scan-split unit, and this
     # decode is the most expensive per-row kernel in the engine — one
     # whole-table group would serialize it onto a single core (caught at
     # sf0.1: 31.6 s on one task vs ~2 s split)
-    _write_table_atomic(tbl, path, compression="zstd", row_group_size=16)
-    return path
+    return _cached(
+        sf_dir,
+        root,
+        "flac_clips.parquet",
+        lambda: _table(schema, [_flac_clip(i) for i in range(n_rows)]),
+        row_group_size=16,
+    )
+
+
+def _int16_mono(samples: np.ndarray) -> np.ndarray:
+    """int16 (n, channels) -> little-endian int16 mono: the engine's
+    documented floor-mean downmix, -32768 clamped to -32767
+    (codecs._int16_to_pcm's normalization contract)."""
+    s64 = samples.astype(np.int64)
+    mono = s64[:, 0] if s64.shape[1] == 1 else np.sum(s64, axis=1) // s64.shape[1]
+    return np.maximum(mono, -32767).astype("<i2")
 
 
 def ensure_golden_flac_decode(sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT) -> str:
     """Golden for the audio_flac_decode driver query: per DECODABLE real
     FLAC clip, (sr, n_samples, md5 of the little-endian int16 mono
-    stream). Decode via the independent mirror; stereo downmixed with the
-    engine's documented floor-mean; -32768 clamped to -32767 (the
-    engine's normalization contract, codecs._int16_to_pcm)."""
-    import hashlib
-
-    clips_path = ensure_flac_clips(sf_dir, root)
-    out_dir = fixtures_dir_for(sf_dir, root)
-    path = os.path.join(out_dir, "golden_flac_decode.parquet")
-    if os.path.exists(path):
-        return path
-    t = pq.read_table(clips_path)
-    ids, srs, lens, md5s = [], [], [], []
-    for cid, buf in zip(t.column("clip_id").to_pylist(), t.column("bytes").to_pylist()):
-        try:
-            samples, sr = independent.decode_flac_independent(bytes(buf))
-        except ValueError:
-            continue  # truncated payload: dropped on both sides
-        s64 = samples.astype(np.int64)
-        mono = s64[:, 0] if s64.shape[1] == 1 else np.sum(s64, axis=1) // s64.shape[1]
-        mono = np.maximum(mono, -32767).astype("<i2")
-        ids.append(cid)
-        srs.append(int(sr))
-        lens.append(int(mono.shape[0]))
-        md5s.append(hashlib.md5(mono.tobytes()).hexdigest())
-    tbl = pa.Table.from_pydict(
+    stream), decoded by the independent mirror."""
+    schema = pa.schema(
         {
-            "clip_id": pa.array(ids),
-            "sr_hz": pa.array(srs, type=pa.int32()),
-            "n_samples": pa.array(lens, type=pa.int64()),
-            "pcm16_md5": pa.array(md5s),
+            "clip_id": pa.string(),
+            "sr_hz": pa.int32(),
+            "n_samples": pa.int64(),
+            "pcm16_md5": pa.string(),
         }
     )
-    _write_table_atomic(tbl, path, compression="zstd")
-    return path
+
+    def build() -> pa.Table:
+        rows = []
+        for r in pq.read_table(ensure_flac_clips(sf_dir, root)).to_pylist():
+            try:
+                samples, sr = independent.decode_flac_independent(bytes(r["bytes"]))
+            except ValueError:
+                continue  # truncated payload: dropped on both sides
+            mono = _int16_mono(samples)
+            rows.append((r["clip_id"], int(sr), int(mono.shape[0]), _md5(mono.tobytes())))
+        return _table(schema, rows)
+
+    return _cached(sf_dir, root, "golden_flac_decode.parquet", build)
 
 
 # ---------------------------------------------------------------------------
-# Label-free mixed-container audio fixture (round 5): crawled audio has no
-# codec column, so the sniff-ingest query decodes by magic alone. Rows
-# cycle EVERY container the engine decodes — real RIFF/WAVE, real FLAC,
-# AIFF (80-bit extended-float rate), Sun AU, and the three deterministic
+# Label-free mixed-container audio fixture: crawled audio has no codec
+# column, so the sniff-ingest query decodes by magic alone. Rows cycle
+# EVERY container the engine decodes — real RIFF/WAVE, real FLAC, AIFF
+# (80-bit extended-float rate), Sun AU, and the three deterministic
 # stand-ins — all written by the independent encoders.
 # ---------------------------------------------------------------------------
 
@@ -2041,127 +1563,137 @@ SNIFF_ROWS_PER_SF = 5600  # sf0.01 -> 56, sf0.1 -> 560
 _SNIFF_CONTAINERS = ("wav", "flac", "aiff", "au", "gbs_flac", "ogg", "mp3")
 
 
+def _sniff_clip(i: int) -> tuple:
+    rng = np.random.default_rng([SEED, 13_000_000 + i])
+    sr = (16000, 22050, 8000, 11025)[i % 4]
+    ns = int(sr * (0.25 + ((i * 29) % 15) / 10.0))
+    pcm16 = _flac_clip_pcm16(i, sr, ns)  # same content regimes
+    container = _SNIFF_CONTAINERS[i % 7]
+    pcm_f = np.clip(pcm16.astype(np.float64) / 32767.0, -1.0, 1.0)
+    if container == "wav":
+        buf = independent.encode_wav(pcm_f, sr)
+    elif container == "flac":
+        buf = independent.flac_bytes(pcm16, sr, blocksize=(1000, 4096)[i % 2])
+    elif container == "aiff":
+        if i % 5 == 1:  # stereo rows exercise the downmix path
+            right = np.round(pcm16.astype(np.float64) * 0.6).astype(np.int16)
+            buf = independent.aiff_bytes(np.stack([pcm16, right], axis=1), sr)
+        else:
+            buf = independent.aiff_bytes(pcm16, sr)
+    elif container == "au":
+        buf = independent.au_bytes(pcm16, sr)
+    else:  # deterministic stand-ins via the independent writer
+        buf = independent.encode_standin(pcm_f, sr, {"gbs_flac": "flac"}.get(container, container))
+    if i % 13 == 6:  # truncated: magic survives, payload does not
+        buf = buf[: max(12, int(len(buf) * 0.55))]
+    elif i % 23 == 10:  # garbage: unknown magic entirely
+        buf = bytes(rng.integers(0, 256, 64, dtype=np.uint8).tobytes())
+    return f"mx{i:06d}", buf
+
+
 def ensure_sniff_clips(sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT) -> str:
     """fixtures/<sf>/mixed_audio.parquet: (clip_id string, bytes binary) —
     deliberately NO codec column. ~7% rows truncated mid-payload and ~4%
     pure garbage (no known magic): both must surface as dropped rows."""
-    out_dir = fixtures_dir_for(sf_dir, root)
-    os.makedirs(out_dir, exist_ok=True)
-    path = os.path.join(out_dir, "mixed_audio.parquet")
-    if os.path.exists(path):
-        return path
+    schema = pa.schema({"clip_id": pa.string(), "bytes": pa.binary()})
     n_rows = max(56, int(SNIFF_ROWS_PER_SF * sf_from_dir(sf_dir)))
-    ids, bufs = [], []
-    for i in range(n_rows):
-        rng = np.random.default_rng([SEED, 13_000_000 + i])
-        sr = (16000, 22050, 8000, 11025)[i % 4]
-        ns = int(sr * (0.25 + ((i * 29) % 15) / 10.0))
-        pcm16 = _flac_clip_pcm16(i, sr, ns)  # same content regimes
-        container = _SNIFF_CONTAINERS[i % 7]
-        pcm_f = np.clip(pcm16.astype(np.float64) / 32767.0, -1.0, 1.0)
-        if container == "wav":
-            buf = independent.encode_wav(pcm_f, sr)
-        elif container == "flac":
-            buf = independent.flac_bytes(pcm16, sr, blocksize=(1000, 4096)[i % 2])
-        elif container == "aiff":
-            if i % 5 == 1:  # stereo rows exercise the downmix path
-                right = np.round(pcm16.astype(np.float64) * 0.6).astype(np.int16)
-                buf = independent.aiff_bytes(np.stack([pcm16, right], axis=1), sr)
-            else:
-                buf = independent.aiff_bytes(pcm16, sr)
-        elif container == "au":
-            buf = independent.au_bytes(pcm16, sr)
-        else:  # deterministic stand-ins via the independent writer
-            codec = {"gbs_flac": "flac"}.get(container, container)
-            buf = independent.encode_standin(pcm_f, sr, codec)
-        if i % 13 == 6:  # truncated: magic survives, payload does not
-            buf = buf[: max(12, int(len(buf) * 0.55))]
-        elif i % 23 == 10:  # garbage: unknown magic entirely
-            buf = bytes(rng.integers(0, 256, 64, dtype=np.uint8).tobytes())
-        ids.append(f"mx{i:06d}")
-        bufs.append(buf)
-    tbl = pa.Table.from_pydict(
-        {"clip_id": pa.array(ids), "bytes": pa.array(bufs, type=pa.binary())}
-    )
     # bounded row groups, same scan-split reasoning as ensure_flac_clips
-    _write_table_atomic(tbl, path, compression="zstd", row_group_size=16)
-    return path
+    return _cached(
+        sf_dir,
+        root,
+        "mixed_audio.parquet",
+        lambda: _table(schema, [_sniff_clip(i) for i in range(n_rows)]),
+        row_group_size=16,
+    )
+
+
+_STANDIN_MAGIC = {b"GBSFLAC1": "flac", b"GBSOGGS1": "ogg", b"GBSMP3S1": "mp3"}
+
+
+def _sniff_decode(b: bytes) -> tuple[str, int, np.ndarray] | None:
+    """(container, sr, int16 LE mono) by magic via the independent
+    decoders; None for an unknown magic. Raises ValueError on a corrupt
+    payload."""
+    if b[:4] == b"RIFF":
+        pcm, sr = independent.decode(b, "wav")
+        return "wav", sr, _requantize16(pcm)
+    if b[:4] == b"fLaC":
+        # floor-mean downmix across channels — the engine's sniffed FLAC contract
+        s16, sr = independent.decode_flac_independent(b)
+        return "flac", sr, _int16_mono(s16)
+    if b[:4] == b"FORM":
+        s16, sr = independent.decode_aiff_independent(b)
+        return "aiff", sr, np.maximum(s16.astype(np.int64), -32767).astype("<i2")
+    if b[:4] == b".snd":
+        s16, sr = independent.decode_au_independent(b)
+        return "au", sr, np.maximum(s16.astype(np.int64), -32767).astype("<i2")
+    if b[:8] in _STANDIN_MAGIC:
+        cont = _STANDIN_MAGIC[b[:8]]
+        pcm, sr = independent.decode_standin(b, cont)
+        return cont, sr, _requantize16(pcm)
+    return None
 
 
 def ensure_golden_sniff_decode(sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT) -> str:
     """Golden for audio_sniff_decode: per decodable row, (container,
     sr_hz, n_samples, md5 of the requantized int16 LE mono PCM) — every
-    decode via the INDEPENDENT mirrors (stdlib-wave wav, scalar FLAC /
-    AIFF / AU, stand-in spec decode); truncated + garbage rows excluded
-    like the engine's F1 drop."""
-    import hashlib
-
-    clips_path = ensure_sniff_clips(sf_dir, root)
-    out_dir = fixtures_dir_for(sf_dir, root)
-    path = os.path.join(out_dir, "golden_sniff_decode.parquet")
-    if os.path.exists(path):
-        return path
-    t = pq.read_table(clips_path)
-    ids, conts, srs, lens, md5s = [], [], [], [], []
-    for cid, raw in zip(t.column("clip_id").to_pylist(), t.column("bytes").to_pylist()):
-        b = bytes(raw)
-        try:
-            if b[:4] == b"RIFF":
-                cont = "wav"
-                pcm, sr = independent.decode(b, "wav")
-                q = np.round(np.clip(pcm, -1.0, 1.0) * 32767.0).astype("<i2")
-            elif b[:4] == b"fLaC":
-                cont = "flac"
-                s16, sr = independent.decode_flac_independent(b)
-                # floor-mean downmix across channels — the engine's sniffed
-                # FLAC contract (round-6 ADVICE fix: the old channel-0 take
-                # matched only because the sniff fixture is mono; identical
-                # output for mono, correct for any future stereo row)
-                s64 = s16.astype(np.int64)
-                mono = np.sum(s64, axis=1) // s64.shape[1]
-                q = np.maximum(mono, -32767).astype("<i2")
-            elif b[:4] == b"FORM":
-                cont = "aiff"
-                s16, sr = independent.decode_aiff_independent(b)
-                q = np.maximum(s16.astype(np.int64), -32767).astype("<i2")
-            elif b[:4] == b".snd":
-                cont = "au"
-                s16, sr = independent.decode_au_independent(b)
-                q = np.maximum(s16.astype(np.int64), -32767).astype("<i2")
-            elif b[:8] in (b"GBSFLAC1", b"GBSOGGS1", b"GBSMP3S1"):
-                cont = {b"GBSFLAC1": "flac", b"GBSOGGS1": "ogg", b"GBSMP3S1": "mp3"}[b[:8]]
-                codec = cont
-                pcm, sr = independent.decode_standin(b, codec)
-                q = np.round(np.clip(pcm, -1.0, 1.0) * 32767.0).astype("<i2")
-            else:
-                continue
-        except Exception:  # noqa: BLE001 - any decode failure => dropped row,
-            continue  # mirroring the engine kernel's broad F1 catch
-        ids.append(cid)
-        conts.append(cont)
-        srs.append(int(sr))
-        lens.append(int(q.shape[0]))
-        md5s.append(hashlib.md5(q.tobytes()).hexdigest())
-    tbl = pa.Table.from_pydict(
+    decode via the INDEPENDENT mirrors (from-scratch wav, scalar FLAC /
+    AIFF / AU, stand-in spec decode); truncated (decode ValueError) and
+    garbage (unknown magic) rows excluded like the engine's F1 drop."""
+    schema = pa.schema(
         {
-            "clip_id": pa.array(ids),
-            "container": pa.array(conts),
-            "sr_hz": pa.array(srs, type=pa.int32()),
-            "n_samples": pa.array(lens, type=pa.int64()),
-            "pcm16_md5": pa.array(md5s),
+            "clip_id": pa.string(),
+            "container": pa.string(),
+            "sr_hz": pa.int32(),
+            "n_samples": pa.int64(),
+            "pcm16_md5": pa.string(),
         }
     )
-    _write_table_atomic(tbl, path, compression="zstd")
-    return path
+
+    def build() -> pa.Table:
+        rows = []
+        for r in pq.read_table(ensure_sniff_clips(sf_dir, root)).to_pylist():
+            try:
+                decoded = _sniff_decode(bytes(r["bytes"]))
+            except ValueError:
+                continue
+            if decoded is not None:
+                cont, sr, q = decoded
+                rows.append((r["clip_id"], cont, int(sr), int(q.shape[0]), _md5(q.tobytes())))
+        return _table(schema, rows)
+
+    return _cached(sf_dir, root, "golden_sniff_decode.parquet", build)
 
 
 # ---------------------------------------------------------------------------
-# WebM video fixture (round 5): minimal-but-valid EBML/WebM files written
-# by the independent encoder; block payloads are deterministic fake frame
-# bytes (no pixel codec in this sandbox — the parsers never look inside).
+# WebM video fixture: minimal-but-valid EBML/WebM files written by the
+# independent encoder; block payloads are deterministic fake frame bytes
+# (no pixel codec in this sandbox — the parsers never look inside).
 # ---------------------------------------------------------------------------
 
 VIDEO_ROWS_PER_SF = 4000  # sf0.01 -> 40, sf0.1 -> 400
+
+
+def _video_clip(i: int) -> tuple:
+    rng = np.random.default_rng([SEED, 14_000_000 + i])
+    n_tracks = 1 + (i % 2)
+    tracks = [(t + 1, ("V_VP8", "V_VP9")[(i + t) % 2]) for t in range(n_tracks)]
+    scale = (1_000_000, 500_000)[(i // 2) % 2]
+    clusters = []
+    for c in range(2 + int(rng.integers(0, 5))):
+        blocks = []
+        for b in range(3 + int(rng.integers(0, 7))):
+            payload = rng.integers(0, 256, int(rng.integers(40, 900)), dtype=np.uint8).tobytes()
+            blocks.append(
+                (1 + (b % n_tracks), b * 33 + int(rng.integers(-4, 5)), b % 4 == 0, bytes(payload))
+            )
+        clusters.append((c * 1000, blocks))
+    buf = independent.webm_bytes(
+        tracks, clusters, timestamp_scale=scale, unknown_segment_size=(i % 5 == 3)
+    )
+    if i % 12 == 7:  # truncate mid-cluster; EBML magic survives
+        buf = buf[: max(30, int(len(buf) * 0.5))]
+    return f"vid{i:06d}", buf
 
 
 def ensure_video_clips(sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT) -> str:
@@ -2169,82 +1701,51 @@ def ensure_video_clips(sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT) -> str:
     WebM files cycling 1-2 tracks (VP8/VP9), timestamp scale 1 ms / 0.5
     ms, known- and unknown-size Segments, 2-6 clusters x 3-9 blocks with
     a keyframe-every-4 cadence; ~8% truncated mid-cluster."""
-    out_dir = fixtures_dir_for(sf_dir, root)
-    os.makedirs(out_dir, exist_ok=True)
-    path = os.path.join(out_dir, "videos.parquet")
-    if os.path.exists(path):
-        return path
+    schema = pa.schema({"video_id": pa.string(), "bytes": pa.binary()})
     n_rows = max(40, int(VIDEO_ROWS_PER_SF * sf_from_dir(sf_dir)))
-    ids, bufs = [], []
-    for i in range(n_rows):
-        rng = np.random.default_rng([SEED, 14_000_000 + i])
-        n_tracks = 1 + (i % 2)
-        tracks = [(t + 1, ("V_VP8", "V_VP9")[(i + t) % 2]) for t in range(n_tracks)]
-        scale = (1_000_000, 500_000)[(i // 2) % 2]
-        clusters = []
-        n_clusters = 2 + int(rng.integers(0, 5))
-        for c in range(n_clusters):
-            blocks = []
-            for b in range(3 + int(rng.integers(0, 7))):
-                payload = rng.integers(
-                    0, 256, int(rng.integers(40, 900)), dtype=np.uint8
-                ).tobytes()
-                blocks.append(
-                    (
-                        1 + (b % n_tracks),
-                        b * 33 + int(rng.integers(-4, 5)),
-                        b % 4 == 0,
-                        bytes(payload),
-                    )
-                )
-            clusters.append((c * 1000, blocks))
-        buf = independent.webm_bytes(
-            tracks, clusters, timestamp_scale=scale,
-            unknown_segment_size=(i % 5 == 3),
-        )
-        if i % 12 == 7:  # truncate mid-cluster; EBML magic survives
-            buf = buf[: max(30, int(len(buf) * 0.5))]
-        ids.append(f"vid{i:06d}")
-        bufs.append(buf)
-    tbl = pa.Table.from_pydict(
-        {"video_id": pa.array(ids), "bytes": pa.array(bufs, type=pa.binary())}
+    return _cached(
+        sf_dir,
+        root,
+        "videos.parquet",
+        lambda: _table(schema, [_video_clip(i) for i in range(n_rows)]),
+        row_group_size=16,
     )
-    _write_table_atomic(tbl, path, compression="zstd", row_group_size=16)
-    return path
 
 
 def ensure_golden_video_blocks(sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT) -> str:
     """Golden for the video_block_index driver query: per parseable video,
     every block's (track, codec, ts_ms, keyframe, size) via the
     INDEPENDENT recursive-descent parser; truncated rows excluded (F1)."""
-    clips_path = ensure_video_clips(sf_dir, root)
-    out_dir = fixtures_dir_for(sf_dir, root)
-    path = os.path.join(out_dir, "golden_video_blocks.parquet")
-    if os.path.exists(path):
-        return path
-    t = pq.read_table(clips_path)
-    vid, trk, cod, tss, kfs, szs = [], [], [], [], [], []
-    for v, raw in zip(t.column("video_id").to_pylist(), t.column("bytes").to_pylist()):
-        try:
-            tracks, blocks = independent.parse_webm_blocks_independent(bytes(raw))
-        except ValueError:
-            continue
-        for b in blocks:
-            vid.append(v)
-            trk.append(b["track"])
-            cod.append(tracks[b["track"]])
-            tss.append(b["ts_ms"])
-            kfs.append(b["keyframe"])
-            szs.append(b["size"])
-    tbl = pa.Table.from_pydict(
+    schema = pa.schema(
         {
-            "video_id": pa.array(vid),
-            "track_number": pa.array(trk, type=pa.int32()),
-            "codec_id": pa.array(cod),
-            "ts_ms": pa.array(tss, type=pa.int64()),
-            "keyframe": pa.array(kfs, type=pa.bool_()),
-            "block_bytes": pa.array(szs, type=pa.int64()),
+            "video_id": pa.string(),
+            "track_number": pa.int32(),
+            "codec_id": pa.string(),
+            "ts_ms": pa.int64(),
+            "keyframe": pa.bool_(),
+            "block_bytes": pa.int64(),
         }
     )
-    _write_table_atomic(tbl, path, compression="zstd")
-    return path
+
+    def build() -> pa.Table:
+        rows = []
+        for r in pq.read_table(ensure_video_clips(sf_dir, root)).to_pylist():
+            try:
+                tracks, blocks = independent.parse_webm_blocks_independent(bytes(r["bytes"]))
+            except ValueError:
+                continue
+            for b in blocks:
+                track = b["track"]
+                rows.append(
+                    (r["video_id"], track, tracks[track], b["ts_ms"], b["keyframe"], b["size"])
+                )
+        return _table(schema, rows)
+
+    return _cached(sf_dir, root, "golden_video_blocks.parquet", build)
+
+
+if __name__ == "__main__":
+    import sys
+
+    for sf in sys.argv[1:] or ["sf0.001", "sf0.01", "sf0.1"]:
+        print(sf, "->", ensure_fixtures(sf))

@@ -128,7 +128,11 @@ def decode_standin(buf: bytes, codec: str) -> tuple[np.ndarray, int]:
         raise ValueError(f"not a {codec} stand-in stream")
     sr = int.from_bytes(b[len(magic) : len(magic) + 4], "little")
     n = int.from_bytes(b[len(magic) + 4 : len(magic) + 12], "little")
-    samples = np.frombuffer(zlib.decompress(b[len(magic) + 12 :]), dtype="<i2")
+    try:
+        raw = zlib.decompress(b[len(magic) + 12 :])
+    except zlib.error as exc:  # one failure type, as the engine's decoders
+        raise ValueError(f"corrupt {codec} stand-in stream") from exc
+    samples = np.frombuffer(raw, dtype="<i2")
     if samples.shape[0] != n:
         raise ValueError("sample count mismatch")
     return _dequantize16(samples), sr

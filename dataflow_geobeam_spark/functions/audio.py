@@ -509,7 +509,7 @@ def mfcc_mean_np(pcm, sr_hz: int):
 def frame_rms_np(pcm, sr_hz: int, frame_ms: int = 100, hop_ms: int = 50):
     """Per-clip frame-RMS vector (float64, unrounded) — the numpy twin of
     ``explode_frames``' Catalyst fold, arithmetic-identical to the golden
-    spec in ``fixtures/generate._frame_rms_rows``: truncating int
+    spec in ``fixtures/generate._frame_rms``: truncating int
     frame/hop, float64 squares, SEQUENTIAL left-to-right accumulation per
     frame (``np.cumsum`` along the frame axis is sequential by
     construction, matching ``F.aggregate``'s foldLeft double-for-double),

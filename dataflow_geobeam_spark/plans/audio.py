@@ -269,7 +269,7 @@ def audio_frame_rms(spark: SparkSession, sf_dir: str) -> DataFrame:
     The DoBlockToPixelExterior analog (1 -> N rows, ``geobeam/fn.py:224-247``).
     Oracle: generation-time golden_frames.parquet (numpy decode + sequential
     double accumulation mirroring the Catalyst aggregate exactly —
-    fixtures/generate.py:_frame_rms_rows); tests/test_audio_frames.py
+    fixtures/generate.py:_frame_rms); tests/test_audio_frames.py
     additionally checks frame counts + RMS inline.
     """
     from dataflow_geobeam_spark.functions.audio import explode_frames
@@ -406,11 +406,9 @@ def audio_extract_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode, the cumsum frame-RMS spec, a scalar island scan, and the
     independent RIFF encoder (fixtures/generate.ensure_golden_segments).
     """
-    from dataflow_geobeam_spark.fixtures.generate import ensure_golden_segments
     from dataflow_geobeam_spark.functions.audio import with_speech_segments
 
     fx = ensure_fixtures(sf_dir)
-    ensure_golden_segments(sf_dir)
     df = read_clips(spark, fx, columns=("clip_id", "bytes", "codec", "sr_hz"))
     # round-6: digest=True — the kernel emits (n_bytes, seg_md5) directly,
     # Catalyst-identical to length()/md5() on the chunk (guide §2.3)
@@ -426,7 +424,7 @@ def audio_spectral(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Oracle: generation-time golden_spectral.parquet, produced by the SAME
     numpy kernel on an independent decode of the same payloads
-    (fixtures/generate.py:_spectral_chunk).
+    (fixtures/generate.py:_spectral_kernel).
     """
     from dataflow_geobeam_spark.functions.audio import with_spectral_metrics
 

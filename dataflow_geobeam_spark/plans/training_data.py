@@ -209,9 +209,6 @@ def emb_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_golden_lsh_topk, sequential-sum cosines) is a real oracle;
     recall vs brute force is additionally measured in tests.
     """
-    from dataflow_geobeam_spark.fixtures.generate import ensure_golden_lsh_topk
-
-    ensure_golden_lsh_topk(sf_dir)
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 20)
     return similarity.lsh_topk(emb, queries, k=5)
@@ -258,9 +255,6 @@ def emb_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     make IVF exactly as golden-checkable as LSH. The oracle is an
     independent numpy implementation (fixtures/generate.py:
     ensure_golden_ivf_topk, centroids from fixtures.independent)."""
-    from dataflow_geobeam_spark.fixtures.generate import ensure_golden_ivf_topk
-
-    ensure_golden_ivf_topk(sf_dir)
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 20)
     return similarity.ivf_topk(emb, queries, k=5, dim=64, n_cells=64, n_probe=8)
@@ -274,9 +268,6 @@ def emb_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     don't fit the scoring tier), top-50 refined with exact cosine.
     Deterministic seeded centroids + codebooks; oracle is the independent
     numpy mirror (fixtures/generate.ensure_golden_ivfpq_topk)."""
-    from dataflow_geobeam_spark.fixtures.generate import ensure_golden_ivfpq_topk
-
-    ensure_golden_ivfpq_topk(sf_dir)
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 20)
     return similarity.ivfpq_topk(emb, queries, k=5, dim=64, n_cells=64, n_probe=8)
@@ -287,15 +278,9 @@ def emb_topk_lsh_d256(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimensionality in the gate, not just the dim-64 testdata). Input is the
     deterministic fixtures embeddings_d256 table; oracle is the same numpy
     golden as emb_topk_lsh, parameterized by table."""
-    from dataflow_geobeam_spark.fixtures.generate import (
-        ensure_embeddings_hd,
-        ensure_golden_lsh_topk,
-    )
+    from dataflow_geobeam_spark.fixtures.generate import ensure_embeddings_hd
 
     emb_path = ensure_embeddings_hd(sf_dir)
-    ensure_golden_lsh_topk(
-        sf_dir, emb_path=emb_path, out_name="golden_lsh_topk_d256.parquet"
-    )
     emb = spark.read.parquet(emb_path)
     queries = emb.where(F.col("vec_id") < 20)
     return similarity.lsh_topk(emb, queries, k=5, dim=256)

@@ -185,15 +185,15 @@ class ExactlyOnceParquetSink:
         )
         n_rows = 0
         if isinstance(io, _LocalManifestIO):
-            try:
-                import pyarrow.parquet as pq
+            import pyarrow.parquet as pq
 
-                n_rows = sum(
-                    pq.ParquetFile(os.path.join(epoch_dir, f)).metadata.num_rows
-                    for f in files
-                )
-            except Exception:  # noqa: BLE001 - row count is informational
-                pass
+            # readers drain until the summed n_rows reaches their target, so
+            # an unreadable epoch file fails the epoch before its manifest
+            # renames in, and Spark replays it
+            n_rows = sum(
+                pq.ParquetFile(os.path.join(epoch_dir, f)).metadata.num_rows
+                for f in files
+            )
         manifest = {
             "epoch_id": epoch_id,
             "dir": f"{DATA_DIR}/epoch={epoch_id}-{run_id}",

@@ -71,12 +71,12 @@ def test_decoders_bit_identical_and_same_failure_modes(codec):
         assert s1 == s2
         assert np.array_equal(d1, d2)
         assert d2.dtype == np.float32
-        # truncation fails in both; the engine raises ValueError for every
-        # codec (the one error type clip_map turns into a null/dropped row)
+        # truncation fails in both with ValueError for every codec (the one
+        # error type clip_map and the golden builder turn into a dropped row)
         trunc = buf[: max(4, len(buf) // 3)]
         with pytest.raises(ValueError):
             codecs.decode(trunc, codec)
-        with pytest.raises(Exception):  # noqa: B017
+        with pytest.raises(ValueError):
             ind.decode(trunc, codec)
     with pytest.raises(ValueError):
         ind.decode(b"whatever", "unknown")

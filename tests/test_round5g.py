@@ -1,4 +1,5 @@
-"""Round-5g: from-spec baseline JPEG codec + crash-safe fixture writes.
+"""Round-5g: from-spec baseline JPEG codec (the crash-safe fixture-write
+test moved to tests/test_fixtures.py).
 
 JPEG closes the last code-closable still-image gap (round-4 VERDICT
 "What's missing" #3; PPM/BMP landed round 4, PNG earlier in round 5).
@@ -141,29 +142,6 @@ def test_jpeg_rows_flow_through_thumbnail_pipeline(spark, sf_dir):
         got = eng.decode_ppm(bytes(row.thumbnail))
         assert np.array_equal(got, expect)
     assert n_valid >= 3
-
-
-def test_fixture_write_atomic_no_partial_on_failure(tmp_path):
-    """_write_table_atomic must never leave bytes at the final path when
-    the write dies (the ensure_* goldens are existence-gated, so a
-    truncated parquet would be trusted forever) and must leave no temp
-    litter on success."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from dataflow_geobeam_spark.fixtures.generate import _write_table_atomic
-
-    tbl = pa.table({"a": list(range(100))})
-    dest = str(tmp_path / "g.parquet")
-    _write_table_atomic(tbl, dest, compression="zstd")
-    assert pq.read_table(dest).num_rows == 100
-    assert [f for f in tmp_path.iterdir()] == [tmp_path / "g.parquet"]
-    # failure inside the parquet writer (bad option) leaves NO final file
-    dest2 = str(tmp_path / "h.parquet")
-    with pytest.raises(Exception):
-        _write_table_atomic(tbl, dest2, compression="no-such-codec")
-    assert not (tmp_path / "h.parquet").exists()
-    assert [f.name for f in tmp_path.iterdir()] == ["g.parquet"]
 
 
 def test_gif_roundtrip_engine_vs_independent():

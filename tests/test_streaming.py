@@ -148,3 +148,25 @@ def test_sink_epoch_idempotence(spark, tmp_path):
     sink.write_batch(df, 0)  # replay
     assert sink.committed_files() == files_before
     assert sink.read(spark).count() == 10
+
+
+def test_unreadable_epoch_file_fails_the_epoch(spark, tmp_path, monkeypatch):
+    """The manifest's n_rows is what drain loops count against, so a data
+    file the sink cannot read back must fail the epoch (Spark replays it),
+    never commit a manifest that lists it with n_rows 0."""
+    import pyarrow.parquet as pq
+
+    sink = ExactlyOnceParquetSink(str(tmp_path / "t"))
+    df = spark.range(10).withColumn("v", F.col("id") * 2)
+
+    def unreadable(*args, **kwargs):
+        raise OSError("unreadable epoch file")
+
+    monkeypatch.setattr(pq, "ParquetFile", unreadable)
+    with pytest.raises(OSError, match="unreadable epoch file"):
+        sink.write_batch(df, 0)
+    assert not sink.is_committed(0)
+    monkeypatch.undo()
+    sink.write_batch(df, 0)  # the replay commits
+    assert sink.is_committed(0)
+    assert sum(m["n_rows"] for m in sink.committed_manifests()) == 10
