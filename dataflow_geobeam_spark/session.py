@@ -94,7 +94,9 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         # preload pandas/pyarrow/numpy in the worker daemon: forks inherit
         # the imports, killing the 20-60s import storm that otherwise hits
-        # every fresh query's first tasks (measured 14x streaming speedup)
+        # every fresh query's first tasks (measured 14x streaming speedup);
+        # it also stops every task re-reading pyspark.zip's directory
+        # (tests/test_session.py pins that this conf is set)
         .config("spark.python.daemon.module", "dataflow_geobeam_spark.daemon_preload")
     )
     for k, v in (extra_conf or {}).items():

@@ -209,6 +209,9 @@ def stateful_join_apply(
     Union-tag pattern: both sides are normalized to
     (clip_id, side, ts, transcript) and grouped by clip_id; the state
     machine emits matched rows eagerly and unmatched clips at timeout.
+    A row with a null ``clip_id`` or ``ts`` on either side is dropped before
+    the stateful stage, as ``interval_join_streams``' inner join drops it:
+    it never matches and is never emitted.
     """
     c = clips.select(
         F.col("clip_id"),
@@ -222,7 +225,7 @@ def stateful_join_apply(
         F.col("t_ts").alias("ts"),
         F.col("t_transcript").alias("transcript"),
     )
-    unioned = c.unionByName(t).withWatermark("ts", watermark)
+    unioned = c.unionByName(t).dropna(subset=["clip_id", "ts"]).withWatermark("ts", watermark)
     return unioned.groupBy("clip_id").applyInPandasWithState(
         _stateful_join_fn,
         outputStructType=JOIN_OUT_SCHEMA,

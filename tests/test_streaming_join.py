@@ -194,3 +194,70 @@ def test_stateful_join_resumes_from_checkpoint(spark, fixture_dir, tmp_path):
     run(out_dir, ck, stop_after_batches=1)
     resumed = run(out_dir, ck)
     assert resumed == baseline
+
+
+def test_stateful_join_drops_rows_with_null_key_or_time(spark, tmp_path):
+    """Dirty rows on either side never match and are never emitted: a clip
+    with a null ``ts`` (NaT would come out as 1677-09-21) or a null
+    ``clip_id`` (would come out keyed null, matched to a null-keyed
+    transcript), and transcripts with a null ``t_clip_id`` or ``t_ts``."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t0 = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    sec = dt.timedelta(seconds=1)
+
+    def write(dirname, names, batches):
+        os.makedirs(tmp_path / dirname)
+        for i, rows in enumerate(batches):  # one file per micro-batch, in order
+            path = str(tmp_path / dirname / f"part-{i}.parquet")
+            cols = list(zip(*rows))
+            pq.write_table(
+                pa.table(
+                    [pa.array(cols[0], pa.string()), pa.array(cols[1], pa.timestamp("us", "UTC")),
+                     pa.array(cols[2], pa.string())],
+                    names=names,
+                ),
+                path,
+            )
+            os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
+
+    write(
+        "c",
+        ["clip_id", "ts", "transcript"],
+        [
+            [("a", t0, "xa"), ("b", None, "xb"), (None, t0, "xn"), ("c", t0, "xc")],
+            [("z", t0 + 3600 * sec, "xz")],  # moves the watermark past a/b/c's window
+            [("z2", t0 + 7200 * sec, "xz2")],
+        ],
+    )
+    write(
+        "t",
+        ["t_clip_id", "t_ts", "t_transcript"],
+        [[("a", t0 + 10 * sec, "ta"), (None, t0 + 20 * sec, "tn"), ("c", None, "tc"), ("b", t0, "tb")]],
+    )
+    cs = spark.readStream.schema("clip_id string, ts timestamp, transcript string").option(
+        "maxFilesPerTrigger", "1"
+    ).parquet(str(tmp_path / "c"))
+    ts = spark.readStream.schema(TRANSCRIPTS_SCHEMA).option("maxFilesPerTrigger", "1").parquet(
+        str(tmp_path / "t")
+    )
+    out_dir = str(tmp_path / "out")
+    q = (
+        sjoin.stateful_join_apply(cs, ts).writeStream.format("parquet").outputMode("append")
+        .option("path", out_dir)
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(300), "query did not drain in time"
+    assert q.exception() is None, q.exception()
+    rows = spark.read.schema(sjoin.JOIN_OUT_SCHEMA).parquet(out_dir).collect()
+    got = sorted(
+        ((r.clip_id, r.ts, r.transcript, r.t_transcript, r.matched) for r in rows if r.clip_id not in ("z", "z2")),
+        key=str,
+    )
+    ts0 = t0.replace(tzinfo=None)
+    assert got == [("a", ts0, "xa", "ta", True), ("c", ts0, "xc", None, False)]
